@@ -4,7 +4,7 @@ double (``/root/reference/ncd/athena_mock.py``).
 
 Responsibilities (SURVEY.md §2.1 A10-A15, A19, A26):
 
-- ``create_db`` — ``CREATE DATABASE IF NOT EXISTS`` (A14).
+- ``create_db`` — ``CREATE DATABASE IF NOT EXISTS``, once per catalog (A14).
 - ``write_table`` — partitioned writes under the same Hive layout the
   reference uploads to S3: ``{warehouse}/{db}/{table}/filename_district={D}/``
   (``/root/reference/ncd/athena.py:92-113``).  Default format is Parquet
@@ -52,6 +52,7 @@ class SparkCatalog:
         self.db_name = db_name
         self.fidelity_json = fidelity_json
         self.executed_sql: list[str] = []
+        self._db_created = False
 
     # -- locations ---------------------------------------------------------
 
@@ -72,7 +73,11 @@ class SparkCatalog:
         return self.spark.sql(sql)
 
     def create_db(self) -> None:
-        self.execute_query(f"CREATE DATABASE IF NOT EXISTS {self.db_name}")
+        """``CREATE DATABASE IF NOT EXISTS``, issued once per catalog: every
+        write registers its table, and one statement covers them all."""
+        if not self._db_created:
+            self.execute_query(f"CREATE DATABASE IF NOT EXISTS {self.db_name}")
+            self._db_created = True
 
     def generate_ddl(
         self,

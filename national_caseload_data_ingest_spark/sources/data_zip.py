@@ -218,54 +218,3 @@ class NcdZipLoader:
             loaded.append(name)
         return loaded
 
-
-def read_zip_member_lines(
-    spark: SparkSession,
-    zip_paths: list[str],
-    member_pattern: str = r".*\.txt$",
-    encoding: str = "latin-1",
-) -> DataFrame:
-    """Cluster-mode zip source: read matching members of many zips WITHOUT
-    driver-side staging — ``(zip_path, member, line)`` rows.
-
-    Zip members are not splittable, so the unit of parallelism is the
-    archive: ``binaryFiles`` ships each zip's bytes to one executor, which
-    unzips, CR-strips (offset-preserving space, like :func:`stage_members`)
-    and decodes there.  A monthly dump's ~24 zips fan out to 24 tasks; a
-    year of dumps saturates a mid-size cluster with zero driver IO.  Use
-    this path when archives live on object storage and the driver-staging
-    path (:func:`stage_members`) would bottleneck; downstream fixed-width
-    projection is identical (`filename_district` comes from ``member``
-    instead of the staged file name).
-
-    Memory: one archive's *compressed* bytes must fit in one executor task
-    (NCD zips are ~100 MB); members decompress streamingly per line.
-    """
-    import re as _re  # noqa: PLC0415
-
-    pat = _re.compile(member_pattern)
-
-    def explode_zip(kv):  # pragma: no cover - runs on executors
-        import io  # noqa: PLC0415
-        import zipfile as _zf  # noqa: PLC0415
-
-        path, pds = kv
-        with _zf.ZipFile(io.BytesIO(bytes(pds))) as zf:
-            for member in sorted(zf.namelist()):
-                if member.endswith("/") or not pat.match(member):
-                    continue
-                member_enc = (
-                    "utf-8" if member == g.GLOBAL_MEMBER_NAME else encoding
-                )
-                with zf.open(member) as fh:
-                    for raw in fh:
-                        yield (
-                            path,
-                            member,
-                            raw.rstrip(b"\n")
-                            .replace(b"\r", b" ")
-                            .decode(member_enc),
-                        )
-
-    rdd = spark.sparkContext.binaryFiles(",".join(zip_paths)).flatMap(explode_zip)
-    return spark.createDataFrame(rdd, schema="zip_path string, member string, value string")

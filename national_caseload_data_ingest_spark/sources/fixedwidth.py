@@ -20,7 +20,17 @@ Semantics reproduced (with reference citations):
   an integer-regex guard restores parity (SURVEY.md §7 hard part 6).
 - Oracle dates ``01-JAN-2017`` parse via ``dd-MMM-yyyy`` under the LEGACY
   parser (``/root/reference/ncd/normal_table.py:105-107``); unparseable
-  dates → NULL.
+  dates → NULL.  That parser is a non-lenient ``SimpleDateFormat`` (about
+  15 µs a cell), so the exact shape ``DD-MON-YYYY`` with an upper-case
+  month and a year from 1600 on takes a fast path instead:
+  ``make_date(year, month, day)``, which with ANSI off is NULL for an
+  impossible day (``31-FEB``, ``00-JAN``) just as the legacy parser is.
+  The year floor keeps the fast path clear of the Julian calendar, whose
+  leap years and 1582 cutover gap the legacy parser applies and
+  ``make_date`` does not.  Every other cell (lower-case months, 1-digit
+  days, long month names, trailing text, years below 1600) falls back to
+  the legacy ``to_date``; ``tests/test_date_fastpath.py`` pins the two
+  paths to each other.
 - VARCHAR keeps empty strings as ``''`` (Python ``str()`` never raises), so
   only redaction produces NULL strings.
 """
@@ -34,19 +44,39 @@ from national_caseload_data_ingest_spark.sources.schemas import FieldSpec, Table
 
 _INT_RE = r"^[+-]?[0-9]+$"
 REDACTION_MARKER = "*"
+ORACLE_DATE_FORMAT = "dd-MMM-yyyy"
+_MONTHS = ("JAN", "FEB", "MAR", "APR", "MAY", "JUN",
+           "JUL", "AUG", "SEP", "OCT", "NOV", "DEC")
+# DD-MON-YYYY, upper-case month, year >= 1600: the cells ``make_date``
+# reads exactly as the legacy parser does.
+_FAST_DATE_RE = rf"^[0-9]{{2}}-({'|'.join(_MONTHS)})-(1[6-9]|[2-9][0-9])[0-9]{{2}}$"
 
 
-def _cast_cell(raw: Column, f: FieldSpec) -> Column:
-    """Typed value for one field, null-on-failure, reference semantics."""
-    trimmed = F.trim(raw)
+def _oracle_date(cell: Column) -> Column:
+    """``to_date(cell, 'dd-MMM-yyyy')`` under the LEGACY parser, with the
+    common exact shape computed by ``make_date`` instead."""
+    month = F.array_position(F.array(*map(F.lit, _MONTHS)), F.substring(cell, 4, 3))
+    fast = F.make_date(
+        F.substring(cell, 8, 4).cast("int"),
+        month.cast("int"),
+        F.substring(cell, 1, 2).cast("int"),
+    )
+    return F.when(cell.rlike(_FAST_DATE_RE), fast).otherwise(
+        F.to_date(cell, ORACLE_DATE_FORMAT)
+    )
+
+
+def _cast_cell(cell: Column, f: FieldSpec) -> Column:
+    """Typed value for one already-trimmed field, null-on-failure,
+    reference semantics."""
     if f.src_type in ("VARCHAR", "VARCHAR2"):
-        return trimmed
+        return cell
     if f.src_type == "NUMBER":
-        return F.when(trimmed.rlike(_INT_RE), trimmed.cast("bigint"))
+        return F.when(cell.rlike(_INT_RE), cell.cast("bigint"))
     if f.src_type == "DATE":
-        return F.to_date(trimmed, "dd-MMM-yyyy")
+        return _oracle_date(cell)
     if f.src_type == "FLOAT":
-        return trimmed.cast("double")
+        return cell.cast("double")
     raise NotImplementedError(f"Unsupported source field type: {f.src_type}")
 
 

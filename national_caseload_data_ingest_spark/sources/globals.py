@@ -12,6 +12,11 @@ reference makes); the parsed rows become small DataFrames that downstream
 queries **broadcast-join** against fact tables — the designed use of lookup
 tables per the reference README (decode joins, ``README.md:46-50``).
 
+Each codebook DataFrame is built from a ``pyarrow.Table`` (string data
+columns, then boolean shadows), which Spark plans as a JVM
+``LocalRelation``: no pickled Python RDD, so no Python worker starts.  It
+is coalesced to one partition, so a codebook write is one task and one file.
+
 Semantics reproduced:
 
 - Column extents are exactly the hyphen-run spans of the divider row
@@ -33,8 +38,8 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from national_caseload_data_ingest_spark.sources.schemas import (
     camel_to_upper_snake,
@@ -99,11 +104,12 @@ def _to_dataframe(
     spark: SparkSession, columns: list[str], rows: list[list[object]]
 ) -> DataFrame:
     n_data = len(columns) // 2
-    schema = T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in columns[:n_data]]
-        + [T.StructField(c, T.BooleanType(), True) for c in columns[n_data:]]
-    )
-    return spark.createDataFrame(rows, schema)
+    arrays = [
+        pa.array([row[i] for row in rows], pa.string() if i < n_data else pa.bool_())
+        for i in range(len(columns))
+    ]
+    table = pa.Table.from_arrays(arrays, names=columns)
+    return spark.createDataFrame(table).coalesce(1)
 
 
 def read_global_tables(

@@ -1,5 +1,10 @@
 """Global/lookup extraction semantics (SURVEY.md §2.1 A16-A21)."""
 
+import os
+
+import pytest
+
+from national_caseload_data_ingest_spark.catalog import local_catalog
 from national_caseload_data_ingest_spark.sources.globals import (
     parse_ruler_fragment,
     read_global_tables,
@@ -72,8 +77,6 @@ def test_read_lookup_table_merges_consecutive_blank_lines(spark):
 
 
 def test_read_lookup_table_requires_two_blank_regions(spark):
-    import pytest
-
     with pytest.raises(ValueError, match="two blank regions"):
         read_lookup_table(spark, "no blanks here GS_WHATEVER\n")
 
@@ -93,3 +96,88 @@ def test_read_lookup_table(spark):
     assert rows["Attorney General"]["code"] == "AG"
     assert rows["Redacted position"]["code"] == ""
     assert rows["Redacted position"]["redacted_code"] is True
+
+
+def test_codebook_is_one_partition_local_relation(spark):
+    """Codebooks are Arrow-built JVM local relations: no pickled Python RDD
+    (so no Python worker), and one partition (so one task per write)."""
+    df = read_global_tables(spark, GLOBAL_LIONS_TEXT)["GS_DISTRICT"]
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan, plan
+    assert "LogicalRDD" not in plan, plan
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_codebook_write_leaves_one_data_file(spark, tmp_path):
+    cat = local_catalog(spark, str(tmp_path), db_name="codebook_files_db")
+    df = read_global_tables(spark, GLOBAL_LIONS_TEXT)["GS_DISTRICT"]
+    try:
+        cat.write_table("gs_district", df)
+        files = os.listdir(cat.table_location("gs_district"))
+        data_files = [f for f in files if not f.startswith((".", "_"))]
+        assert len(data_files) == 1, files
+        assert cat.table("gs_district").count() == 3
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS codebook_files_db CASCADE")
+
+
+def test_codebook_without_data_rows_keeps_schema(spark, tmp_path):
+    dfs = read_global_tables(spark, "GS_EMPTY\n\nCode  ActiveFlag\n----  ----------\n")
+    df = dfs["GS_EMPTY"]
+    want = [
+        ("code", "string"),
+        ("active_flag", "string"),
+        ("redacted_code", "boolean"),
+        ("redacted_active_flag", "boolean"),
+    ]
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == want
+    assert df.count() == 0
+    cat = local_catalog(spark, str(tmp_path), db_name="codebook_empty_db")
+    try:
+        cat.write_table("gs_empty", df)
+        back = cat.table("gs_empty")
+        assert [(f.name, f.dataType.simpleString()) for f in back.schema.fields] == want
+        assert back.count() == 0
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS codebook_empty_db CASCADE")
+
+
+@pytest.mark.parametrize("fidelity_json", [False, True])
+def test_codebook_roundtrip_keeps_redaction_and_names(spark, tmp_path, fidelity_json):
+    """Through a real write: ``''`` + ``redacted_* = true`` for a ``*`` cell,
+    lowercase UPPER_SNAKE column names, in Parquet and JSON-lines mode."""
+    db = f"codebook_rt_{int(fidelity_json)}_db"
+    cat = local_catalog(spark, str(tmp_path), db_name=db, fidelity_json=fidelity_json)
+    try:
+        name, df = read_lookup_table(spark, LOOKUP_TEXT)
+        cat.write_table(name.lower(), df)
+        back = cat.table("gs_position")
+        assert back.columns == [
+            "code",
+            "description",
+            "active_flag",
+            "redacted_code",
+            "redacted_description",
+            "redacted_active_flag",
+        ]
+        rows = {r["description"]: r.asDict() for r in back.collect()}
+        assert rows == {
+            "Attorney General": {
+                "code": "AG",
+                "description": "Attorney General",
+                "active_flag": "Y",
+                "redacted_code": False,
+                "redacted_description": False,
+                "redacted_active_flag": False,
+            },
+            "Redacted position": {
+                "code": "",
+                "description": "Redacted position",
+                "active_flag": "N",
+                "redacted_code": True,
+                "redacted_description": False,
+                "redacted_active_flag": False,
+            },
+        }
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

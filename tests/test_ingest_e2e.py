@@ -277,28 +277,6 @@ def test_missing_readme_loads_no_normal_tables(spark, tmp_path):
         pytest.fail(f"loader crashed on README-less zip: {e}")
 
 
-def test_distributed_zip_read_matches_staged(spark, fixture_zip):
-    """Cluster-mode zip source (binaryFiles → executor unzip) yields the
-    same member lines as the driver-staged path."""
-    from national_caseload_data_ingest_spark.sources.data_zip import (
-        read_zip_member_lines,
-        stage_members,
-    )
-
-    df = read_zip_member_lines(spark, [fixture_zip], member_pattern=r"gs_case.*\.txt$")
-    rows = df.collect()
-    assert {r["member"] for r in rows} >= {"gs_case.txt"}
-    staged = stage_members(fixture_zip)
-    try:
-        for member in {r["member"] for r in rows}:
-            with open(staged.members[member], encoding="utf-8") as fh:
-                want = [ln.rstrip("\n") for ln in fh.read().splitlines()]
-            got = [r["value"] for r in rows if r["member"] == member]
-            assert got == want, member
-    finally:
-        staged.cleanup()
-
-
 def test_partitioned_reload_preserves_other_districts(spark, tmp_path):
     """Dynamic partition overwrite: re-ingesting one district replaces only
     that district's partition (cumulative-dump semantics)."""

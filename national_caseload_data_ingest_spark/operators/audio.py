@@ -39,10 +39,9 @@ from national_caseload_data_ingest_spark.operators.multimodal import (
     AUDIO_N_SAMPLES,
     AUDIO_RATE,
     _synthesize_wav_payloads,
-    fan_out,
     wav_decode,
 )
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 # Autocorrelation lags: report r(1..4)/r(0); pitch = argmax r(l) over

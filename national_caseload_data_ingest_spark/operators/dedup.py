@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 # MinHash parameters: 32 permutations in 8 bands of 4 → catches Jaccard
@@ -124,13 +124,9 @@ def word_ngram_postings(d: DataFrame, n: int) -> DataFrame:
     file-split width (r14, guide §2.6/§6 small-file pathology): a single
     small parquet file scans as ONE split, which serialized every
     downstream dedup/curation pipeline's tokenize pass onto one core —
-    the same multimodal.fan_out policy every other heavy kernel entry
+    the same registry.fan_out policy every other heavy kernel entry
     point applies.  At 100 TB inputs arrive in thousands of splits and
     the skinny-row exchange is a no-op-cost straggler guard."""
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
-
     return fan_out(d.select("doc_id", "lang", "text")).mapInPandas(
         _ngram_posting_batches(n), schema=_POSTINGS_SCHEMA
     )
@@ -749,7 +745,8 @@ def jaccard_pairs_in_blocks(
 
     BLAS band tier (r14, per-block r15): when the MAX single-block
     matmul work 2·n_b²·g_b exceeds ``JACCARD_BLAS_MIN_FLOPS`` (the
-    measured single-core crossover) and the unpacked block matrices fit
+    measured single-core crossover), the distinct (block, gram) rows fit
+    ``HYBRID_STATS_CAP`` and the unpacked block matrices fit
     ``JACCARD_BLAS_BCAST_BUDGET``, the identical relation comes from
     :func:`_jaccard_bcast_pairs` — per-block row-band sgemm across
     ``defaultParallelism`` tasks instead of one task per block, with
@@ -823,6 +820,7 @@ def jaccard_pairs_in_blocks(
     if (
         2 * work_hi > JACCARD_BLAS_MIN_FLOPS
         and g_lo < (1 << 24)
+        and g_hi <= HYBRID_STATS_CAP  # the tier collects every (block, gram)
         and n_sum * 4 * g_lo <= JACCARD_BLAS_BCAST_BUDGET
     ):
         # BLAS band tier: any single block whose sgemm exceeds the

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from national_caseload_data_ingest_spark.functions import dsum
-from national_caseload_data_ingest_spark.operators.multimodal import fan_out
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 
@@ -1559,10 +1558,6 @@ def archive_codec_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; at corpus scale the same kernel fans one task per archive
     member exactly like the WARC/tar walkers."""
     import pandas as pd  # noqa: PLC0415
-
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
 

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 LINK_MAX_DIST = 2  # max edits for a candidate link
@@ -81,9 +81,6 @@ def link_records(
         *[F.col(c) for c in block_cols],
         F.col(key_col).alias("key_b"),
         F.col(name_col).alias("name_b"),
-    )
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
     )
 
     # Broadcast the guarded side and fan the PROBE side out before the
@@ -434,10 +431,6 @@ def link_customer_records_jw(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.Series(
             [jaro_winkler(x, y) for x, y in zip(s1, s2)], dtype="float64"
         )
-
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
 
     # Same broadcast-build + fanned-probe shape as link_records (r14):
     # the per-pair Python JW kernel otherwise runs on the one task AQE

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 FEATURE_SCHEMA = (
@@ -39,24 +39,6 @@ FEATURE_SCHEMA = (
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, RGB, gray+alpha, RGBA
-
-
-def fan_out(df):
-    """Spread a skinny driver relation across the session's cores before a
-    CPU-bound Arrow kernel chain.
-
-    The codec queries inherit their parallelism from the upstream SCAN,
-    and a single-row-group parquet file scans as ONE partition — which
-    silently serialized every synthesize+decode kernel onto one core
-    (measured: the progressive-JPEG and MJPEG headline queries ran 10-30×
-    under the machine's parallelism).  The input here is the doc_id
-    relation (8 bytes/row), so a round-robin repartition is a near-free
-    exchange that buys full fan-out.  At 100 TB real binary columns
-    arrive in thousands of scan partitions and this becomes a no-op-cost
-    straggler guard; the pathology it fixes is the small-file/one-row-
-    group regime."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism)
 
 
 # Adam7 interlace pass grid: (x0, y0, dx, dy) per pass, PNG spec §8.2 —

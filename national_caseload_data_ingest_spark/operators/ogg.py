@@ -28,8 +28,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from national_caseload_data_ingest_spark.operators.multimodal import fan_out
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 _CRC_TABLE = None

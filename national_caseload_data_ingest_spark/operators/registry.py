@@ -32,6 +32,24 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` across the session's cores before a CPU-bound
+    kernel.
+
+    A single small parquet file scans as ONE partition, so without this
+    a per-row Python kernel (``mapInPandas`` tokenizers, shingling,
+    MinHash signatures, per-pair Jaro-Winkler, the codec
+    synthesize-and-decode kernels) or a codegen explode (sliding-window
+    chunks, winnowing k-grams) inherits that width and runs on one core.
+    Callers pass the skinny input relation (ids, plus text where the
+    kernel needs it), so the exchange is cheap; at large scale the input already
+    arrives in many splits and this is a straggler guard.
+    ``tests/test_fanout_plans.py`` pins the exchange in front of the
+    kernels that depend on it."""
+    sc = df.sparkSession.sparkContext
+    return df.repartition(sc.defaultParallelism)
+
+
 # The per-round driver verifies queries in dict-iteration order and caps at
 # the first 50 (the cap is empirical, see COVERAGE.md).  The window ROTATES
 # per round so the union of CORRECTNESS_r0{1..N}.json stays fresh across

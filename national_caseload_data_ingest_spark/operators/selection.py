@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 # Hashed feature space.  4096 buckets is deliberately small-SF-friendly
@@ -79,9 +79,6 @@ def _grams(d: DataFrame) -> DataFrame:
 
 def _weights(d: DataFrame) -> DataFrame:
     """(doc_id, lang, source, n_grams, dsir_log_weight) for every doc."""
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
 
     # Fan the DOC relation out past the scan's file-split width before
     # the gram explode (r14, the established small-file kernel-

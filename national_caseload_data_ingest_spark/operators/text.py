@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.multimodal import fan_out
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 # Tiny per-language stopword marker lists for the n-gram/stopword heuristic.
@@ -795,10 +794,6 @@ def sliding_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (ragged tails, the empty-doc guard, the start grid) is
     hash-pinned.
     """
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
-
     # Fan the doc relation past the scan's file-split width before the
     # chunk explode (r15): a single-row-group corpus scans as ONE
     # partition and this pure-codegen explode pipeline — like the
@@ -935,10 +930,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     document length) → distinct on (doc_id, fingerprint).
     """
     from pyspark.sql.window import Window  # noqa: PLC0415
-
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
 
     # Fan out before the k-gram explode (r15): the gram pass (slice +
     # concat + md5 per token position) is the query's dominant cost and

@@ -56,8 +56,7 @@ from pyspark.sql import functions as F
 from national_caseload_data_ingest_spark.operators.bpe import (
     word_frequencies,
 )
-from national_caseload_data_ingest_spark.operators.multimodal import fan_out
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 PIECE_MAX = 6  # longest candidate piece (chars)

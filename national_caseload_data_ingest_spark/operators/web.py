@@ -4,8 +4,8 @@ pretraining corpus runs before dedup (URL-level dedup needs canonical
 forms; domain-level filtering/quotas need the registered-domain
 relation; CCNet/RefinedWeb/FineWeb all start here).
 
-The synthetic ``documents`` corpus has no URL column, so (codec-fixture
-convention, multimodal.py) a deterministic URL is CONSTRUCTED from
+The synthetic ``documents`` corpus has no URL column, so (the
+synthetic-fixture convention) a deterministic URL is CONSTRUCTED from
 doc_id inside Spark — mixed-case host, default/explicit/absent port,
 1-3 path segments, optional query and fragment, every rotation coprime
 so all combinations occur — and then PARSED BACK through the real
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 # rotations: 2 (scheme), 7 (subdomain), 13 (domain), 3 (tld), 9 (port),
@@ -322,10 +322,6 @@ def html_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is the same shape as any inverted-edge count — skew on
     mega-targets is absorbed by partial aggregation before the
     exchange."""
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
-
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     n = docs.count()
     links = fan_out(docs.select("doc_id")).mapInPandas(
@@ -616,10 +612,6 @@ def robots_txt_allow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash.  One narrow Arrow kernel, zero shuffle."""
     import pandas as pd  # noqa: PLC0415
 
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
-
     def kernel(batches):
         for pdf in batches:
             rows = []
@@ -856,10 +848,6 @@ def crawl_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 1. robots (real evaluator, same fixture as robots_txt_allow)
     import pandas as pd  # noqa: PLC0415
-
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
 
     def robots_kernel(batches):
         for pdf in batches:

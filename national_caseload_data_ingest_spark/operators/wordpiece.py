@@ -45,8 +45,7 @@ from national_caseload_data_ingest_spark.operators.bpe import (
     MAX_VOCAB_WORDS,
     word_frequencies,
 )
-from national_caseload_data_ingest_spark.operators.multimodal import fan_out
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 UNK = "[UNK]"

@@ -333,7 +333,7 @@ def encode_partitions(df: DataFrame) -> DataFrame:
     # file serializes the whole Python encode onto a few cores
     # (measured 40x at sf1 on avro_nested_roundtrip).  At 100 TB
     # inputs arrive in thousands of splits and this is a no-op-cost
-    # straggler guard -- same policy as operators/multimodal.fan_out.
+    # straggler guard -- same policy as operators/registry.fan_out.
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df.mapInPandas(_encode_kernel(), schema="payload binary")
 

@@ -30,7 +30,9 @@ Semantics reproduced (with reference citations):
   ``make_date`` does not.  Every other cell (lower-case months, 1-digit
   days, long month names, trailing text, years below 1600) falls back to
   the legacy ``to_date``; ``tests/test_date_fastpath.py`` pins the two
-  paths to each other.
+  paths to each other.  A year of six or more digits is NULL without
+  parsing, as under the reference's ``strptime('%Y')``: the legacy parser
+  raises ``long overflow`` on years past 292277.
 - VARCHAR keeps empty strings as ``''`` (Python ``str()`` never raises), so
   only redaction produces NULL strings.
 """
@@ -50,19 +52,23 @@ _MONTHS = ("JAN", "FEB", "MAR", "APR", "MAY", "JUN",
 # DD-MON-YYYY, upper-case month, year >= 1600: the cells ``make_date``
 # reads exactly as the legacy parser does.
 _FAST_DATE_RE = rf"^[0-9]{{2}}-({'|'.join(_MONTHS)})-(1[6-9]|[2-9][0-9])[0-9]{{2}}$"
+# A month followed by six or more year digits, which the legacy parser
+# would read and, past year 292277, fail the job on (``long overflow``).
+_LONG_YEAR_RE = r"(?i)^\s*[0-9]+-[a-z]+-\s*[0-9]{6}"
 
 
 def _oracle_date(cell: Column) -> Column:
     """``to_date(cell, 'dd-MMM-yyyy')`` under the LEGACY parser, with the
-    common exact shape computed by ``make_date`` instead."""
+    common exact shape computed by ``make_date`` instead and six-digit
+    years NULL."""
     month = F.array_position(F.array(*map(F.lit, _MONTHS)), F.substring(cell, 4, 3))
     fast = F.make_date(
         F.substring(cell, 8, 4).cast("int"),
         month.cast("int"),
         F.substring(cell, 1, 2).cast("int"),
     )
-    return F.when(cell.rlike(_FAST_DATE_RE), fast).otherwise(
-        F.to_date(cell, ORACLE_DATE_FORMAT)
+    return F.when(cell.rlike(_FAST_DATE_RE), fast).when(
+        ~cell.rlike(_LONG_YEAR_RE), F.to_date(cell, ORACLE_DATE_FORMAT)
     )
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import fan_out, query
 from national_caseload_data_ingest_spark.session import load_tables
 
 DOCS_SCHEMA = T.StructType(
@@ -231,7 +231,7 @@ def lsh_candidates_batch(docs: DataFrame) -> DataFrame:
     Two r14 plan fixes (guide §2.4/§6): the signature kernel input is
     round-robin fanned out past the scan's file-split width (a single
     small parquet file otherwise serializes the whole signature pass
-    onto one core — the multimodal.fan_out policy), and the bucket
+    onto one core — the registry.fan_out policy), and the bucket
     relation is localCheckpoint'ed so the SELF-join reads one
     materialized copy instead of running the signature kernel once per
     join branch (the before-plan showed two MapInPandas subtrees).
@@ -239,10 +239,6 @@ def lsh_candidates_batch(docs: DataFrame) -> DataFrame:
     never reused across invocations — each call builds a fresh RDD —
     so no cross-run state survives.  On a real cluster prefer reliable
     ``checkpoint`` (the pagerank convention)."""
-    from national_caseload_data_ingest_spark.operators.multimodal import (  # noqa: PLC0415
-        fan_out,
-    )
-
     buckets = minhash_band_buckets(
         fan_out(docs.select("doc_id", "text"))
     ).localCheckpoint(eager=True)

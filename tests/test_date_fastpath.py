@@ -76,9 +76,10 @@ def _case_variants(word: str) -> st.SearchStrategy[str]:
 _LONG_MONTHS = ("JANUARY", "FEBRUARY", "MARCH", "APRIL", "JUNE", "JULY",
                 "AUGUST", "SEPTEMBER", "OCTOBER", "NOVEMBER", "DECEMBER")
 # Each near miss is an exact DD-MON-YYYY date with up to two parts swapped
-# for one of these.  Years stay at five digits or fewer: past year 292277
-# the legacy parser itself raises (long overflow) instead of returning
-# NULL, on the fallback and in ``to_date`` alike.
+# for one of these.  Years stay at five digits or fewer: a six-digit year
+# is NULL on the fallback by design (``test_six_digit_years_are_null``),
+# while the plain legacy parse this suite compares with raises ``long
+# overflow`` past year 292277.
 _PERTURBATIONS = {
     "day": st.one_of(
         st.integers(0, 9).map(str),
@@ -124,3 +125,20 @@ def near_miss_dates(draw) -> str:
 @given(st.lists(near_miss_dates(), min_size=100, max_size=250))
 def test_near_miss_strings_match_legacy_parser(spark, values):
     assert _mismatches(spark, values) == []
+
+
+def test_six_digit_years_are_null(spark):
+    """A month followed by six or more year digits is NULL, as under the
+    reference's ``strptime('%Y')``, where the legacy parser would raise
+    ``long overflow`` past year 292277 and fail the write.  Checked with
+    ``isNull``: Python cannot collect a year above 9999."""
+    long_years = [
+        "15-SEP-835260", "15-sep-835260", "15-SEP-0835260",
+        "15-September-835260", "5-SEP-835260", "15-SEP-835260x",
+        "15-SEP- 835260", "\t15-SEP-835260", "15-SEP-100000",
+    ]
+    df = spark.createDataFrame(
+        pa.table({"v": long_years + ["15-SEP-99999"]})
+    ).select("v", _cast_cell(F.trim(F.col("v")), _DATE_FIELD).isNull().alias("null"))
+    got = {r["v"]: r["null"] for r in df.collect()}
+    assert got == {**dict.fromkeys(long_years, True), "15-SEP-99999": False}

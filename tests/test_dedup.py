@@ -72,3 +72,43 @@ def test_cdc_shared_passage_yields_shared_chunks():
     shared = chunks(d1) & chunks(d2)
     # at ~32-byte chunks a 500-char shared passage yields many twins
     assert len(shared) >= 5
+
+
+# -- blocked exact Jaccard routing ---------------------------------------------
+
+def test_jaccard_over_stats_cap_falls_through_to_block_kernel(spark, monkeypatch):
+    """A corpus whose distinct (block, gram) rows exceed HYBRID_STATS_CAP
+    would make the BLAS band tier raise when it collects them; routing
+    sends it to the per-block kernel instead, even when its work is past
+    the BLAS crossover."""
+    import pytest
+
+    from national_caseload_data_ingest_spark.operators import dedup
+
+    texts = [
+        (i, f"alpha beta gamma delta w{i % 7} epsilon zeta", ("en", "fr")[i % 2])
+        for i in range(30)
+    ]
+    docs = spark.createDataFrame(texts, "doc_id bigint, text string, lang string")
+    postings = dedup.word_bigram_postings(docs).persist()
+    try:
+        want = sorted(
+            tuple(r)
+            for r in postings.groupBy("lang").applyInPandas(
+                dedup._jaccard_block_kernel(
+                    0.5, dedup.MAX_BLOCK_DOCS, dedup.MAX_BLOCK_CELLS
+                ),
+                schema="doc_a bigint, doc_b bigint, jaccard double",
+            ).collect()
+        )
+        monkeypatch.setattr(dedup, "JACCARD_BLAS_MIN_FLOPS", 0)
+        monkeypatch.setattr(dedup, "HYBRID_STATS_CAP", 4)
+        with pytest.raises(ValueError, match="stats cap"):
+            dedup._jaccard_bcast_pairs(postings, ["lang"], 0.5)
+        got = sorted(
+            tuple(r)
+            for r in dedup.jaccard_pairs_in_blocks(postings, ["lang"], 0.5).collect()
+        )
+        assert got == want and want
+    finally:
+        postings.unpersist()

@@ -1,5 +1,5 @@
-"""Interchange-format round-trips (ORC/CSV/JSON sink+source pairs) and the
-HTML text extractor.  The driver gate hash-matches these against DuckDB on
+"""Interchange-format round-trips (ORC/CSV/JSON/tar sink+source pairs).
+The driver gate hash-matches these against DuckDB on
 the original parquet; the tests here pin the LOSSLESSNESS claims directly
 (re-read copy identical to the source DataFrame, row by row).
 """
@@ -114,45 +114,6 @@ def test_csv_handles_adversarial_text(spark, tmp_path):
         .csv(path)
     )
     assert {(r["id"], r["text"]) for r in back.collect()} == set(nasty)
-
-
-def test_html_extract_recovers_text_and_strips_boilerplate(spark):
-    from national_caseload_data_ingest_spark.operators.text import (
-        html_extract_text_query,
-    )
-
-    rows = html_extract_text_query(spark, SF).collect()
-    assert rows
-    assert all(r["recovered_ok"] for r in rows)
-    assert all(r["boilerplate_gone"] for r in rows)
-    assert all(r["html_len"] > r["extracted_len"] for r in rows)
-
-
-def test_html_extract_entity_and_script_edges(spark):
-    """A document whose text CONTAINS markup and pre-escaped entities must
-    round-trip exactly: '<script>' in the body is escaped at synth time so
-    the extractor treats it as prose, and a literal '&lt;' survives as the
-    four characters '&lt;' (escape-order correctness)."""
-    from national_caseload_data_ingest_spark.operators.text import (
-        html_extract_text,
-        html_escape,
-        synth_html_page,
-    )
-
-    body = 'literal &lt; stays; <script>alert("x")</script> is prose; 1<2>0'
-    df = spark.createDataFrame([(body,)], "text string")
-    out = df.select(
-        html_extract_text(
-            synth_html_page(F.col("text"), F.lit("t"))
-        ).alias("x")
-    ).head()["x"]
-    assert "literal &lt; stays" in out
-    assert '<script>alert("x")</script> is prose' in out
-    assert "1<2>0" in out
-    assert "SCRIPTLEAK" not in out and "STYLELEAK" not in out
-    # escape() itself is exercised directly too
-    esc = df.select(html_escape(F.col("text")).alias("e")).head()["e"]
-    assert "&amp;lt;" in esc and "&lt;script&gt;" in esc
 
 
 def test_tar_roundtrip_lossless_and_adversarial(spark):

@@ -34,7 +34,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from national_caseload_data_ingest_spark.sources.schemas import ddl_name
+
 PARTITION_COLUMN = "filename_district"
+
+
+def _column_list(fields: list[T.StructField]) -> str:
+    """The ``name TYPE`` lines of a CREATE TABLE column list, in order."""
+    return ",\n    ".join(f"{f.name} {ddl_name(f.dataType)}" for f in fields)
 
 
 class SparkCatalog:
@@ -88,31 +95,21 @@ class SparkCatalog:
         """CREATE EXTERNAL TABLE text for a table whose StructType already
         carries data columns first, shadows last (the reference's order)."""
         data_format = "JSON" if self.fidelity_json else "PARQUET"
-        col_lines = [
-            f"{f.name} {f.dataType.simpleString().upper()}" for f in schema.fields
-        ]
         # Spark-native `USING` DDL (the `STORED AS … SERDE` clause of the
         # reference's Athena DDL requires a Hive metastore); the partition
         # column joins the column list per USING-table syntax.
+        fields = list(schema.fields)
         partition_clause = ""
         if partitioned:
-            col_lines.append(f"{PARTITION_COLUMN} STRING")
+            fields.append(T.StructField(PARTITION_COLUMN, T.StringType()))
             partition_clause = f"\nPARTITIONED BY ({PARTITION_COLUMN})"
-        cols = ",\n    ".join(col_lines)
+        cols = _column_list(fields)
         return (
             f"CREATE TABLE IF NOT EXISTS {self.db_name}.{table_name} (\n"
             f"    {cols}\n"
             f")\nUSING {data_format}{partition_clause}\n"
             f"LOCATION '{self.table_location(table_name)}'"
         )
-
-    _ATHENA_TYPES = {
-        T.StringType(): "STRING",
-        T.LongType(): "BIGINT",
-        T.DateType(): "DATE",
-        T.DoubleType(): "DOUBLE",
-        T.BooleanType(): "BOOLEAN",
-    }
 
     def generate_fidelity_ddl(
         self,
@@ -141,9 +138,7 @@ class SparkCatalog:
         executable by Spark without a Hive metastore, so it is emitted and
         recorded, never executed here.
         """
-        cols = ",\n    ".join(
-            f"{f.name} {self._ATHENA_TYPES[f.dataType]}" for f in schema.fields
-        )
+        cols = _column_list(schema.fields)
         partition_clause = (
             "\nPARTITIONED BY (filename_district STRING)" if partitioned else ""
         )
@@ -204,14 +199,17 @@ class SparkCatalog:
 
         if register:
             self.create_db()
-            data_schema = T.StructType(
-                [
-                    f
-                    for f in out.schema.fields
-                    if not (partitioned and f.name == PARTITION_COLUMN)
-                ]
+            # Both DDL emitters place the partition column themselves.
+            columns = [
+                f.name
+                for f in df.schema.fields
+                if not (partitioned and f.name == PARTITION_COLUMN)
+            ]
+            ddl = self.generate_ddl(
+                table_name,
+                T.StructType([out.schema[c] for c in columns]),
+                partitioned=partitioned,
             )
-            ddl = self.generate_ddl(table_name, data_schema, partitioned=partitioned)
             self.execute_query(f"DROP TABLE IF EXISTS {self.db_name}.{table_name}")
             self.execute_query(ddl)
             if partitioned:
@@ -224,13 +222,7 @@ class SparkCatalog:
                 # the fidelity text is generated from the ORIGINAL schema.
                 self.generate_fidelity_ddl(
                     table_name,
-                    T.StructType(
-                        [
-                            f
-                            for f in df.schema.fields
-                            if not (partitioned and f.name == PARTITION_COLUMN)
-                        ]
-                    ),
+                    T.StructType([df.schema[c] for c in columns]),
                     partitioned=partitioned,
                 )
 

@@ -9,16 +9,11 @@ can switch without rewriting call sites:
 - ``execute_query(sql)`` → result as a CSV text stream (same consumption
   contract as the reference's downloaded result object).
 - ``execute_query_df(sql)`` → the DataFrame, for Spark-native callers.
-- ``submit(sql)`` / ``cancel()`` → optional async shape; cancellation maps
-  to ``cancelJobGroup`` (the reference cancels the remote query on any
-  exception, ``/root/reference/ncd/athena.py:171-174``).
 """
 
 from __future__ import annotations
 
 import io
-import threading
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,44 +43,3 @@ class QueryExecutor:
         pdf.to_csv(buf, index=False)
         buf.seek(0)
         return buf
-
-    def submit(self, sql: str, db_name: str | None = None) -> "RunningQuery":
-        """Async submit returning a cancellable handle (poll-loop parity)."""
-        return RunningQuery(self, sql, db_name)
-
-
-class RunningQuery:
-    """A query running in a tagged job group; ``result()`` blocks,
-    ``cancel()`` aborts the group's Spark jobs."""
-
-    def __init__(self, executor: QueryExecutor, sql: str, db_name: str | None):
-        self._executor = executor
-        self.query_id = str(uuid.uuid4())
-        self._result: io.StringIO | None = None
-        self._error: BaseException | None = None
-        self._done = threading.Event()
-        self._thread = threading.Thread(
-            target=self._run, args=(sql, db_name), daemon=True
-        )
-        self._thread.start()
-
-    def _run(self, sql: str, db_name: str | None) -> None:
-        sc = self._executor.spark.sparkContext
-        sc.setJobGroup(self.query_id, f"query {self.query_id}", True)
-        try:
-            self._result = self._executor.execute_query(sql, db_name)
-        except BaseException as e:  # noqa: BLE001 — reported via result()
-            self._error = e
-        finally:
-            self._done.set()
-
-    def result(self, timeout: float | None = None) -> io.StringIO:
-        if not self._done.wait(timeout):
-            raise TimeoutError(f"query {self.query_id} still running")
-        if self._error is not None:
-            raise self._error
-        assert self._result is not None
-        return self._result
-
-    def cancel(self) -> None:
-        self._executor.spark.sparkContext.cancelJobGroup(self.query_id)

@@ -21,10 +21,84 @@ Design notes (SURVEY.md §7 step 1):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# The engine's SQL confs: get_spark builds every session with them, and
+# they are all runtime-settable, so configure_runtime also applies them to
+# a session the caller (e.g. a benchmark harness) built.  Asserted ONCE per
+# session (load_tables memoises the application) — callers must not
+# mutate these keys mid-session; exploratory spark.conf.set on other keys
+# is fine.
+RUNTIME_CONFS = {
+    # Null-on-cast-failure parity with the reference's converter wrapper.
+    "spark.sql.ansi.enabled": "false",
+    # 'dd-MMM-yyyy' with upper-case months (01-JAN-2017).
+    "spark.sql.legacy.timeParserPolicy": "LEGACY",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Coalesce post-shuffle partitions by SIZE, not up to core count:
+    # with parallelismFirst (the default) every tiny stage keeps ~32
+    # one-row tasks, and on a jittery VM each stage waits on the
+    # slowest of 32 stragglers.  Size-based coalescing collapses small
+    # stages to 1-2 tasks (measured 5-20x on the LSH pipelines) while
+    # large stages still fan out to the 64 MB advisory target.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Runtime bloom-filter join pruning: for a selective fact-fact join
+    # the build side injects a bloom filter into the probe side's scan,
+    # cutting shuffle input before it's written.  Off by default in
+    # Spark; at 100 TB it's one of the cheapest shuffle reducers.
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # Whole-stage codegen normally ABANDONS a stage whose generated
+    # method exceeds 64 KB bytecode (falls back to interpreted
+    # Volcano eval — measured 2.1 s -> 1.8 s on the 64-aggregate
+    # bootstrap forest when the bail-out is lifted).  The JVM flag
+    # -XX:-DontCompileHugeMethods in get_spark's Java options exists
+    # precisely so HotSpot still JITs such methods; lifting the
+    # Spark-side limit is the matching half.  Cluster deployments
+    # inherit both or neither via SPARK_GRAFT_JAVA_OPTS.
+    "spark.sql.codegen.hugeMethodLimit": "8000000",
+    # Codegen also bails out when a plan stage carries more than 100
+    # expression fields — which the wide-aggregate family here trips
+    # constantly (lineitem_correlations' 12 corr/covar aggregates
+    # hold ~6 codegen state fields each).  Measured on a steal-free
+    # window at sf0.1: correlations 1.03 s -> 0.51 s, bootstrap
+    # 3.27 -> 3.00 s, with no semantic effect (same expression
+    # tree, same accumulation order — codegen vs interpreted eval
+    # only).  800 covers every shipped stage; the JVM-side compile
+    # guard handles the generated-method size.
+    "spark.sql.codegen.maxFields": "800",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # PySpark 4 wraps EVERY DataFrame/Column API call in an
+    # error-context shim that (a) reads a conf over py4j, (b) walks
+    # the Python stack, and (c) pushes the call site to the JVM and
+    # clears it — ~3 extra py4j round trips per expression node,
+    # purely to enrich error messages with user line numbers.  The
+    # engine builds thousands of expression nodes per query (the
+    # 64-column simhash forest alone measured 2.9 s -> 1.0 s of
+    # driver-side construction with the shim off), so the documented
+    # opt-out pays across the whole catalog.  Driver-side only: the
+    # physical plan and every emitted row are identical.  pyspark
+    # caches the flag on the FIRST wrapped API call in the process, so
+    # a harness-owned session benefits only if load_tables runs before
+    # its first Column op — queries all start with load_tables, so it
+    # does.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # The events table stores TIMESTAMP(NANOS) which the vectorized
+    # reader rejects; read as int64 nanos and convert in load_tables.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise
+    # infer TIMESTAMP_NTZ (Spark 4 default), which half the timestamp
+    # functions (unix_micros, to_utc_timestamp, ...) reject.  Read as
+    # session-zoned TIMESTAMP: with the UTC session timezone the values
+    # are identical to the oracle's naive timestamps.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def get_spark(
@@ -33,7 +107,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
+    """Build (or fetch) the engine's SparkSession: every ``RUNTIME_CONFS``
+    entry plus the launch-time settings below.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for the test/bench
     environment; on a real cluster pass ``None`` and let spark-submit decide.
@@ -44,71 +119,12 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=RUNTIME_CONFS)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        # Null-on-cast-failure parity with the reference's converter wrapper.
-        .config("spark.sql.ansi.enabled", "false")
-        # 'dd-MMM-yyyy' with upper-case months (01-JAN-2017).
-        .config("spark.sql.legacy.timeParserPolicy", "LEGACY")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Coalesce post-shuffle partitions by SIZE, not up to core count:
-        # with parallelismFirst (the default) every tiny stage keeps ~32
-        # one-row tasks, and on a jittery VM each stage waits on the
-        # slowest of 32 stragglers.  Size-based coalescing collapses small
-        # stages to 1-2 tasks (measured 5-20x on the LSH pipelines) while
-        # large stages still fan out to the 64 MB advisory target.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter join pruning: for a selective fact-fact join
-        # the build side injects a bloom filter into the probe side's scan,
-        # cutting shuffle input before it's written.  Off by default in
-        # Spark; at 100 TB it's one of the cheapest shuffle reducers.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # Whole-stage codegen normally ABANDONS a stage whose generated
-        # method exceeds 64 KB bytecode (falls back to interpreted
-        # Volcano eval — measured 2.1 s -> 1.8 s on the 64-aggregate
-        # bootstrap forest when the bail-out is lifted).  The JVM flag
-        # -XX:-DontCompileHugeMethods above exists precisely so HotSpot
-        # still JITs such methods; lifting the Spark-side limit is the
-        # matching half.  Cluster deployments inherit both or neither
-        # via SPARK_GRAFT_JAVA_OPTS.
-        .config("spark.sql.codegen.hugeMethodLimit", "8000000")
-        # Codegen also bails out when a plan stage carries more than 100
-        # expression fields — which the wide-aggregate family here trips
-        # constantly (lineitem_correlations' 12 corr/covar aggregates
-        # hold ~6 codegen state fields each).  Measured on a steal-free
-        # window at sf0.1: correlations 1.03 s -> 0.51 s, bootstrap
-        # 3.27 -> 3.00 s, with no semantic effect (same expression
-        # tree, same accumulation order — codegen vs interpreted eval
-        # only).  800 covers every shipped stage; the JVM-side compile
-        # guard above handles the generated-method size.
-        .config("spark.sql.codegen.maxFields", "800")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # PySpark 4 wraps EVERY DataFrame/Column API call in an
-        # error-context shim that (a) reads a conf over py4j, (b) walks
-        # the Python stack, and (c) pushes the call site to the JVM and
-        # clears it — ~3 extra py4j round trips per expression node,
-        # purely to enrich error messages with user line numbers.  The
-        # engine builds thousands of expression nodes per query (the
-        # 64-column simhash forest alone measured 2.9 s -> 1.0 s of
-        # driver-side construction with the shim off), so the documented
-        # opt-out pays across the whole catalog.  Driver-side only: the
-        # physical plan and every emitted row are identical.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # The events table stores TIMESTAMP(NANOS) which the vectorized
-        # reader rejects; read as int64 nanos and convert in load_tables.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise
-        # infer TIMESTAMP_NTZ (Spark 4 default), which half the timestamp
-        # functions (unix_micros, to_utc_timestamp, ...) reject.  Read as
-        # session-zoned TIMESTAMP: with the UTC session timezone the values
-        # are identical to the oracle's naive timestamps.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Local mode: the driver is the only JVM; give it headroom but leave
         # room for Python workers (container has 128 GiB).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
@@ -147,33 +163,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-RUNTIME_CONFS = {
-    # Applied per-session even when the caller (e.g. the driver harness)
-    # built its own SparkSession: these are all runtime-settable SQLConfs.
-    # Asserted ONCE per session (load_tables memoises the application) —
-    # callers must not mutate these keys mid-session; exploratory
-    # spark.conf.set on other keys is fine.
-    "spark.sql.ansi.enabled": "false",
-    "spark.sql.legacy.timeParserPolicy": "LEGACY",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    "spark.sql.codegen.hugeMethodLimit": "8000000",
-    "spark.sql.codegen.maxFields": "800",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Python-side error-context shim opt-out (see get_spark).  pyspark
-    # caches the flag on the FIRST wrapped API call in the process, so a
-    # harness-owned session benefits only if load_tables runs before its
-    # first Column op — queries all start with load_tables, so it does.
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-}
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
@@ -274,7 +263,7 @@ def parquet_nanos_columns(path: str) -> list[str]:
 # keyed weakly so a stopped session's entries are collectable.  Temp-view
 # registration is NOT skipped when a different sf_dir last claimed the
 # name (callers switch scale factors within one session).
-_TABLE_CACHE: "weakref.WeakKeyDictionary" = None  # initialised lazily below
+_TABLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def clear_table_cache(spark: SparkSession | None = None) -> None:
@@ -285,11 +274,8 @@ def clear_table_cache(spark: SparkSession | None = None) -> None:
     stage-and-rename compaction) must call this so the next
     ``load_tables`` re-resolves the file listing instead of returning a
     plan over deleted files."""
-    global _TABLE_CACHE
-    if _TABLE_CACHE is None:
-        return
     if spark is None:
-        _TABLE_CACHE = None
+        _TABLE_CACHE.clear()
     else:
         _TABLE_CACHE.pop(spark, None)
 
@@ -312,20 +298,12 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
       call (nothing in the repo does; external callers re-registering
       views should use different names or clear the cache).
     """
-    global _TABLE_CACHE
-    if _TABLE_CACHE is None:
-        import weakref  # noqa: PLC0415
-
-        _TABLE_CACHE = weakref.WeakKeyDictionary()
     cache = _TABLE_CACHE.get(spark)
     if cache is None:
-        cache = {"tables": {}, "views": {}, "configured": False}
-        _TABLE_CACHE[spark] = cache
-    if not cache["configured"]:
-        # 12 runtime SQLConfs = 12 py4j round trips; they are engine-owned
+        # One py4j round trip per runtime SQLConf; they are engine-owned
         # constants, so one application per session suffices.
         configure_runtime(spark)
-        cache["configured"] = True
+        cache = _TABLE_CACHE[spark] = {"tables": {}, "views": {}}
     all_names = (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"

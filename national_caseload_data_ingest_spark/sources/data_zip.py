@@ -31,6 +31,7 @@ see ``import_all``-equivalent in ``sources/listing.py``).
 
 from __future__ import annotations
 
+import io
 import os
 import re
 import shutil
@@ -65,46 +66,50 @@ def district_file_pattern(table_name: str) -> re.Pattern[str]:
     )
 
 
+# Characters transcoded per read while staging: driver memory stays at a
+# few chunks whatever the member size.
+STAGE_CHUNK_CHARS = 1 << 20
+
+
 @dataclass
 class StagedZip:
     """Zip members staged to a scratch dir as UTF-8, CR-stripped text."""
 
     stage_dir: str
     members: dict[str, str] = field(default_factory=dict)  # member -> path
-    owns_dir: bool = False
 
     def cleanup(self) -> None:
-        if self.owns_dir:
-            shutil.rmtree(self.stage_dir, ignore_errors=True)
+        shutil.rmtree(self.stage_dir, ignore_errors=True)
 
 
-def stage_members(
-    zip_path: str,
-    stage_dir: str | None = None,
-    encoding: str = "latin-1",
-) -> StagedZip:
+def stage_members(zip_path: str) -> StagedZip:
     """Extract every ``.txt`` member, re-encoded to UTF-8 with ``\\r``→space.
 
     latin-1 maps each byte to one char, so fixed-width character extents are
     preserved; the CR replacement keeps offsets intact exactly like the
     reference (space, not removal).  ``global_LIONS.txt`` is already UTF-8
-    (``/root/reference/ncd/global_file.py:223``) and staged verbatim.
+    (reference ``ncd/global_file.py:223``), decoded strictly so
+    invalid bytes raise.  Members stream through in ``STAGE_CHUNK_CHARS``
+    chunks; the incremental decoder carries a multibyte character split
+    across a chunk boundary, so the output equals a whole-member transcode.
     """
-    owns = stage_dir is None
-    stage_dir = stage_dir or tempfile.mkdtemp(prefix="ncd_stage_")
-    os.makedirs(stage_dir, exist_ok=True)
-    staged = StagedZip(stage_dir=stage_dir, owns_dir=owns)
-    with zipfile.ZipFile(zip_path) as zf:
-        for member in zf.namelist():
-            if member.endswith("/"):
-                continue
-            raw = zf.read(member)
-            member_enc = "utf-8" if member == g.GLOBAL_MEMBER_NAME else encoding
-            text = raw.replace(b"\r", b" ").decode(member_enc)
-            out_path = os.path.join(stage_dir, member.replace("/", "__"))
-            with open(out_path, "w", encoding="utf-8") as fh:
-                fh.write(text)
-            staged.members[member] = out_path
+    staged = StagedZip(stage_dir=tempfile.mkdtemp(prefix="ncd_stage_"))
+    try:
+        with zipfile.ZipFile(zip_path) as zf:
+            for member in zf.namelist():
+                if member.endswith("/"):
+                    continue
+                encoding = "utf-8" if member == g.GLOBAL_MEMBER_NAME else "latin-1"
+                out_path = os.path.join(staged.stage_dir, member.replace("/", "__"))
+                with io.TextIOWrapper(
+                    zf.open(member), encoding=encoding, newline=""
+                ) as src, open(out_path, "w", encoding="utf-8") as dst:
+                    while chunk := src.read(STAGE_CHUNK_CHARS):
+                        dst.write(chunk.replace("\r", " "))
+                staged.members[member] = out_path
+    except BaseException:
+        staged.cleanup()
+        raise
     return staged
 
 
@@ -112,20 +117,15 @@ class NcdZipLoader:
     """Load one NCD zip into the catalog (the reference's ``DataZip.load``)."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        catalog: SparkCatalog,
-        zip_path: str,
-        stage_dir: str | None = None,
+        self, spark: SparkSession, catalog: SparkCatalog, zip_path: str
     ) -> None:
         self.spark = spark
         self.catalog = catalog
         self.zip_path = zip_path
-        self.stage_dir = stage_dir
 
     def load(self) -> list[str]:
         """Process normal, global, then lookup tables; returns table names."""
-        staged = stage_members(self.zip_path, self.stage_dir)
+        staged = stage_members(self.zip_path)
         loaded: list[str] = []
         try:
             schemas = self._normal_schemas(staged)

@@ -39,8 +39,9 @@ Semantics reproduced (with reference citations):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from national_caseload_data_ingest_spark.sources.schemas import FieldSpec, TableSchema
 
@@ -75,48 +76,31 @@ def _oracle_date(cell: Column) -> Column:
 def _cast_cell(cell: Column, f: FieldSpec) -> Column:
     """Typed value for one already-trimmed field, null-on-failure,
     reference semantics."""
-    if f.src_type in ("VARCHAR", "VARCHAR2"):
-        return cell
-    if f.src_type == "NUMBER":
+    spark_type = f.spark_type()
+    if isinstance(spark_type, T.LongType):
         return F.when(cell.rlike(_INT_RE), cell.cast("bigint"))
-    if f.src_type == "DATE":
+    if isinstance(spark_type, T.DateType):
         return _oracle_date(cell)
-    if f.src_type == "FLOAT":
+    if isinstance(spark_type, T.DoubleType):
         return cell.cast("double")
-    raise NotImplementedError(f"Unsupported source field type: {f.src_type}")
+    return cell
 
 
 def project_fixed_width(lines: DataFrame, schema: TableSchema) -> DataFrame:
     """Slice a one-column DataFrame of raw lines into the typed table.
 
     ``lines`` must have a string column named ``value`` (``spark.read.text``
-    contract).  Output columns: all data columns (lower-cased names), then
-    all ``redacted_*`` shadows — the reference's DDL order
-    (``/root/reference/ncd/normal_table.py:166-175``).
+    contract).  Output columns are named and ordered by
+    :meth:`TableSchema.spark_schema`: all data columns, then all
+    ``redacted_*`` shadows.
     """
     # Offsets-preserving CR handling (A4).
     value = F.regexp_replace(F.col("value"), "\r", " ")
-    cells = {f.name: F.trim(F.substring(value, f.start, f.length)) for f in schema.fields}
-    data_cols = []
-    shadow_cols = []
-    for f in schema.fields:
-        raw = cells[f.name]
-        is_redacted = raw == REDACTION_MARKER
-        data_cols.append(
-            F.when(is_redacted, F.lit(None)).otherwise(_cast_cell(raw, f))
-            .alias(f.name.lower())
-        )
-        shadow_cols.append(is_redacted.alias(f"redacted_{f.name.lower()}"))
-    return lines.select(*data_cols, *shadow_cols)
-
-
-def read_fixed_width(
-    spark: SparkSession, paths: list[str] | str, schema: TableSchema
-) -> DataFrame:
-    """``spark.read.text`` over staged (UTF-8) fixed-width files + projection.
-
-    Input staging re-encodes latin-1 → UTF-8 (see ``data_zip.stage_members``);
-    latin-1 maps 1 byte ↔ 1 char, so character-based ``substring`` extents
-    remain exactly the reference's byte extents.
-    """
-    return project_fixed_width(spark.read.text(paths), schema)
+    cells = [F.trim(F.substring(value, f.start, f.length)) for f in schema.fields]
+    data = [
+        F.when(cell == REDACTION_MARKER, F.lit(None)).otherwise(_cast_cell(cell, f))
+        for cell, f in zip(cells, schema.fields)
+    ]
+    shadows = [cell == REDACTION_MARKER for cell in cells]
+    names = schema.spark_schema().names
+    return lines.select(*(c.alias(n) for c, n in zip(data + shadows, names)))

@@ -61,13 +61,13 @@ def get_file_urls(listing_url: str) -> list[str]:
     return extract_zip_urls(html, listing_url)
 
 
-def download_to_tempfile(url: str, chunk_bytes: int = DOWNLOAD_CHUNK_BYTES) -> str:
+def download_to_tempfile(url: str) -> str:
     """Stream one zip to a temp file; returns the local path."""
     fd, path = tempfile.mkstemp(suffix=".zip", prefix="ncd_dl_")
     try:
         with os.fdopen(fd, "wb") as out, urllib.request.urlopen(url) as resp:  # noqa: S310
             while True:
-                chunk = resp.read(chunk_bytes)
+                chunk = resp.read(DOWNLOAD_CHUNK_BYTES)
                 if not chunk:
                     break
                 out.write(chunk)
@@ -87,17 +87,26 @@ def load_all(
     ``loader_factory(zip_path)`` must return an object with ``.load()`` —
     normally an ``NcdZipLoader`` bound to a SparkCatalog.  Downloads run
     ahead in a pool; loads run in listing order for deterministic catalogs
-    (A25 ordering parity).
+    (A25 ordering parity).  Every downloaded file is deleted, also when a
+    download or a load raises: queued downloads are cancelled, and running
+    ones are awaited and their files removed.
     """
     urls = get_file_urls(listing_url)
     loaded: list[str] = []
     with ThreadPoolExecutor(max_workers=max_parallel_downloads) as pool:
-        futures = [pool.submit(download_to_tempfile, u) for u in urls]
-        for fut in futures:
-            path = fut.result()
-            try:
-                loader_factory(path).load()
-                loaded.append(path)
-            finally:
-                os.unlink(path)
+        pending = [pool.submit(download_to_tempfile, u) for u in urls]
+        try:
+            while pending:
+                path = pending.pop(0).result()
+                try:
+                    loader_factory(path).load()
+                    loaded.append(path)
+                finally:
+                    os.unlink(path)
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            for fut in pending:
+                if not fut.cancelled() and fut.exception() is None:
+                    os.unlink(fut.result())
+            raise
     return loaded

@@ -38,14 +38,11 @@ SPARK_TYPES: dict[str, T.DataType] = {
     "FLOAT": T.DoubleType(),
 }
 
-# Athena-compatible DDL type names (for generated CREATE TABLE parity).
-DDL_TYPES: dict[str, str] = {
-    "VARCHAR": "STRING",
-    "VARCHAR2": "STRING",
-    "NUMBER": "BIGINT",
-    "DATE": "DATE",
-    "FLOAT": "DOUBLE",
-}
+
+def ddl_name(data_type: T.DataType) -> str:
+    """DDL spelling of a Spark type: STRING, BIGINT, DATE, DOUBLE, BOOLEAN
+    for the types the ingest writes (Spark and Athena agree on these)."""
+    return data_type.simpleString().upper()
 
 
 @dataclass(frozen=True)
@@ -70,12 +67,7 @@ class FieldSpec:
             ) from None
 
     def ddl_type(self) -> str:
-        try:
-            return DDL_TYPES[self.src_type]
-        except KeyError:
-            raise NotImplementedError(
-                f"Unsupported source field type: {self.src_type}"
-            ) from None
+        return ddl_name(self.spark_type())
 
 
 @dataclass(frozen=True)
@@ -85,18 +77,16 @@ class TableSchema:
     name: str
     fields: tuple[FieldSpec, ...]
 
-    def spark_schema(self, with_shadows: bool = True) -> T.StructType:
+    def spark_schema(self) -> T.StructType:
         """StructType: all data columns, then all ``redacted_*`` BOOLEANs
         (shadow-column order per ``/root/reference/ncd/normal_table.py:166-175``)."""
-        out = [
-            T.StructField(f.name.lower(), f.spark_type(), True) for f in self.fields
-        ]
-        if with_shadows:
-            out += [
+        return T.StructType(
+            [T.StructField(f.name.lower(), f.spark_type(), True) for f in self.fields]
+            + [
                 T.StructField(f"redacted_{f.name.lower()}", T.BooleanType(), True)
                 for f in self.fields
             ]
-        return T.StructType(out)
+        )
 
 
 # --- README (normal-table) schema extraction --------------------------------

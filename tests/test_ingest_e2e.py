@@ -302,3 +302,38 @@ def test_partitioned_reload_preserves_other_districts(spark, tmp_path):
         assert got == {("A1", "FLM"), ("B2", "NYS")}, got
     finally:
         spark.sql("DROP DATABASE IF EXISTS reload_db CASCADE")
+
+
+def test_query_executor_csv_contract(loaded):
+    """``QueryExecutor.execute_query`` returns the reference's result shape
+    (ncd/athena.py:57-79): a CSV text stream with a header row, one line
+    per row, and NULL as an empty field.  Unqualified table names resolve
+    in the constructor's ``db_name`` unless a call passes its own."""
+    from pyspark.errors import AnalysisException
+
+    from national_caseload_data_ingest_spark.query import QueryExecutor
+
+    catalog, _, _ = loaded
+    spark = catalog.spark
+    sql = (
+        "SELECT case_id, district, total_defendants, filed_date, "
+        "redacted_district FROM gs_case ORDER BY case_id"
+    )
+    before = spark.catalog.currentDatabase()
+    try:
+        text = QueryExecutor(spark, "ncd_test").execute_query(sql).getvalue()
+        # A BIGINT column holding a NULL reaches pandas as float64, so its
+        # values render as 3.0 rather than Athena's 3.
+        assert text.splitlines() == [
+            "case_id,district,total_defendants,filed_date,redacted_district",
+            "CASE000001,FLM,3.0,2017-01-01,False",
+            "CASE000002,,,,True",
+            "CASE000004,,7.0,1999-08-15,False",
+            "CASE0000Ø3,CT,,,False",
+        ]
+        other_db = QueryExecutor(spark, "default")
+        with pytest.raises(AnalysisException):
+            other_db.execute_query(sql)
+        assert other_db.execute_query(sql, db_name="ncd_test").getvalue() == text
+    finally:
+        spark.catalog.setCurrentDatabase(before)

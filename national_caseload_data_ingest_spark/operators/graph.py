@@ -236,6 +236,7 @@ KCORE_K = 2
 KCORE_ROUNDS = 4  # fixpoint measured at 2 rounds on both test scales;
 #                   extra rounds are idempotent (peeling is monotone), so
 #                   a fixed unroll stays hash-equal to run-to-convergence
+KCORE_PLAN_ROUNDS = 8  # most peel rounds one Catalyst plan carries
 
 
 def kcore(edges: DataFrame, k: int = KCORE_K,
@@ -263,7 +264,14 @@ def kcore(edges: DataFrame, k: int = KCORE_K,
     src partitioning.  Peeling converges in at most max-degeneracy
     rounds — single digits on real near-dup graphs — and extra unrolled
     rounds after the fixpoint are no-ops, so the fixed ``rounds`` bound
-    is exact, not approximate."""
+    is exact, not approximate.
+
+    Plan depth: each round adds two windows to the plan, and Catalyst's
+    analysis and codegen cost grows with it.  Up to
+    ``KCORE_PLAN_ROUNDS`` rounds (the default ``KCORE_ROUNDS`` among
+    them) run as the one chain above; a larger ``rounds`` cuts the
+    lineage with a lazy ``localCheckpoint`` every ``KCORE_PLAN_ROUNDS``
+    rounds, so no plan carries more than that many rounds."""
     from pyspark.sql import Window  # noqa: PLC0415
 
     # EAGER checkpoint: the edge relation's lineage (a near-dup pair
@@ -276,7 +284,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K,
     w_dst = Window.partitionBy("dst")
     w_src = Window.partitionBy("src")
     cur = sym
-    for _ in range(rounds):
+    for t in range(1, rounds + 1):
         # dst window first, src window last: the round ends partitioned
         # by src, so the next round's src window / the final groupBy
         # reuse that exchange.
@@ -286,6 +294,8 @@ def kcore(edges: DataFrame, k: int = KCORE_K,
             .filter((F.col("ds") >= k) & (F.col("dd") >= k))
             .select("src", "dst")
         )
+        if t % KCORE_PLAN_ROUNDS == 0 and t < rounds:
+            cur = cur.localCheckpoint(eager=False)
     # Degrees over the FINAL surviving edge set == degrees within the
     # final survivor-induced subgraph (the r14 post-loop re-measure).
     return cur.groupBy(F.col("src").alias("doc_id")).agg(

@@ -16,6 +16,7 @@ from __future__ import annotations
 import io
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegralType
 
 
 class QueryExecutor:
@@ -40,6 +41,11 @@ class QueryExecutor:
         df = self.execute_query_df(sql, db_name)
         buf = io.StringIO()
         pdf = df.toPandas()
+        # An integral column holding a NULL reaches pandas as float64;
+        # nullable Int64 renders 3 (as Athena does), not 3.0.
+        for i, field in enumerate(df.schema.fields):
+            if isinstance(field.dataType, IntegralType):
+                pdf.isetitem(i, pdf.iloc[:, i].astype("Int64"))
         pdf.to_csv(buf, index=False)
         buf.seek(0)
         return buf

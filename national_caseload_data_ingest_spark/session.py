@@ -16,6 +16,16 @@ Design notes (SURVEY.md §7 step 1):
   Spark engine and the DuckDB correctness oracle.
 - **Arrow on** — every Pandas-UDF boundary (LLM ops) moves columnar batches,
   not pickled rows.
+- **Engine worker daemon** — every Python task calls
+  ``importlib.invalidate_caches()``, and CPython 3.11's ``zipimporter``
+  then re-parses the directory of ``pyspark.zip`` about 16 times, about
+  0.2 worker CPU-s a task whatever its data.  ``get_spark`` launches the
+  workers through ``pydaemon``, which skips the re-read while an archive
+  is unchanged.  The daemon starts with the SparkContext, so this is a
+  launch-time setting that ``configure_runtime`` cannot apply: a session
+  built elsewhere keeps the stock daemon and its per-task cost.
+  Executors must be able to import this package, as the operators'
+  pickled UDFs already require.
 """
 
 from __future__ import annotations
@@ -141,6 +151,11 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that reads an unchanged
+        # pyspark.zip once, not on every task (module docstring).
+        .config(
+            "spark.python.daemon.module", "national_caseload_data_ingest_spark.pydaemon"
+        )
         # Run-once analytics on a single JVM: C1-only JIT (TieredStopAtLevel=1)
         # compiles generated code immediately instead of interpreting while
         # waiting for C2 profile thresholds, and -XX:-DontCompileHugeMethods

@@ -108,6 +108,34 @@ def test_kcore_extra_rounds_idempotent(spark):
     assert r3 == r8 == [(0, 2), (1, 2), (2, 2)]
 
 
+def _plan_windows(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(line.lstrip(" +-:").startswith("Window ") for line in plan.splitlines())
+
+
+def test_kcore_plan_depth_is_bounded(spark):
+    """Up to KCORE_PLAN_ROUNDS rounds are one plan of two windows a round;
+    past it, a checkpoint every KCORE_PLAN_ROUNDS rounds keeps the plan
+    that deep, with the fixpoint result unchanged."""
+    from national_caseload_data_ingest_spark.operators.graph import (
+        KCORE_PLAN_ROUNDS,
+        KCORE_ROUNDS,
+        kcore,
+    )
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 5)],
+        "doc_a long, doc_b long",
+    )
+    assert KCORE_ROUNDS <= KCORE_PLAN_ROUNDS
+    assert _plan_windows(kcore(edges, k=2)) == 2 * KCORE_ROUNDS
+    full = kcore(edges, k=2, rounds=KCORE_PLAN_ROUNDS)
+    assert _plan_windows(full) == 2 * KCORE_PLAN_ROUNDS
+    deep = kcore(edges, k=2, rounds=2 * KCORE_PLAN_ROUNDS + 3)
+    assert _plan_windows(deep) == 2 * 3
+    assert sorted(map(tuple, deep.collect())) == [(0, 2), (1, 2), (2, 2)]
+
+
 def test_kcore_empty_core(spark):
     from national_caseload_data_ingest_spark.operators.graph import kcore
 

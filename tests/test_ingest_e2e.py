@@ -322,13 +322,13 @@ def test_query_executor_csv_contract(loaded):
     before = spark.catalog.currentDatabase()
     try:
         text = QueryExecutor(spark, "ncd_test").execute_query(sql).getvalue()
-        # A BIGINT column holding a NULL reaches pandas as float64, so its
-        # values render as 3.0 rather than Athena's 3.
+        # A BIGINT column holding a NULL renders its values as Athena
+        # does: 3, not pandas' float64 3.0.
         assert text.splitlines() == [
             "case_id,district,total_defendants,filed_date,redacted_district",
-            "CASE000001,FLM,3.0,2017-01-01,False",
+            "CASE000001,FLM,3,2017-01-01,False",
             "CASE000002,,,,True",
-            "CASE000004,,7.0,1999-08-15,False",
+            "CASE000004,,7,1999-08-15,False",
             "CASE0000Ø3,CT,,,False",
         ]
         other_db = QueryExecutor(spark, "default")

@@ -6,14 +6,14 @@ ETL pipeline that parses DOJ National Caseload Data fixed-width dumps and
 delegates all querying to AWS Athena.  This package re-expresses both surfaces
 Spark-first:
 
-- **Ingest surface** (``sources/``): fixed-width parsing, README schema
-  extraction, hyphen-ruler inference, redaction shadow columns, Hive-style
-  district partitioning — as narrow, declarative DataFrame transformations.
-- **Query surface** (``operators/``, ``functions/``, ``streaming/``): the
-  relational operator set the reference reached through Athena, exposed via
-  ``spark.sql`` / DataFrame API, plus LLM-data-pipeline operators (dedup,
-  similarity search, text analysis, multimodal columns) designed for 100 TB
-  scale.
+- **Ingest surface** (``session``, ``sources/`` → ``catalog``, ``query``):
+  fixed-width parsing, README schema extraction, hyphen-ruler inference,
+  redaction shadow columns, Hive-style district partitioning — as narrow,
+  declarative DataFrame transformations.
+- **Operator catalogue** (``operators/``, ``functions/``, ``streaming/``),
+  built on the ingest surface, which imports none of it: the relational and
+  LLM-data-pipeline operators (dedup, similarity search, text analysis),
+  with their own table loader (``registry``) and layout writers (``layout``).
 
 Nothing here is a port of the reference's code; file:line citations in
 docstrings identify *behavior* being reproduced, per SURVEY.md §2.

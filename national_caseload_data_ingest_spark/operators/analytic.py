@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from national_caseload_data_ingest_spark.functions import dec
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 
 @query(

@@ -41,8 +41,11 @@ from national_caseload_data_ingest_spark.operators.multimodal import (
     _synthesize_wav_payloads,
     wav_decode,
 )
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 # Autocorrelation lags: report r(1..4)/r(0); pitch = argmax r(l) over
 # PITCH_MIN..PITCH_MAX.  Keep literals in sync with the oracle SQL.

@@ -31,8 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 # End-of-word sentinel (Sennrich et al. §3.2) — lets merges distinguish
 # word-final from word-internal contexts and makes decode unambiguous.

@@ -57,18 +57,19 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 HASH_DIM = 64  # hashed token buckets; weight idx HASH_DIM is the bias
+# A constant, not an option: each epoch inlines HASH_DIM+1 weight literals,
+# which Catalyst codegens fine at 65 but risks blowing up at thousands.
 EPOCHS = 10
 LEARNING_RATE = 2.0
 TRAIN_MOD = 8  # doc_id % 10 < 8 trains, the rest is scored
 
 
-def featurize(docs: DataFrame, dim: int = HASH_DIM) -> DataFrame:
+def featurize(docs: DataFrame) -> DataFrame:
     """``documents`` → sparse ``(doc_id, idx, val)`` hashed-BoW counts,
-    plus a constant bias feature at ``idx = dim`` (which doubles as the
+    plus a constant bias feature at ``idx = HASH_DIM`` (which doubles as the
     Σresid accumulator during training — see module docstring).  All
     codegen: split, explode, xxhash64, one aggregate."""
     toks = docs.select(
@@ -78,10 +79,10 @@ def featurize(docs: DataFrame, dim: int = HASH_DIM) -> DataFrame:
         ).alias("tok"),
     )
     counts = toks.groupBy(
-        "doc_id", F.pmod(F.xxhash64("tok"), F.lit(dim)).cast("int").alias("idx")
+        "doc_id", F.pmod(F.xxhash64("tok"), F.lit(HASH_DIM)).cast("int").alias("idx")
     ).agg(F.count(F.lit(1)).cast("double").alias("val"))
     bias = docs.select(
-        "doc_id", F.lit(dim).alias("idx"), F.lit(1.0).alias("val")
+        "doc_id", F.lit(HASH_DIM).alias("idx"), F.lit(1.0).alias("val")
     )
     return counts.unionAll(bias)
 
@@ -99,13 +100,12 @@ def _margins(features: DataFrame, weights: DataFrame) -> DataFrame:
 def train_logreg(
     features: DataFrame,
     labels: DataFrame,
-    dim: int = HASH_DIM,
     epochs: int = EPOCHS,
     lr: float = LEARNING_RATE,
 ) -> list[float]:
     """Standardized full-batch logistic GD over the sparse feature
     relation.  ``labels``: (doc_id, y∈{0,1}).  Returns the final
-    (dim+1) weight vector folded back to RAW-count space (via
+    (HASH_DIM+1) weight vector folded back to RAW-count space (via
     :func:`score_weights`), ready for :func:`score_logreg`."""
     from pyspark.sql import Window  # noqa: PLC0415
 
@@ -131,16 +131,16 @@ def train_logreg(
         )
         .collect()
     }
-    n = stats[dim][0]  # bias val ≡ 1.0 → s1 = doc count
-    mu = [0.0] * dim
-    sd = [1.0] * dim
-    for i in range(dim):
+    n = stats[HASH_DIM][0]  # bias val ≡ 1.0 → s1 = doc count
+    mu = [0.0] * HASH_DIM
+    sd = [1.0] * HASH_DIM
+    for i in range(HASH_DIM):
         s1, s2 = stats.get(i, (0.0, 0.0))
         mu[i] = s1 / n
         var = s2 / n - mu[i] * mu[i]
         sd[i] = math.sqrt(var) if var > 0 else 1.0
 
-    w = [0.0] * (dim + 1)  # standardized-space weights; w[dim] = bias
+    w = [0.0] * (HASH_DIM + 1)  # standardized-space weights; w[HASH_DIM] = bias
     w_doc = Window.partitionBy("doc_id")
     for _ in range(epochs):
         # fold standardization into a LITERAL weight array + one scalar
@@ -152,10 +152,7 @@ def train_logreg(
         # per-feature gradient sums run in ONE pass over the sparse
         # relation — jobs/epoch: one aggregate chain, one tiny
         # 65-key exchange, no joins.
-        folded = [w[i] / sd[i] for i in range(dim)] + [
-            w[dim] - sum(w[i] * mu[i] / sd[i] for i in range(dim))
-        ]
-        warr = F.array(*[F.lit(float(x)) for x in folded])
+        warr = F.array(*[F.lit(float(x)) for x in score_weights(w, mu, sd)])
         margin = F.sum(
             F.col("val") * F.element_at(warr, F.col("idx") + 1)
         ).over(w_doc)
@@ -169,10 +166,10 @@ def train_logreg(
             .collect()
         )
         s_map = {r["idx"]: r["s"] for r in s_rows}
-        big_r = s_map.get(dim, 0.0)  # Σ resid, via the bias-feature row
+        big_r = s_map.get(HASH_DIM, 0.0)  # Σ resid, via the bias-feature row
         grad = [
             (s_map.get(i, 0.0) - mu[i] * big_r) / (sd[i] * n)
-            for i in range(dim)
+            for i in range(HASH_DIM)
         ] + [big_r / n]
         w = [wi - lr * gi for wi, gi in zip(w, grad)]
     return score_weights(w, mu, sd)

@@ -43,8 +43,7 @@ from national_caseload_data_ingest_spark.operators.dedup import (
     word_ngram_postings,
     ws_token_count,
 )
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 # neardup_clusters uses a lower threshold than the pairwise queries (0.2)
 # so the test corpus produces multi-node, multi-hop components (37 pairs,

@@ -29,8 +29,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 # MinHash parameters: 32 permutations in 8 bands of 4 → catches Jaccard
 # ≳ (1/8)^(1/4) ≈ 0.6 with high probability.

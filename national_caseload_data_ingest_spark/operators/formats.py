@@ -30,8 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from national_caseload_data_ingest_spark.functions import dsum
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 
 def _fused(*kernels):

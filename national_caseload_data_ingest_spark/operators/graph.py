@@ -42,8 +42,7 @@ from national_caseload_data_ingest_spark.operators.curation import (
     CLUSTER_THRESHOLD,
 )
 from national_caseload_data_ingest_spark.operators.dedup import neardup_pairs
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 PAGERANK_ITERS = 10
 PAGERANK_DAMPING = 0.85  # keep the 0.85 / 0.15 literals in sync with the SQL

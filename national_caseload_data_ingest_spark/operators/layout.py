@@ -1,5 +1,7 @@
 """Data-layout and routing operators: Z-order clustering keys and
-Highest-Random-Weight (rendezvous) shard assignment.
+Highest-Random-Weight (rendezvous) shard assignment, plus the table
+layout writers and maintenance calls built on :class:`SparkCatalog`
+(bucketed, range-clustered and Z-ordered writes, compaction, ANALYZE).
 
 Both are the *deterministic key computations* behind physical data
 management at scale — Z-ordering is what lakehouse ``OPTIMIZE ZORDER BY``
@@ -21,11 +23,15 @@ multi-dimensional clustering and stateless routing.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.catalog import PARTITION_COLUMN, SparkCatalog
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 Z_BITS = 16  # bits per dimension interleaved into the 32-bit z-value
 Z_DIM_MASK = (1 << Z_BITS) - 1
@@ -37,15 +43,15 @@ Z_DIM_MASK = (1 << Z_BITS) - 1
 Z_BUCKET_SHIFT = 22
 
 
-def _z_terms(col: str, offset: int) -> str:
+def _z_terms(col: str, offset: int, bits: int = Z_BITS, dims: int = 2) -> str:
     """SQL for one dimension's interleave: bit i of ``col`` lands at
-    position 2*i + offset.  Shared verbatim by both engines.  The bit is
+    position dims*i + offset.  Shared verbatim by both engines.  The bit is
     MULTIPLIED by a precomputed 64-bit literal rather than left-shifted:
     ``1 << 31`` overflows DuckDB's INT32 literal arithmetic, while a
     big integer literal parses as BIGINT in both engines."""
     return " + ".join(
-        f"((({col} >> {i}) & 1) * {1 << (2 * i + offset)})"
-        for i in range(Z_BITS)
+        f"((({col} >> {i}) & 1) * {1 << (dims * i + offset)})"
+        for i in range(bits)
     )
 
 
@@ -99,6 +105,288 @@ def zorder_orders_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_Z_EXPR).cast("bigint").alias("zvalue"),
         F.expr(f"({_Z_EXPR}) >> {Z_BUCKET_SHIFT}").cast("int").alias("zbucket"),
     )
+
+
+# ---------------------------------------------------------------------------
+# table layout writers and maintenance over a SparkCatalog
+# ---------------------------------------------------------------------------
+
+ZORDER_BITS = 8  # write_zordered's bucket resolution per dimension (256)
+
+
+def write_bucketed(
+    cat: SparkCatalog,
+    table_name: str,
+    df: DataFrame,
+    bucket_cols: list[str],
+    n_buckets: int,
+    sort_cols: list[str] | None = None,
+) -> str:
+    """Write a hash-bucketed (optionally per-bucket-sorted) managed
+    table for co-located joins.
+
+    At 100 TB the recurring fact-fact joins (orders⋈lineitem on
+    orderkey, postings⋈postings on doc key) dominate shuffle volume.
+    Bucketing both sides on the join key with the same bucket count
+    turns every such join into a zero-Exchange sort-merge join — the
+    shuffle is paid ONCE at write time and amortized over every
+    subsequent query (``tests/test_bucketing.py`` asserts the
+    no-Exchange plan).  ``sort_cols`` additionally pre-sorts within
+    buckets so single-file buckets skip the SMJ sort.
+
+    Bucketed tables must be *managed* (bucket metadata lives in the
+    catalog, not the directory layout), so this bypasses
+    ``table_location`` — Spark places data under its warehouse dir.
+    Returns the fully-qualified table name.
+    """
+    cat.create_db()
+    fq = f"{cat.db_name}.{table_name}"
+    cat.executed_sql.append(
+        f"-- write_bucketed {fq} ({n_buckets} buckets on "
+        f"{', '.join(bucket_cols)})"
+    )
+    writer = (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(n_buckets, *bucket_cols)
+    )
+    if sort_cols:
+        writer = writer.sortBy(*sort_cols)
+    writer.saveAsTable(fq)
+    return fq
+
+
+def write_range_clustered(
+    cat: SparkCatalog,
+    table_name: str,
+    df: DataFrame,
+    cluster_cols: list[str],
+    n_files: int,
+) -> str:
+    """Write a table range-partitioned + sorted on ``cluster_cols`` so
+    parquet row-group min/max statistics become selective.
+
+    ``repartitionByRange`` gives each output file a disjoint key range
+    and ``sortWithinPartitions`` orders rows inside it; a filter on the
+    cluster column then skips whole files/row-groups at scan time (the
+    poor man's Z-order for 1-D predicates — the highest-leverage layout
+    choice for 100 TB time/keyrange-filtered scans).  One range shuffle
+    at write time; ``tests/test_layout.py`` asserts the skipping.
+    """
+    cat.create_db()
+    location = cat.table_location(table_name)
+    (
+        df.repartitionByRange(n_files, *cluster_cols)
+        .sortWithinPartitions(*cluster_cols)
+        .write.mode("overwrite")
+        .parquet(location)
+    )
+    cat.executed_sql.append(
+        f"-- write_range_clustered {table_name} on {', '.join(cluster_cols)}"
+    )
+    return location
+
+
+def write_zordered(
+    cat: SparkCatalog,
+    table_name: str,
+    df: DataFrame,
+    zorder_cols: list[str],
+    n_files: int,
+) -> str:
+    """Write a table clustered on the Z-order (Morton) curve over two
+    or more numeric columns, so parquet min/max statistics stay
+    selective for predicates on EVERY clustered column — the
+    multi-dimensional generalization of :func:`write_range_clustered`
+    (whose linear sort serves only its leading column: a filter on the
+    second column alone prunes nothing).
+
+    Mechanics: each column is bucketized to ``2**ZORDER_BITS`` uniform
+    buckets between its min and max (one small aggregate collects the
+    bounds — a scalar model, not a data collect; skew-robust
+    bucketization would substitute ``approxQuantile`` boundaries, same
+    contract), the bucket ids are bit-interleaved into a Morton key by
+    :func:`_z_terms` (pure JVM shift/mask SQL), and the rows are
+    range-partitioned + sorted on that key.  Locality of the curve means each
+    output file covers a compact hyper-rectangle-ish region, so a box
+    predicate intersects few files.  One range shuffle at write time —
+    identical write cost to the linear clustering; ``tests/
+    test_layout.py`` asserts per-file pruning on both dimensions."""
+    if len(zorder_cols) < 2:
+        raise ValueError(
+            "write_zordered needs >= 2 columns; use write_range_clustered "
+            "for 1-D clustering"
+        )
+    cat.create_db()
+    location = cat.table_location(table_name)
+
+    bounds = df.agg(
+        *[
+            f(c).cast("double").alias(f"{n}_{c}")
+            for c in zorder_cols
+            for n, f in (("min", F.min), ("max", F.max))
+        ]
+    ).first()
+
+    nb = 1 << ZORDER_BITS
+    buckets = []
+    for c in zorder_cols:
+        lo, hi = bounds[f"min_{c}"], bounds[f"max_{c}"]
+        if lo is None or hi is None or lo == hi:
+            buckets.append(F.lit(0))
+            continue
+        # width_bucket → 1..nb inside [lo, hi]; clamp to 0..nb-1
+        b = F.width_bucket(F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(nb))
+        buckets.append(F.least(F.greatest(b - 1, F.lit(0)), F.lit(nb - 1)))
+
+    # the same Morton interleave as zorder_orders_layout, over n dims
+    cols = {f"__b{j}": b.cast("bigint") for j, b in enumerate(buckets)}
+    zval = " + ".join(
+        f"({_z_terms(name, j, ZORDER_BITS, len(cols))})"
+        for j, name in enumerate(cols)
+    )
+
+    (
+        df.withColumns(cols)
+        .withColumn("__z", F.expr(zval))
+        .repartitionByRange(n_files, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z", *cols)
+        .write.mode("overwrite")
+        .parquet(location)
+    )
+    cat.executed_sql.append(
+        f"-- write_zordered {table_name} on {', '.join(zorder_cols)}"
+    )
+    return location
+
+
+def _recover_compaction(path: str) -> None:
+    """Roll a crashed compaction of ``path`` forward or back.
+
+    Invariants of :func:`_compact_dir`'s rename sequence make every
+    crash state recoverable: the ``.precompact`` backup only ever
+    exists AFTER the ``.compacting`` staging dir was fully written, so
+    (backup ∧ ¬live) ⇒ staging is complete and promotable; a staging
+    dir next to a live dir is a pre-rename leftover and simply
+    discarded.
+    """
+    backup, staging = path + ".precompact", path + ".compacting"
+    if not os.path.exists(path):
+        if os.path.exists(staging) and os.path.exists(backup):
+            os.rename(staging, path)  # crash between the two renames
+        elif os.path.exists(backup):
+            os.rename(backup, path)  # defensive: restore the original
+    if os.path.exists(path):
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(backup, ignore_errors=True)
+
+
+def _compact_dir(cat: SparkCatalog, local: str, target_file_bytes: int) -> int:
+    """Rewrite one leaf data directory into ~``target_file_bytes``
+    files via stage → backup-rename → promote-rename.  A crash at any
+    point is repaired by :func:`_recover_compaction` on the next call
+    (the backup is only taken after staging is fully written, so no
+    crash state loses data)."""
+    local = local.rstrip("/")
+    on_disk = sum(
+        os.path.getsize(f)
+        for f in glob.glob(os.path.join(local, "**", "*.parquet"), recursive=True)
+    )
+    n_files = max(1, -(-on_disk // target_file_bytes))
+    df = cat.spark.read.parquet(local)
+    staging = local + ".compacting"
+    backup = local + ".precompact"
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(backup, ignore_errors=True)
+    df.repartition(n_files).write.mode("overwrite").parquet(staging)
+    os.rename(local, backup)
+    os.rename(staging, local)
+    shutil.rmtree(backup, ignore_errors=True)
+    return n_files
+
+
+def compact_table(
+    cat: SparkCatalog,
+    table_name: str,
+    target_file_bytes: int = 128 * 1024 * 1024,
+) -> int:
+    """Rewrite a path-backed table into ~``target_file_bytes`` files.
+
+    Long-lived tables accumulate small files (per-micro-batch sinks,
+    per-district incremental loads); scans then pay per-file open cost
+    and lose row-group locality.  Sizing from the CURRENT on-disk bytes
+    (not row counts) keeps the heuristic format-aware.  Returns the new
+    total file count.
+
+    Hive-partitioned tables are compacted PER PARTITION DIRECTORY: each
+    ``filename_district=X/`` leaf is rewritten in place, so the layout
+    a registered ``PARTITIONED BY`` table depends on survives intact
+    (reading the table root would absorb the partition column into the
+    data and flatten the directory tree — silent corruption).
+
+    Local ``file://`` warehouses only: the swap uses POSIX renames.  A
+    distributed object-store compaction (s3a/HDFS) needs a
+    commit-protocol rewrite job, which this deliberately is not — it
+    raises instead of pretending.
+    """
+    location = cat.table_location(table_name)
+    if "://" in location and not location.startswith("file://"):
+        raise ValueError(
+            f"compact_table only supports local file:// warehouses, got "
+            f"{location!r}: object stores need a distributed rewrite "
+            "with a commit protocol, not POSIX renames."
+        )
+    local = location.removeprefix("file://")
+    _recover_compaction(local)
+    # Recover crashed PER-PARTITION compactions before enumerating
+    # partitions: a leftover `filename_district=CT.precompact` dir
+    # must be rolled back/forward into `filename_district=CT`, never
+    # treated as a partition named 'CT.precompact'.
+    for leftover in glob.glob(
+        os.path.join(local, f"{PARTITION_COLUMN}=*.precompact")
+    ) + glob.glob(os.path.join(local, f"{PARTITION_COLUMN}=*.compacting")):
+        base = leftover.rsplit(".", 1)[0]
+        _recover_compaction(base)
+    part_dirs = sorted(
+        d
+        for d in glob.glob(os.path.join(local, f"{PARTITION_COLUMN}=*"))
+        if os.path.isdir(d)
+        and not d.endswith((".precompact", ".compacting"))
+    )
+    total = 0
+    for target in part_dirs or [local]:
+        _recover_compaction(target)
+        total += _compact_dir(cat, target, target_file_bytes)
+    cat.spark.catalog.clearCache()
+    cat.executed_sql.append(
+        f"-- compact_table {table_name} -> {total} files"
+        + (f" across {len(part_dirs)} partitions" if part_dirs else "")
+    )
+    return total
+
+
+def analyze_table(
+    cat: SparkCatalog, table_name: str, columns: list[str] | None = None
+) -> None:
+    """``ANALYZE TABLE … COMPUTE STATISTICS [FOR COLUMNS …]`` — collect
+    table row count/size and per-column NDV/min/max/null counts into
+    the catalog, so the cost-based optimizer's join reordering and
+    broadcast decisions run on measured statistics rather than
+    file-size guesses.  At 100 TB this is the difference between a
+    dimension correctly broadcast and a fact-sized build side: size
+    estimates from compressed parquet footers routinely misjudge the
+    decompressed build side, while ANALYZE records true row counts.
+    Re-run after large loads or compaction; the scan is one pass and
+    parallelizes like any aggregate."""
+    fq = f"{cat.db_name}.{table_name}"
+    cat.execute_query(f"ANALYZE TABLE {fq} COMPUTE STATISTICS")
+    if columns:
+        cat.execute_query(
+            f"ANALYZE TABLE {fq} COMPUTE STATISTICS FOR COLUMNS "
+            + ", ".join(columns)
+        )
+
 
 
 HRW_SHARDS = 8  # shard count for the rendezvous router

@@ -31,8 +31,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 LINK_MAX_DIST = 2  # max edits for a candidate link
 MAX_BLOCK = 5000  # in-plan guard: largest tolerable blocking-key group

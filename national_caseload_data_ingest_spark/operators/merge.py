@@ -21,7 +21,7 @@ nested CASE resolves each row to an action tag in clause order, a
 filter drops deletes, and each output column is a CASE over the tag.
 That is the same join-shaped core as Delta Lake's merge; at 100 TB the
 join is the only shuffle, it bucket-co-locates like any equi join
-(``catalog.write_bucketed``), and partition-pruning the target by the
+(``layout.write_bucketed``), and partition-pruning the target by the
 source's key range (when the feed is narrow) happens before the join
 via Catalyst as usual.  The cardinality guard is a source-keyed count
 window inside the same plan, not a second pass over data rows.
@@ -39,8 +39,7 @@ import operator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 # clause: (action, condition | None, assignments | None)
 #   matched:               ("update", cond, {col: Column}) | ("delete", cond, None)

@@ -32,8 +32,11 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 # public header tables, ISO/IEC 11172-3 §2.4.2.3 / 13818-3 §2.4.2.3
 # (kbps; index 0 = free format, 15 = reserved)

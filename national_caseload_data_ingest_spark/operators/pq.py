@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 from national_caseload_data_ingest_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
@@ -65,7 +65,6 @@ from national_caseload_data_ingest_spark.operators.similarity import (
     _normalized,
     _vec_matrix,
 )
-from national_caseload_data_ingest_spark.session import load_tables
 
 PQ_BLOCKS = 8  # M: sub-blocks per vector (d=64 → 8 dims per block)
 # K: centroids per block codebook — 256 is the canonical production shape

@@ -32,8 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 NUMERIC_TYPES = {"bigint", "int", "integer", "smallint", "double", "float"}
 
@@ -144,7 +147,7 @@ def join_size_stats(
 ) -> tuple[DataFrame, DataFrame]:
     """Per-bucket join statistics: rows and exact distinct keys for each
     side, bucketed by ``pmod(key, n_buckets)`` — the relation a
-    cost-based optimizer keeps per column (``catalog.analyze_table``
+    cost-based optimizer keeps per column (``layout.analyze_table``
     collects the table-grain version; this is the histogram-grain
     twin)."""
     la = left.groupBy(

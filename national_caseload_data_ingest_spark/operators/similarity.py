@@ -39,8 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from national_caseload_data_ingest_spark.operators.dedup import cosine
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
 TOP_K = 10

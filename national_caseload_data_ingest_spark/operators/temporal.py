@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 
 @query(
@@ -210,7 +209,7 @@ def upsert_latest(
     combines map-side, which at 100 TB is the difference between a
     shuffle of winners and a full sort of history.  For recurring merges
     the shuffle disappears entirely when both sides are bucketed on the
-    key (``catalog.write_bucketed``)."""
+    key (``layout.write_bucketed``)."""
     tagged = base.withColumn("__chg", F.lit(0)).unionByName(
         changes.withColumn("__chg", F.lit(1))
     )

@@ -51,8 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 _LOG = "_log"
 

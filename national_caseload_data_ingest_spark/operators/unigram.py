@@ -56,8 +56,11 @@ from pyspark.sql import functions as F
 from national_caseload_data_ingest_spark.operators.bpe import (
     word_frequencies,
 )
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 PIECE_MAX = 6  # longest candidate piece (chars)
 SEED_MAX = 8192  # initial vocabulary size (plus single chars)

@@ -30,8 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 # rotations: 2 (scheme), 7 (subdomain), 13 (domain), 3 (tld), 9 (port),
 # 3 (path depth via 1+doc_id%3), 10 (segment names), 5 (query), 11

@@ -45,8 +45,11 @@ from national_caseload_data_ingest_spark.operators.bpe import (
     MAX_VOCAB_WORDS,
     word_frequencies,
 )
-from national_caseload_data_ingest_spark.operators.registry import fan_out, query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    fan_out,
+    load_tables,
+    query,
+)
 
 UNK = "[UNK]"
 CONT = "##"  # continuation-piece marker (non-initial position)

@@ -31,7 +31,6 @@ Design notes (SURVEY.md §7 step 1):
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import SparkSession
 
@@ -39,10 +38,9 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # The engine's SQL confs: get_spark builds every session with them, and
 # they are all runtime-settable, so configure_runtime also applies them to
-# a session the caller (e.g. a benchmark harness) built.  Asserted ONCE per
-# session (load_tables memoises the application) — callers must not
-# mutate these keys mid-session; exploratory spark.conf.set on other keys
-# is fine.
+# a session the caller (e.g. a benchmark harness) built, once per session
+# when the operators' registry.load_tables first runs.  Callers must not
+# mutate these keys mid-session; spark.conf.set on other keys is fine.
 RUNTIME_CONFS = {
     # Null-on-cast-failure parity with the reference's converter wrapper.
     "spark.sql.ansi.enabled": "false",
@@ -94,13 +92,12 @@ RUNTIME_CONFS = {
     # driver-side construction with the shim off), so the documented
     # opt-out pays across the whole catalog.  Driver-side only: the
     # physical plan and every emitted row are identical.  pyspark
-    # caches the flag on the FIRST wrapped API call in the process, so
-    # a harness-owned session benefits only if load_tables runs before
-    # its first Column op — queries all start with load_tables, so it
-    # does.
+    # caches the flag on the FIRST wrapped API call in the process, so a
+    # harness-owned session benefits only if registry.load_tables (which
+    # every operator query starts with) runs before its first Column op.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # The events table stores TIMESTAMP(NANOS) which the vectorized
-    # reader rejects; read as int64 nanos and convert in load_tables.
+    # reader rejects; read as int64 nanos, converted by registry.load_tables.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise
     # infer TIMESTAMP_NTZ (Spark 4 default), which half the timestamp
@@ -188,162 +185,3 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
         except Exception:  # noqa: BLE001 — a locked conf is non-fatal
             pass
     return spark
-
-
-# Footers sniffed per directory: enough to catch a mixed-era rewrite
-# (old nanos parts + new micros parts) without touching every footer of a
-# 100k-file table.
-_SNIFF_FOOTERS = 8
-
-
-def parquet_nanos_columns(path: str) -> list[str]:
-    """Columns stored as INT64 TIMESTAMP(NANOS) in the parquet footer.
-
-    These are the only columns ``spark.sql.legacy.parquet.nanosAsLong``
-    surfaces as raw int64 (needing an explicit ns→µs conversion).  The
-    check reads the PHYSICAL parquet type, not the arrow view: legacy
-    INT96 timestamps (Spark's own default writer output) also present as
-    ``timestamp[ns]`` through ``pyarrow.read_schema`` but are decoded
-    natively by Spark as TimestampType — treating them as nanos-as-long
-    breaks the read (physicalType INT96, logicalType bigint mismatch).
-
-    Sniff contract (round-6 advice): a directory with NO part files warns
-    (the caller is about to default to the micros read path on an empty
-    table — correct, but worth a trace when the table fills in later); up
-    to ``_SNIFF_FOOTERS`` footers across the listing are checked, not just
-    the first; and footers that DISAGREE on the nanos column set raise —
-    a mixed-encoding directory cannot be read with one per-column
-    conversion rule and must be rewritten to a single encoding first."""
-    import glob  # noqa: PLC0415
-    import warnings  # noqa: PLC0415
-
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    def nanos_cols(one_file: str) -> tuple[str, ...]:
-        sch = pq.ParquetFile(one_file).schema
-        return tuple(
-            sch.column(i).path
-            for i in range(len(sch))
-            if sch.column(i).physical_type == "INT64"
-            and "nanoseconds" in str(sch.column(i).logical_type).lower()
-            # leaf paths only: a nested field would surface as "a.b",
-            # which withColumn cannot convert in place — flat schemas
-            # only (all engine tables are flat; a nested nanos field
-            # should fail loudly at read time rather than be silently
-            # half-converted here)
-            and "." not in sch.column(i).path
-        )
-
-    if not os.path.isdir(path):
-        return list(nanos_cols(path))
-    parts = sorted(
-        glob.glob(os.path.join(path, "*.parquet"))
-    ) or sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    if not parts:
-        warnings.warn(
-            f"parquet_nanos_columns({path!r}): no part files found — "
-            "defaulting to the micros read path (no ns→µs conversion); "
-            "re-sniff once the table has data",
-            stacklevel=2,
-        )
-        return []
-    # First + last + evenly spread footers: one writer produces one
-    # schema, so disagreement means the directory mixes writer eras.
-    # First/last are ALWAYS sampled (a rewrite appends at one end of the
-    # name-sorted listing); the remaining budget spreads over the middle.
-    n = len(parts)
-    idx = {0, n - 1}
-    for k in range(1, _SNIFF_FOOTERS - 1):
-        idx.add(k * (n - 1) // (_SNIFF_FOOTERS - 1))
-    sniffed = {parts[i]: nanos_cols(parts[i]) for i in sorted(idx)}
-    distinct = set(sniffed.values())
-    if len(distinct) > 1:
-        detail = ", ".join(f"{os.path.basename(f)}→{list(c)}" for f, c in sniffed.items())
-        raise ValueError(
-            f"mixed parquet timestamp encodings under {path!r}: part files "
-            f"disagree on INT64-nanos columns ({detail}).  One per-column "
-            "conversion rule cannot read this directory — rewrite it to a "
-            "single encoding (e.g. read each era separately and UNION)."
-        )
-    return list(distinct.pop())
-
-
-# Per-session memo of loaded tables.  ``spark.read.parquet`` costs
-# ~100-150 ms of driver time per call (a py4j round trip plus JVM-side
-# footer/schema resolution) and every registered query starts by loading
-# its tables — at 200 catalog entries that fixed cost was the dominant
-# term on sub-second queries and drifted the bench ~10%/round as the
-# catalog grew.  DataFrames are immutable plans over an immutable file
-# listing, so a (session, sf_dir, table) memo is semantics-preserving;
-# keyed weakly so a stopped session's entries are collectable.  Temp-view
-# registration is NOT skipped when a different sf_dir last claimed the
-# name (callers switch scale factors within one session).
-_TABLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def clear_table_cache(spark: SparkSession | None = None) -> None:
-    """Invalidate the per-session table/view memo (one session, or all).
-
-    The memo assumes ``sf_dir`` directories are immutable; a caller
-    that rewrites one in place (test-data regeneration, a
-    stage-and-rename compaction) must call this so the next
-    ``load_tables`` re-resolves the file listing instead of returning a
-    plan over deleted files."""
-    if spark is None:
-        _TABLE_CACHE.clear()
-    else:
-        _TABLE_CACHE.pop(spark, None)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
-    """Read the driver-generated parquet tables and register temp views.
-
-    Returns ``{name: DataFrame}``.  With no ``names``, loads every table that
-    exists under ``sf_dir`` (TESTDATA.md inventory).  Reads are memoised per
-    (session, directory, table): the parquet relation is resolved once and
-    the same DataFrame (an immutable logical plan) is returned on every
-    subsequent call, eliminating the per-query driver-side read cost.
-
-    Contract notes (the price of the memo, each an explicit trade):
-    * directories are assumed immutable — rewriting one in place
-      requires :func:`clear_table_cache` first;
-    * temp-view registration is skipped when this function last
-      registered the same (name, sf_dir), so a caller that DROPs or
-      replaces one of these views does not get it repaired on the next
-      call (nothing in the repo does; external callers re-registering
-      views should use different names or clear the cache).
-    """
-    cache = _TABLE_CACHE.get(spark)
-    if cache is None:
-        # One py4j round trip per runtime SQLConf; they are engine-owned
-        # constants, so one application per session suffices.
-        configure_runtime(spark)
-        cache = _TABLE_CACHE[spark] = {"tables": {}, "views": {}}
-    all_names = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-    out = {}
-    for name in names or all_names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not names and not os.path.exists(path):
-            continue
-        df = cache["tables"].get((sf_dir, name))
-        if df is None:
-            df = spark.read.parquet(path)
-            # nanosAsLong surfaces TIMESTAMP(NANOS) columns as int64
-            # nanoseconds; convert to microsecond timestamps (truncation —
-            # identical to what DuckDB/Arrow do when narrowing ns → µs).
-            from pyspark.sql import functions as F
-
-            for c in parquet_nanos_columns(path):
-                # integer `div` — float division loses precision above 2^53
-                df = df.withColumn(
-                    c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-                )
-            cache["tables"][(sf_dir, name)] = df
-        if cache["views"].get(name) != sf_dir:
-            df.createOrReplaceTempView(name)
-            cache["views"][name] = sf_dir
-        out[name] = df
-    return out

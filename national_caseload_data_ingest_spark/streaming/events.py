@@ -20,15 +20,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from national_caseload_data_ingest_spark.functions import dec
-from national_caseload_data_ingest_spark.operators.registry import query
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import (
+    load_tables,
+    parquet_nanos_columns,
+    query,
+)
 
 def _events_schema(ts_is_nanos: bool) -> T.StructType:
     """Reader schema for the events stream.  ``ts`` depends on the parquet
     encoding: TIMESTAMP(MICROS) reads natively as ``TimestampType``, while
     TIMESTAMP(NANOS) — which the vectorized reader rejects — surfaces as
     int64 nanoseconds under ``spark.sql.legacy.parquet.nanosAsLong`` and is
-    converted after the scan (same convention as ``session.load_tables``)."""
+    converted after the scan (same convention as ``registry.load_tables``)."""
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -41,71 +44,17 @@ def _events_schema(ts_is_nanos: bool) -> T.StructType:
     )
 
 
-def _ts_is_nanos(events_path: str) -> bool:
-    """Footer-sniff whether ``ts`` is stored as TIMESTAMP(NANOS).
-
-    FileStreamSource takes a fixed user schema, so the unit must be decided
-    up front from existing footers — the same physical-type check the
-    batch path does per-column via ``session.parquet_nanos_columns`` (the
-    driver's testdata has shipped both ``timestamp[us]`` and
-    ``timestamp[ns]`` encodings across rounds, and Spark-written files use
-    legacy INT96 — the reader must survive all three).  An empty directory
-    (stream started before any file lands) defaults to µs, the driver's
-    current encoding, with a logged warning since nanos files landing later
-    would fail loudly at runtime.  Every discovered footer is sniffed (they
-    are metadata-only reads); a directory mixing µs and ns encodings cannot
-    be read under one fixed schema, so it raises here rather than silently
-    mis-decoding whichever unit lost the sniff.
-    """
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import warnings  # noqa: PLC0415
-
-    from national_caseload_data_ingest_spark.session import (  # noqa: PLC0415
-        parquet_nanos_columns,
-    )
-
-    if os.path.isfile(events_path):
-        found = [events_path]
-    else:
-        found = sorted(
-            glob.glob(os.path.join(events_path, "*.parquet"))
-        ) or sorted(
-            glob.glob(os.path.join(events_path, "**", "*.parquet"), recursive=True)
-        )
-        if not found:
-            warnings.warn(
-                f"_ts_is_nanos: no parquet files under {events_path}; "
-                "defaulting ts to TIMESTAMP(MICROS) — if TIMESTAMP(NANOS) "
-                "files land after the stream starts, the fixed schema will "
-                "fail at runtime",
-                stacklevel=2,
-            )
-            return False
-    if len(found) > 64:
-        # Footer reads are metadata-only but driver-serial: on a directory
-        # of many thousands of parts, sniff a spread sample instead of all
-        # (mixed encodings come from whole writer generations, not single
-        # stray parts, so a stride sample catches them).
-        stride = len(found) // 64
-        found = found[::stride][:64] + [found[-1]]
-    units = {"ts" in parquet_nanos_columns(f) for f in found}
-    if len(units) > 1:
-        raise ValueError(
-            f"mixed ts parquet encodings under {events_path}: both "
-            "TIMESTAMP(NANOS) and non-nanos files present; a file stream "
-            "needs one fixed schema — rewrite the stragglers to one unit"
-        )
-    return units.pop()
-
-
 def _events_stream(spark: SparkSession, events_path: str) -> DataFrame:
     """File-stream source over a directory; a single-file path (the test
     layout's ``events.parquet``) is handled via its parent + a glob filter,
     since FileStreamSource requires a directory."""
     import os  # noqa: PLC0415
 
-    ts_is_nanos = _ts_is_nanos(events_path)
+    # FileStreamSource takes a fixed schema, so the ``ts`` unit is decided
+    # up front by the batch path's physical footer sniff (µs, ns and INT96
+    # files all occur); an empty directory defaults to µs with a warning,
+    # and a directory mixing µs and ns footers raises.
+    ts_is_nanos = "ts" in parquet_nanos_columns(events_path)
     reader = spark.readStream.schema(_events_schema(ts_is_nanos)).option(
         "maxFilesPerTrigger", 4
     )

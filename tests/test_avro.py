@@ -134,7 +134,7 @@ def test_property_roundtrip(rows, codec):
 def test_distributed_file_roundtrip(spark, tmp_path):
     """write_avro (one container per partition) → binaryFile read →
     decode kernel must reproduce the table exactly."""
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", "documents")[
         "documents"
@@ -497,7 +497,7 @@ def test_distributed_nested_roundtrip(spark, tmp_path):
     """write_avro/read_avro with struct + array<struct> + map columns."""
     from pyspark.sql import functions as F
 
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     o = load_tables(spark, "/root/testdata/sf0.001", "orders")["orders"]
     nested = o.select(

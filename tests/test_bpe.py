@@ -13,7 +13,7 @@ from national_caseload_data_ingest_spark.operators.bpe import (
     bpe_train,
     word_frequencies,
 )
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 
 SF = "/root/testdata/sf0.001"
 

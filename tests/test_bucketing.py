@@ -8,8 +8,9 @@ join shuffles are paid once at ingest."""
 import pytest
 
 from national_caseload_data_ingest_spark.catalog import local_catalog
+from national_caseload_data_ingest_spark.operators import layout
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.plans import physical_plan
-from national_caseload_data_ingest_spark.session import load_tables
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,11 +21,11 @@ def bucketed_tables(spark, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("bkt")), db_name="bkt_db"
     )
     t = load_tables(spark, SF, "orders", "lineitem")
-    cat.write_bucketed(
-        "orders_b", t["orders"], ["o_orderkey"], 4, sort_cols=["o_orderkey"]
+    layout.write_bucketed(
+        cat, "orders_b", t["orders"], ["o_orderkey"], 4, sort_cols=["o_orderkey"]
     )
-    cat.write_bucketed(
-        "lineitem_b", t["lineitem"], ["l_orderkey"], 4, sort_cols=["l_orderkey"]
+    layout.write_bucketed(
+        cat, "lineitem_b", t["lineitem"], ["l_orderkey"], 4, sort_cols=["l_orderkey"]
     )
     yield cat
     spark.sql("DROP DATABASE IF EXISTS bkt_db CASCADE")

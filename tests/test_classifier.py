@@ -20,7 +20,7 @@ from national_caseload_data_ingest_spark.operators.classifier import (
     score_logreg,
     train_logreg,
 )
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 
 SF001 = "/root/testdata/sf0.001"
 

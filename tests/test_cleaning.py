@@ -122,7 +122,7 @@ def test_line_dedup_exactly_one_survivor_per_line(spark):
         DEDUP_LINE_WORDS,
         _lines_expr,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     import pyspark.sql.functions as F
 
     d = load_tables(spark, SF_DIR, "documents")["documents"]

@@ -16,7 +16,7 @@ from national_caseload_data_ingest_spark.operators.incremental import (
     merge_states,
     partial_agg,
 )
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 
 SF001 = "/root/testdata/sf0.001"
 

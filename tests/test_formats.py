@@ -11,7 +11,7 @@ from national_caseload_data_ingest_spark.operators.formats import (
     json_roundtrip_documents,
     orc_roundtrip_lineitem,
 )
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 
 SF = "/root/testdata/sf0.001"
 

@@ -80,7 +80,7 @@ def test_correlations_match_numpy(spark):
     from national_caseload_data_ingest_spark.operators.governance import (
         lineitem_correlations,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.001"
     got = {

@@ -158,7 +158,7 @@ def test_link_prediction_matches_networkx_style_recompute(spark):
     from national_caseload_data_ingest_spark.operators.dedup import (
         neardup_pairs,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.01"
     d = load_tables(spark, sf, "documents")["documents"]

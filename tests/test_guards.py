@@ -15,8 +15,8 @@ from national_caseload_data_ingest_spark.operators.dedup import (
     minhash_band_candidates,
     word_bigram_postings,
 )
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.operators.skew import salted_join
-from national_caseload_data_ingest_spark.session import load_tables
 
 SF = "/root/testdata/sf0.001"
 

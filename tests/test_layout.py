@@ -7,7 +7,8 @@ import os
 import pyarrow.parquet as pq
 
 from national_caseload_data_ingest_spark.catalog import local_catalog
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators import layout
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +19,7 @@ def test_range_clustered_files_have_disjoint_ranges(spark, tmp_path):
     round-trips losslessly."""
     cat = local_catalog(spark, str(tmp_path), db_name="layout_db")
     orders = load_tables(spark, SF, "orders")["orders"]
-    loc = cat.write_range_clustered("orders_rc", orders, ["o_orderkey"], 8)
+    loc = layout.write_range_clustered(cat, "orders_rc", orders, ["o_orderkey"], 8)
     local = loc.removeprefix("file://")
     ranges = []
     for f in sorted(glob.glob(os.path.join(local, "*.parquet"))):
@@ -44,7 +45,7 @@ def test_compact_table_reduces_files_losslessly(spark, tmp_path):
     before = len(glob.glob(os.path.join(local, "*.parquet")))
     assert before >= 24
     want = sorted(tuple(r) for r in spark.read.parquet(loc).collect())
-    n_files = cat.compact_table("orders_many")
+    n_files = layout.compact_table(cat, "orders_many")
     after = len(glob.glob(os.path.join(local, "*.parquet")))
     assert after == n_files < before
     got = sorted(tuple(r) for r in spark.read.parquet(loc).collect())
@@ -76,7 +77,7 @@ def test_compact_table_preserves_hive_partitions(spark, tmp_path):
     want = sorted(tuple(r) for r in spark.read.parquet(loc).collect())
     before = len(glob.glob(os.path.join(local, "*", "*.parquet")))
 
-    n_files = cat.compact_table("orders_part")
+    n_files = layout.compact_table(cat, "orders_part")
 
     part_dirs_after = sorted(
         os.path.basename(d)
@@ -100,7 +101,7 @@ def test_compact_table_raises_on_remote_warehouse(spark):
     import pytest
 
     with pytest.raises(ValueError, match="file://"):
-        cat.compact_table("anything")
+        layout.compact_table(cat, "anything")
 
 
 def test_compact_table_recovers_partitioned_crash(spark, tmp_path):
@@ -127,7 +128,7 @@ def test_compact_table_recovers_partitioned_crash(spark, tmp_path):
     os.rename(ct, ct + ".precompact")
     assert not os.path.exists(ct)
 
-    cat.compact_table("orders_pcrash")
+    layout.compact_table(cat, "orders_pcrash")
 
     dirs = sorted(
         os.path.basename(d)
@@ -155,7 +156,7 @@ def test_compact_table_recovers_from_crash_between_renames(spark, tmp_path):
     os.rename(local, local + ".precompact")
     assert not os.path.exists(local)
 
-    cat.compact_table("orders_crash")
+    layout.compact_table(cat, "orders_crash")
 
     assert os.path.exists(local)
     assert not os.path.exists(local + ".compacting")
@@ -191,11 +192,11 @@ def test_zordered_files_prune_on_both_dimensions(spark, tmp_path):
     cols = ["l_orderkey", "l_partkey"]
     n_files = 16
 
-    zloc = cat.write_zordered("lineitem_z", li, cols, n_files)
+    zloc = layout.write_zordered(cat, "lineitem_z", li, cols, n_files)
     zranges = _file_ranges(zloc.removeprefix("file://"), cols)
     assert len(zranges) >= n_files // 2
 
-    lloc = cat.write_range_clustered("lineitem_lin", li, cols, n_files)
+    lloc = layout.write_range_clustered(cat, "lineitem_lin", li, cols, n_files)
     lranges = _file_ranges(lloc.removeprefix("file://"), cols)
 
     bounds = {c: (min(r[c][0] for r in zranges), max(r[c][1] for r in zranges))
@@ -225,7 +226,7 @@ def test_zordered_rejects_single_column(spark, tmp_path):
     li = load_tables(spark, SF, "lineitem")["lineitem"]
     import pytest
     with pytest.raises(ValueError, match="write_range_clustered"):
-        cat.write_zordered("li_bad", li, ["l_orderkey"], 4)
+        layout.write_zordered(cat, "li_bad", li, ["l_orderkey"], 4)
 
 
 def test_analyze_table_records_catalog_stats(spark, tmp_path):
@@ -234,7 +235,7 @@ def test_analyze_table_records_catalog_stats(spark, tmp_path):
     cat = local_catalog(spark, str(tmp_path), db_name="layout_db")
     nation = load_tables(spark, SF, "nation")["nation"]
     cat.write_table("nation_stats", nation, partitioned=False)
-    cat.analyze_table("nation_stats", columns=["n_nationkey", "n_regionkey"])
+    layout.analyze_table(cat, "nation_stats", columns=["n_nationkey", "n_regionkey"])
 
     desc = {
         r["col_name"]: r["data_type"]

@@ -66,7 +66,7 @@ def test_ann_finds_planted_near_duplicates(spark):
     Random-corpus recall is ≈ the scanned fraction by design — so the test
     plants true neighbors instead of asserting recall on noise."""
     from national_caseload_data_ingest_spark.operators.similarity import lsh_topk
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]
@@ -93,7 +93,7 @@ def test_ann_finds_planted_near_duplicates(spark):
 def test_dot_product_matches_duckdb_bitwise(spark, catalog):
     """The determinism contract behind every cosine oracle."""
     from national_caseload_data_ingest_spark.operators.dedup import dot
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]
@@ -213,7 +213,7 @@ def test_brute_topk_survives_small_batches(spark):
     from national_caseload_data_ingest_spark.operators.similarity import (
         brute_topk,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"].filter(
@@ -241,7 +241,7 @@ def test_ivf_neardup_precision_and_recall(spark):
     from national_caseload_data_ingest_spark.operators.similarity import (
         ivf_neardup,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]
@@ -269,7 +269,7 @@ def test_ivf_neardup_finds_planted_duplicates(spark):
     from national_caseload_data_ingest_spark.operators.similarity import (
         ivf_neardup,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]
@@ -328,7 +328,7 @@ def test_ivf_finds_planted_near_duplicates(spark):
     (identical distance vectors → identical argmin), so IVF must rank it
     first with cosine 1."""
     from national_caseload_data_ingest_spark.operators.similarity import ivf_topk
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]
@@ -358,7 +358,7 @@ def test_ivf_assignment_is_narrow(spark):
         ivf_assign,
         ivf_train,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from national_caseload_data_ingest_spark.plans import (
         join_kinds,
         shuffle_exchanges,
@@ -497,7 +497,7 @@ def test_semdedup_planted_clones_one_survivor(spark):
     dropped (exact duplicates share their argmin cell — blocking recall
     1.0 on true clones) and its group representative is a smaller id."""
     from national_caseload_data_ingest_spark.operators.similarity import semdedup
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]
@@ -521,7 +521,7 @@ def test_semdedup_precision_and_group_invariants(spark):
         cosine_pairs_in_blocks,
     )
     from national_caseload_data_ingest_spark.operators.similarity import semdedup
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     from pyspark.sql import functions as F
 
     e = load_tables(spark, SF, "embeddings")["embeddings"]

@@ -76,7 +76,7 @@ def test_reads_driver_written_testdata():
 
 def test_reads_spark_written_file(spark, tmp_path):
     """Spark's parquet writer (the other reference implementation)."""
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", "documents")[
         "documents"].select("doc_id", "text", "lang", "n_chars")

@@ -242,7 +242,7 @@ def test_simhash_wide_banding_plan_no_cartesian(spark):
     """chunks=8 combination banding must stay an equality bucket join —
     56 bands must not degrade the join into a cartesian."""
     from national_caseload_data_ingest_spark.operators.dedup import simhash_pairs
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     d = load_tables(spark, SF, "documents")["documents"]
     kinds = join_kinds(simhash_pairs(d, chunks=8, max_bucket_docs=None))
@@ -254,7 +254,7 @@ def test_salted_join_shuffles_on_key_and_salt(spark):
     spreads over n_salts tasks — and row multiplicity must match the
     plain join exactly."""
     from national_caseload_data_ingest_spark.operators.skew import salted_join
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     t = load_tables(spark, SF, "lineitem", "orders")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

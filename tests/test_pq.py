@@ -20,11 +20,11 @@ from national_caseload_data_ingest_spark.operators.pq import (
     pq_topk,
     pq_train,
 )
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.operators.similarity import (
     _normalized,
     brute_topk,
 )
-from national_caseload_data_ingest_spark.session import load_tables
 
 SF = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"

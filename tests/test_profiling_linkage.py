@@ -195,7 +195,7 @@ def test_frequent_part_pairs_matches_python_reference(spark):
         BASKET_TOP_K,
         frequent_part_pairs,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.001"
     got = [
@@ -253,7 +253,7 @@ def test_leakage_split_lsh_mode_matches_exact_on_test_corpus(spark):
         leakage_safe_split,
         neardup_cluster_assignments,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.001"
     d = load_tables(spark, sf, "documents")["documents"]

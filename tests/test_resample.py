@@ -12,6 +12,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.operators.resample import (
     B_REPLICAS,
     LCG_MOD,
@@ -21,7 +22,6 @@ from national_caseload_data_ingest_spark.operators.resample import (
     bootstrap_order_value_ci,
     poisson_multiplicity,
 )
-from national_caseload_data_ingest_spark.session import load_tables
 
 SF = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"

@@ -169,7 +169,7 @@ def test_heavy_hitter_query_is_exact(spark):
         heavy_hitter_tokens,
     )
     import pyspark.sql.functions as F
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     got = {r.tok: r.c for r in heavy_hitter_tokens(spark, SF_DIR).collect()}
     d = load_tables(spark, SF_DIR, "documents")["documents"]
@@ -270,7 +270,7 @@ def test_golden_records_survivorship(spark):
     from national_caseload_data_ingest_spark.operators.linkage import (
         golden_customer_records,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     out = {r.cluster_id: r for r in golden_customer_records(spark, SF_DIR).collect()}
     assert out
@@ -297,7 +297,7 @@ def test_golden_records_richest_name(spark):
         golden_customer_records,
         link_customer_records,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     out = [r for r in golden_customer_records(spark, SF_DIR).collect() if r.n_members > 1]
     cust = {
@@ -419,7 +419,7 @@ def test_source_kl_nonnegative_and_entropy_bounds(spark):
     from national_caseload_data_ingest_spark.operators.text import (
         source_token_drift,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
     import pyspark.sql.functions as F
 
     rows = source_token_drift(spark, SF_DIR).collect()
@@ -443,7 +443,7 @@ def test_source_kl_matches_scipy_style_recompute(spark):
     from national_caseload_data_ingest_spark.operators.text import (
         source_token_drift,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     got = {r.source: r for r in source_token_drift(spark, SF_DIR).collect()}
     docs = load_tables(spark, SF_DIR, "documents")["documents"].collect()
@@ -479,7 +479,7 @@ def test_bloom_screen_prunes_but_never_drops(spark):
         bloom_bitmap,
         bloom_might_contain,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     t = load_tables(spark, "/root/testdata/sf0.01", "lineitem", "orders")
     surv = t["orders"].filter(
@@ -509,7 +509,7 @@ def test_bloom_pruned_join_equals_plain_join(spark):
     from national_caseload_data_ingest_spark.operators.skew import (
         bloom_pruned_join,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     t = load_tables(spark, SF_DIR, "lineitem", "orders")
     surv = t["orders"].filter(
@@ -543,7 +543,7 @@ def test_matryoshka_overlap_counts_are_set_intersections(spark):
         MRL_PREFIX_DIM,
         brute_topk,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.01"
     e = load_tables(spark, sf, "embeddings")["embeddings"]

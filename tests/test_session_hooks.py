@@ -31,6 +31,44 @@ def test_tracer_instruments_every_entry_point():
     assert proc.returncode == 0, proc.stderr
 
 
+MOVED_FROM_SESSION = [
+    "load_tables", "parquet_nanos_columns", "_TABLE_CACHE", "_SNIFF_FOOTERS",
+]
+MOVED_FROM_CATALOG = [
+    "write_bucketed", "write_range_clustered", "write_zordered", "ZORDER_BITS",
+    "compact_table", "_compact_dir", "_recover_compaction", "analyze_table",
+]
+
+
+def test_paper_surface_imports_no_operator_layer():
+    """The ingest and its SQL stand alone: importing them loads none of the
+    operator catalogue, and the operators' table loader and layout writers
+    live under ``operators/``, not in ``session`` or ``catalog``."""
+    code = (
+        "import sys\n"
+        "from national_caseload_data_ingest_spark import catalog, query, session\n"
+        "from national_caseload_data_ingest_spark.sources import (\n"
+        "    data_zip, fixedwidth, globals, listing, schemas)\n"
+        "pkg = 'national_caseload_data_ingest_spark.'\n"
+        "layers = ('operators', 'streaming', 'functions', 'plans')\n"
+        "layers = tuple(pkg + m for m in layers)\n"
+        "loaded = sorted(m for m in sys.modules if m.startswith(layers))\n"
+        "assert not loaded, loaded\n"
+        f"left = [n for n in {MOVED_FROM_SESSION} if hasattr(session, n)]\n"
+        f"left += [n for n in {MOVED_FROM_CATALOG} if hasattr(catalog, n)\n"
+        "         or hasattr(catalog.SparkCatalog, n)]\n"
+        "assert not left, left\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+
+
 def test_get_spark_session_carries_every_runtime_conf(spark):
     got = {k: spark.conf.get(k) for k in RUNTIME_CONFS}
     assert got == RUNTIME_CONFS

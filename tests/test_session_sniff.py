@@ -1,4 +1,4 @@
-"""Parquet timestamp-unit sniffing (``session.parquet_nanos_columns``).
+"""Parquet timestamp-unit sniffing (``operators.registry.parquet_nanos_columns``).
 
 The testdata's events table changed physical encoding across driver rounds
 (INT64 nanos → INT64 micros; Spark's own writer emits INT96), so the
@@ -15,7 +15,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from national_caseload_data_ingest_spark.session import parquet_nanos_columns
+from national_caseload_data_ingest_spark.operators.registry import (
+    parquet_nanos_columns,
+)
 
 TS = [datetime.datetime(2024, 1, 1, 12, 0, 0), datetime.datetime(2024, 6, 1)]
 
@@ -85,7 +87,7 @@ def test_mixed_encoding_not_detectable_beyond_sniff_budget_is_documented(
     single odd file hiding between sampled indices can evade it — this
     test pins the BUDGET semantics rather than pretending full coverage:
     first and last files are always checked."""
-    from national_caseload_data_ingest_spark.session import _SNIFF_FOOTERS
+    from national_caseload_data_ingest_spark.operators.registry import _SNIFF_FOOTERS
 
     d = tmp_path / "events.parquet"
     d.mkdir()

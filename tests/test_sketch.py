@@ -104,7 +104,7 @@ def test_mrl_certificate_holds_against_exact_ranks(spark):
     from national_caseload_data_ingest_spark.operators.sketch import (
         mrl_price_quantiles,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.01"
     vals = sorted(
@@ -141,7 +141,7 @@ def test_mrl_sketch_bounded_and_mergeable(spark):
         mrl_quantiles,
         mrl_sketch,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.01"
     li = load_tables(spark, sf, "lineitem")["lineitem"]

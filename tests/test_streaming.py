@@ -4,7 +4,7 @@ function, different source) — plus watermark/state sanity."""
 
 import pytest
 
-from national_caseload_data_ingest_spark.session import load_tables
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.streaming.events import (
     sessionize,
     sessionize_events_stream,

@@ -165,7 +165,7 @@ def test_conjunctive_search_requires_all_terms(spark):
     from national_caseload_data_ingest_spark.operators.text import (
         SEARCH_TERMS,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.01"
     rows = (
@@ -198,7 +198,7 @@ def test_phrase_search_adjacency_semantics(spark):
     from national_caseload_data_ingest_spark.operators.text import (
         PHRASE_TERMS,
     )
-    from national_caseload_data_ingest_spark.session import load_tables
+    from national_caseload_data_ingest_spark.operators.registry import load_tables
 
     sf = "/root/testdata/sf0.01"
     rows = (

@@ -11,6 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.operators.unigram import (
     EM_ROUNDS,
     PIECE_MAX,
@@ -21,7 +22,6 @@ from national_caseload_data_ingest_spark.operators.unigram import (
     unigram_tokenize_docs,
     viterbi_pieces,
 )
-from national_caseload_data_ingest_spark.session import load_tables
 
 SF = "/root/testdata/sf0.001"
 

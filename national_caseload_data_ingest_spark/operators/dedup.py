@@ -254,6 +254,64 @@ MAX_BLOCK_DOCS = 32_768
 MAX_BLOCK_CELLS = 1 << 28
 
 
+def _jaccard_screen(threshold: float):
+    """Build the exact-Jaccard screen shared by the matmul kernel (one
+    whole block) and the BLAS band tier (one row band of a block):
+    ``screen(m, ids, lo=0, hi=len(m))`` returns the ``(doc_a, doc_b,
+    jaccard >= threshold)`` rows for rows ``lo:hi`` of the 0/1 float32
+    incidence matrix ``m`` against all of ``m``, whose rows belong to the
+    ascending ``ids`` (so the emitted ``i < j`` is ``doc_a < doc_b``).
+
+    Shared-gram counts are computed at most 512 rows at a time into a
+    REUSED buffer, and the (algebraically rearranged) threshold
+    inequality ns/(na+nb-ns) >= t  <=>  ns >= t/(1+t) * (na+nb) is tested
+    directly on the count matrix.  This never materializes the O(n^2)
+    triu index/gather arrays of the textbook formulation — which matters
+    doubly here: allocation-heavy kernels pay first-touch page-fault cost
+    per block on microVM-backed executors (measured 20x on a 2k-doc
+    block).  Counts are 0/1 dot products, exact in float32 while a row
+    has fewer than 2^24 grams (both callers fence that).  The float32
+    screen uses a slightly loosened threshold; survivors (few) get the
+    exact float64 Jaccard, so results are bit-identical to the naive
+    kernel."""
+    tl = max(threshold - 1e-3, 0.0)
+
+    def screen(m, ids, lo=0, hi=None):
+        import numpy as np  # noqa: PLC0415
+        import pandas as pd  # noqa: PLC0415
+
+        n = len(m)
+        hi = n if hi is None else hi
+        sizes = m.sum(axis=1)  # exact integer counts (< 2^24) in float32
+        fac = np.float32(tl / (1.0 + tl))
+        chunk = max(1, min(512, hi - lo))
+        sbuf = np.empty((chunk, n), dtype=np.float32)
+        # seeded empty, so a band with no rows still yields typed columns
+        out_ia, out_ib = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        out_ns = [np.empty(0, np.float32)]
+        for c0 in range(lo, hi, chunk):
+            c1 = min(c0 + chunk, hi)
+            s = np.dot(m[c0:c1], m.T, out=sbuf[: c1 - c0])
+            hits = np.argwhere(s >= fac * (sizes[c0:c1, None] + sizes[None, :]))
+            ia, ib = hits[:, 0] + c0, hits[:, 1]
+            mask = ia < ib
+            ia, ib = ia[mask], ib[mask]
+            out_ia.append(ia)
+            out_ib.append(ib)
+            out_ns.append(s[ia - c0, ib])
+        ia = np.concatenate(out_ia)
+        ib = np.concatenate(out_ib)
+        ns = np.concatenate(out_ns).astype(np.float64)
+        na, nb = sizes[ia].astype(np.float64), sizes[ib].astype(np.float64)
+        jac = ns / (na + nb - ns)
+        keep = jac >= threshold
+        return pd.DataFrame(
+            {"doc_a": ids[ia[keep]], "doc_b": ids[ib[keep]], "jaccard": jac[keep]}
+        )
+
+    return screen
+
+
 def _jaccard_block_kernel(threshold: float, max_docs: int, max_cells: int):
     """Build an ``applyInPandas`` kernel computing all-pairs exact Jaccard
     within one blocking group via a dense incidence matmul.
@@ -263,17 +321,20 @@ def _jaccard_block_kernel(threshold: float, max_docs: int, max_cells: int):
     milliseconds what a posting self-join + pair groupBy does in seconds of
     shuffle.  Counts are exact (float32 accumulates integers exactly below
     2^24; blocks are bounded far under that); the Jaccard division is done
-    in float64 to match DuckDB/Spark double semantics bit-for-bit."""
+    in float64 to match DuckDB/Spark double semantics bit-for-bit
+    (:func:`_jaccard_screen`)."""
+    screen = _jaccard_screen(threshold)
 
     def kernel(pdf):
         import numpy as np  # noqa: PLC0415
         import pandas as pd  # noqa: PLC0415
 
+        # np.unique sorts docs ascending, as the screen requires
         docs, dinv = np.unique(pdf["doc_id"].to_numpy(), return_inverse=True)
         # grams: hash-based factorize, NOT sort-based np.unique — the
         # gram axis is summed over by the matmul, so column order is
         # irrelevant to every count, and factorize measures ~11× faster
-        # on 500k posting strings (0.35 → 0.03 s per heavy block, r14)
+        # on 500k posting strings (0.35 → 0.03 s per heavy block)
         ginv, guniq = pd.factorize(pdf["gram"])
         n = len(docs)
         g = len(guniq)
@@ -296,61 +357,77 @@ def _jaccard_block_kernel(threshold: float, max_docs: int, max_cells: int):
                 "float32 shared-gram counts would no longer be exact. "
                 "Re-block finer."
             )
-        if n < 2:
-            return pd.DataFrame({"doc_a": [], "doc_b": [], "jaccard": []}).astype(
-                {"doc_a": "int64", "doc_b": "int64", "jaccard": "float64"}
-            )
         m = np.zeros((n, g), dtype=np.float32)
         m[dinv, ginv] = 1.0
-        sizes = m.sum(axis=1)  # exact integer counts (< 2^24) in float32
-        # Row-chunked screen: compute shared-gram counts a chunk at a time
-        # into a REUSED buffer and test the (algebraically rearranged)
-        # threshold inequality ns/(na+nb-ns) >= t  <=>  ns >= t/(1+t) *
-        # (na+nb) directly on the count matrix.  This never materializes
-        # the O(n^2) triu index/gather arrays of the textbook formulation —
-        # which matters doubly here: allocation-heavy kernels pay
-        # first-touch page-fault cost per block on microVM-backed
-        # executors (measured 20x on a 2k-doc block).  The float32 screen
-        # uses a slightly loosened threshold; survivors (few) get the
-        # exact float64 Jaccard, so results are bit-identical to the
-        # naive kernel.
-        chunk = max(1, min(512, n))
-        tl = max(threshold - 1e-3, 0.0)
-        fac = np.float32(tl / (1.0 + tl))
-        sbuf = np.empty((chunk, n), dtype=np.float32)
-        out_ia, out_ib, out_ns = [], [], []
-        for c0 in range(0, n, chunk):
-            c1 = min(c0 + chunk, n)
-            s = np.dot(m[c0:c1], m.T, out=sbuf[: c1 - c0])
-            cond = s >= fac * (sizes[c0:c1, None] + sizes[None, :])
-            hits = np.argwhere(cond)
-            if len(hits):
-                ia, ib = hits[:, 0] + c0, hits[:, 1]
-                mask = ia < ib
-                ia, ib = ia[mask], ib[mask]
-                out_ia.append(ia)
-                out_ib.append(ib)
-                out_ns.append(s[ia - c0, ib])
-        if not out_ia:
-            return pd.DataFrame({"doc_a": [], "doc_b": [], "jaccard": []}).astype(
-                {"doc_a": "int64", "doc_b": "int64", "jaccard": "float64"}
-            )
-        ia = np.concatenate(out_ia)
-        ib = np.concatenate(out_ib)
-        ns = np.concatenate(out_ns).astype(np.float64)
-        na, nb = sizes[ia].astype(np.float64), sizes[ib].astype(np.float64)
-        jac = ns / (na + nb - ns)
-        keep = jac >= threshold
-        # np.unique sorts docs ascending and i<j above, so doc_a < doc_b
-        return pd.DataFrame(
-            {
-                "doc_a": docs[ia[keep]],
-                "doc_b": docs[ib[keep]],
-                "jaccard": jac[keep],
-            }
-        )
+        return screen(m, docs)
 
     return kernel
+
+
+def _gram_bits(postings: DataFrame) -> dict[str, int]:
+    """Gram → bit index over the postings' sorted distinct grams (one
+    bounded driver collect; every dense tier's routing caps the count)."""
+    grams = sorted(
+        r["gram"] for r in postings.select("gram").distinct().collect()
+    )
+    return {g: i for i, g in enumerate(grams)}
+
+
+def _pack_bitsets(
+    per_doc: DataFrame,
+    bit_map: dict,
+    block_col: str | None = None,
+    absent_ok: bool = False,
+) -> DataFrame:
+    """Replace ``per_doc``'s ``grams`` array column with ``bits``: each
+    row's grams packed LSB-first (gram bit i sets bit ``i & 7`` of byte
+    ``i >> 3``, the order ``np.unpackbits(bitorder="little")`` reads)
+    into ``ceil(len(map) / 8)`` bytes.  Every other column passes
+    through.  ``bit_map`` is one gram → bit map, or with ``block_col``
+    one such map per value of that column.  A gram missing from its map
+    raises ``KeyError`` unless ``absent_ok`` (a map over part of the
+    vocabulary, whose other grams are dropped)."""
+    from pyspark.sql.types import StructType  # noqa: PLC0415
+
+    bc = per_doc.sparkSession.sparkContext.broadcast(bit_map)
+    schema = StructType(
+        [f for f in per_doc.schema.fields if f.name != "grams"]
+    ).add("bits", "binary")
+
+    def pack(batches):
+        maps = bc.value
+        for pdf in batches:
+            keys = pdf[block_col] if block_col else [None] * len(pdf)
+            bits = []
+            for key, gs in zip(keys, pdf["grams"]):
+                m = maps[key] if block_col else maps
+                if absent_ok:
+                    gs = [x for x in gs if x in m]
+                buf = bytearray((len(m) + 7) // 8)
+                for x in gs:
+                    bit = m[x]
+                    buf[bit >> 3] |= 1 << (bit & 7)
+                bits.append(bytes(buf))
+            yield pdf.drop(columns="grams").assign(bits=bits)
+
+    return per_doc.mapInPandas(pack, schema=schema)
+
+
+def _bitset_matrix(rows: list, nbytes: int):
+    """The collected ``bits`` of ``rows`` as a ``len(rows) × nbytes``
+    uint8 matrix, row i = ``rows[i]``."""
+    import numpy as np  # noqa: PLC0415
+
+    return np.frombuffer(
+        b"".join(bytes(r["bits"]) for r in rows), dtype=np.uint8
+    ).reshape(len(rows), nbytes)
+
+
+def _popcount_table():
+    """Set-bit count of every byte value, uint16 so row sums do not wrap."""
+    import numpy as np  # noqa: PLC0415
+
+    return np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
 
 
 # Dense-vocabulary routing for the blocked verifier: below MIN_WORK the
@@ -413,40 +490,15 @@ def _jaccard_dense_pairs(
     import pandas as pd  # noqa: PLC0415
 
     spark = postings.sparkSession
-    grams = sorted(
-        r["gram"] for r in postings.select("gram").distinct().collect()
-    )
-    gram_bit = {g: i for i, g in enumerate(grams)}
-    nbytes = (len(grams) + 7) // 8
-    bc_bits = spark.sparkContext.broadcast(gram_bit)
+    gram_bit = _gram_bits(postings)
+    nbytes = (len(gram_bit) + 7) // 8
     blk = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in block_cols])
     per_doc = (
         postings.withColumn("__blk", blk)
         .groupBy("doc_id", "__blk")
         .agg(F.collect_set("gram").alias("grams"))
     )
-
-    def pack(batches):
-        m = bc_bits.value
-        for pdf in batches:
-            ids, blks, bits = [], [], []
-            for doc_id, b, gs in zip(
-                pdf["doc_id"], pdf["__blk"], pdf["grams"]
-            ):
-                buf = bytearray(nbytes)
-                for g in gs:
-                    bit = m[g]
-                    buf[bit >> 3] |= 1 << (bit & 7)
-                ids.append(int(doc_id))
-                blks.append(b)
-                bits.append(bytes(buf))
-            yield pd.DataFrame(
-                {"doc_id": ids, "__blk": blks, "bits": bits}
-            )
-
-    bitsets = per_doc.mapInPandas(
-        pack, schema="doc_id bigint, __blk string, bits binary"
-    ).persist()
+    bitsets = _pack_bitsets(per_doc, gram_bit).persist()
     rows = bitsets.collect()  # bounded: D * (G/8 + key) inside the budget
     from collections import Counter  # noqa: PLC0415
 
@@ -459,12 +511,8 @@ def _jaccard_dense_pairs(
     )
     ids_all = np.array([r["doc_id"] for r in rows], dtype=np.int64)
     blk_all = np.array([r["__blk"] for r in rows], dtype=object)
-    mat_all = np.frombuffer(
-        b"".join(bytes(r["bits"]) for r in rows), dtype=np.uint8
-    ).reshape(len(rows), nbytes)
-    pc_table = np.array(
-        [bin(i).count("1") for i in range(256)], dtype=np.uint16
-    )
+    mat_all = _bitset_matrix(rows, nbytes)
+    pc_table = _popcount_table()
     sizes_all = pc_table[mat_all].sum(axis=1, dtype=np.int64)
     bc_mat = spark.sparkContext.broadcast(
         (ids_all, blk_all, mat_all, sizes_all)
@@ -505,7 +553,7 @@ def _jaccard_dense_pairs(
     )
 
 
-# BLAS band tier (r14): flops threshold above which ONE block's sgemm
+# BLAS band tier: flops threshold above which ONE block's sgemm
 # stops being "already fast" on a single task, and the float32
 # incidence-matrix broadcast cap that keeps the tier inside a sane
 # executor footprint (above it the 8×-denser bitset tier takes over,
@@ -526,31 +574,22 @@ def _jaccard_bcast_pairs(
     """Blocked exact Jaccard, BLAS band tier: every block's (bounded)
     float32 incidence matrix is broadcast PACKED and each task computes
     one contiguous ROW BAND of one block's sgemm against that block's
-    full matrix — the same per-pair math as :func:`_jaccard_block_kernel`
+    full matrix — the same per-pair screen as :func:`_jaccard_block_kernel`
     spread over ``defaultParallelism`` tasks instead of one task per
-    block (measured r14: the sf0.1 ppjoin tier-1 block ran its 47 GFLOP
-    product on ONE core for ~3.6 s).
+    block (measured: the sf0.1 ppjoin block ran its 47 GFLOP product on
+    ONE core for ~3.6 s).
 
-    Per-block matrices (r15): the r14 edition built ONE global matrix
-    over the union vocabulary and masked cross-block pairs after the
-    screen, which paid n_total²·g_union flops on multi-block corpora
-    (~10× the useful work on the lang-blocked corpus) — that is why it
-    was fenced to n_blocks == 1.  Each block now gets its own gram axis
-    and its own matrix, so the flops are exactly Σ_b n_b²·g_b (what the
-    per-block kernel pays), bands are dealt per block PROPORTIONAL to
-    its flops, and one straggler block no longer serializes the stage
-    (the graph family's lang-blocked verify ran its 8 GFLOP ``en``
-    block on one core).
+    Each block gets its own gram axis and its own matrix, so the flops
+    are exactly Σ_b n_b²·g_b (what the per-block kernel pays; one matrix
+    over the union vocabulary paid n_total²·g_union, ~10× the useful work
+    on the lang-blocked corpus).  Bands are dealt per block PROPORTIONAL
+    to its flops, so one straggler block does not serialize the stage.
 
-    Bit-identical to the per-block kernel by construction: the gram
-    axis is summed over (its order is irrelevant), shared-gram counts
-    are 0/1 dot products whose partial sums are exact integers in
-    float32 (fenced at 2²⁴ distinct grams per block), the float32
-    screen uses the same loosened-threshold constant and the same
-    ``ns ≥ fac·(na+nb)`` comparison, and survivors get the identical
-    float64 division (equivalence pytest, lang-blocked and single)."""
+    Bit-identical to the per-block kernel by construction: both run
+    :func:`_jaccard_screen`, the gram axis is summed over (its order is
+    irrelevant), and every block is fenced below 2²⁴ distinct grams
+    (equivalence pytest, lang-blocked and single)."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
     spark = postings.sparkSession
     blk = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in block_cols])
@@ -573,44 +612,17 @@ def _jaccard_bcast_pairs(
                 "grams >= 2^24: float32 shared-gram counts would no "
                 "longer be exact. Re-block finer."
             )
-    bc_bits = spark.sparkContext.broadcast(gidx)
     per_doc = blocked.groupBy("doc_id", "__blk").agg(
         F.collect_set("gram").alias("grams")
     )
-
-    def pack(batches):
-        bits_maps = bc_bits.value
-        for pdf in batches:
-            out_ids, out_blks, out_bits = [], [], []
-            for doc_id, b, gs in zip(
-                pdf["doc_id"], pdf["__blk"], pdf["grams"]
-            ):
-                bits_map = bits_maps[b]
-                buf = bytearray((len(bits_map) + 7) // 8)
-                for x in gs:
-                    bit = bits_map[x]
-                    buf[bit >> 3] |= 1 << (bit & 7)
-                out_ids.append(int(doc_id))
-                out_blks.append(b)
-                out_bits.append(bytes(buf))
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "__blk": out_blks, "bits": out_bits}
-            )
-
     # bounded collect of PACKED bitsets (Σ_b n_b·g_b/8 bytes) —
     # collecting the per-doc gram-string arrays instead measured ~65 MB
     # of row-format driver transfer at sf0.1 and ate most of the band
-    # win (r14); each band task unpacks ITS block to float32 once
-    rows = per_doc.mapInPandas(
-        pack, schema="doc_id bigint, __blk string, bits binary"
-    ).collect()
-    empty = pd.DataFrame(
-        {"doc_a": [], "doc_b": [], "jaccard": []}
-    ).astype({"doc_a": "int64", "doc_b": "int64", "jaccard": "float64"})
+    # win; each band task unpacks ITS block to float32 once
+    rows = _pack_bitsets(per_doc, gidx, block_col="__blk").collect()
+    schema = "doc_a bigint, doc_b bigint, jaccard double"
     if len(rows) < 2:
-        return spark.createDataFrame(
-            empty, schema="doc_a bigint, doc_b bigint, jaccard double"
-        )
+        return spark.createDataFrame([], schema=schema)
     by_blk: dict[str, list] = {}
     for r in rows:
         by_blk.setdefault(r["__blk"], []).append(r)
@@ -618,11 +630,10 @@ def _jaccard_bcast_pairs(
     mats: dict[str, tuple] = {}
     for b, rs in by_blk.items():
         g_b = len(gidx.get(b, {}))
-        nbytes = (g_b + 7) // 8
-        # per-block budget fences, same intent as the r14 global assert:
-        # the routing stats were measured in a separate job, so the
-        # ACTUALS re-check both the task footprint (one unpacked block)
-        # and the pair work before anything is broadcast
+        # per-block budget fences: the routing stats were measured in a
+        # separate job, so the ACTUALS re-check both the task footprint
+        # (one unpacked block) and the pair work before anything is
+        # broadcast
         _assert_dense_actuals(
             f"_jaccard_bcast_pairs[{b!r}]", len(rs), 4 * max(g_b, 1),
             work_budget=DENSE_WORK_BUDGET,
@@ -631,10 +642,7 @@ def _jaccard_bcast_pairs(
         total_work += len(rs) * len(rs) * 4 * g_b
         rs.sort(key=lambda r: r["doc_id"])  # block order ⇒ doc_a < doc_b
         ids = np.array([r["doc_id"] for r in rs], dtype=np.int64)
-        packed = np.frombuffer(
-            b"".join(bytes(r["bits"]) for r in rs), dtype=np.uint8
-        ).reshape(len(rs), nbytes)
-        mats[b] = (ids, packed, g_b)
+        mats[b] = (ids, _bitset_matrix(rs, (g_b + 7) // 8), g_b)
     if total_work > DENSE_WORK_BUDGET * DENSE_BUDGET_SLACK:
         raise ValueError(
             f"_jaccard_bcast_pairs: summed pair work {total_work:,} "
@@ -653,64 +661,22 @@ def _jaccard_bcast_pairs(
         tasks.extend((b, i, nb) for i in range(nb))
     bc = spark.sparkContext.broadcast((mats, tasks))
     bands = spark.range(0, len(tasks), 1, len(tasks))
+    screen = _jaccard_screen(threshold)
 
     def kernel(batches):
         b_mats, b_tasks = bc.value
-        tl = max(threshold - 1e-3, 0.0)
-        fac = np.float32(tl / (1.0 + tl))
         for pdf in batches:
             for c in pdf["id"]:
                 b, band, nb = b_tasks[int(c)]
                 ids, packed, g_b = b_mats[b]
                 nn = len(ids)
-                lo, hi = band * nn // nb, (band + 1) * nn // nb
-                if hi <= lo:
-                    yield empty
-                    continue
-                # unpack once per task: LSB-first bit order matches the
-                # packer; float32 counts exact at g_b < 2^24 (fenced)
+                # unpack once per task: LSB-first, the packer's bit order
                 m = np.unpackbits(
                     packed, axis=1, count=g_b, bitorder="little"
                 ).astype(np.float32)
-                sizes = m.sum(axis=1)
-                out_ia, out_ib, out_ns = [], [], []
-                # same 512-row sub-chunking as the per-block kernel so
-                # the score buffer stays bounded
-                for c0 in range(lo, hi, 512):
-                    c1 = min(c0 + 512, hi)
-                    s = np.dot(m[c0:c1], m.T)
-                    cond = s >= fac * (
-                        sizes[c0:c1, None] + sizes[None, :]
-                    )
-                    hits = np.argwhere(cond)
-                    if len(hits):
-                        ia, ib = hits[:, 0] + c0, hits[:, 1]
-                        mask = ia < ib
-                        ia, ib = ia[mask], ib[mask]
-                        out_ia.append(ia)
-                        out_ib.append(ib)
-                        out_ns.append(s[ia - c0, ib])
-                if not out_ia:
-                    yield empty
-                    continue
-                ia = np.concatenate(out_ia)
-                ib = np.concatenate(out_ib)
-                ns = np.concatenate(out_ns).astype(np.float64)
-                na = sizes[ia].astype(np.float64)
-                nb_ = sizes[ib].astype(np.float64)
-                jac = ns / (na + nb_ - ns)
-                keep = jac >= threshold
-                yield pd.DataFrame(
-                    {
-                        "doc_a": ids[ia[keep]],
-                        "doc_b": ids[ib[keep]],
-                        "jaccard": jac[keep],
-                    }
-                )
+                yield screen(m, ids, band * nn // nb, (band + 1) * nn // nb)
 
-    return bands.mapInPandas(
-        kernel, schema="doc_a bigint, doc_b bigint, jaccard double"
-    )
+    return bands.mapInPandas(kernel, schema=schema)
 
 
 def jaccard_pairs_in_blocks(
@@ -719,7 +685,7 @@ def jaccard_pairs_in_blocks(
     threshold: float,
     max_block_docs: int = MAX_BLOCK_DOCS,
     max_block_cells: int = MAX_BLOCK_CELLS,
-    stats: tuple[int, int, int] | None = None,
+    stats: tuple[int, int] | None = None,
 ) -> DataFrame:
     """All-pairs exact Jaccard within each block of a blocked posting
     relation → ``(doc_a, doc_b, jaccard ≥ threshold)``.
@@ -732,13 +698,13 @@ def jaccard_pairs_in_blocks(
     finer (buckets of ~10³ docs), keeping every block's n×g matrix in
     single-task memory.
 
-    A skewed block is a *blocking-key* problem, and the kernel now
+    A skewed block is a *blocking-key* problem, and the kernel
     enforces that: any block over ``max_block_docs`` documents or
     ``max_block_cells`` incidence-matrix cells raises immediately with
     routing guidance (switch to the LSH band-bucket candidate generator)
     rather than silently running an unbounded O(n²).
 
-    Dense-vocabulary routing (round 11): when the measured pair work
+    Dense-vocabulary routing: when the measured pair work
     Σ_block n² · G/8 exceeds ``JACCARD_DENSE_MIN_WORK`` and the
     vocabulary fits a bounded bitset, the same exact relation comes
     from :func:`_jaccard_dense_pairs` — one task PER PARTITION instead
@@ -746,51 +712,41 @@ def jaccard_pairs_in_blocks(
     than 5 (measured: the sf1 en block alone held one core for minutes
     under the matmul kernel).
 
-    BLAS band tier (r14, per-block r15): when the MAX single-block
-    matmul work 2·n_b²·g_b exceeds ``JACCARD_BLAS_MIN_FLOPS`` (the
-    measured single-core crossover), the distinct (block, gram) rows fit
+    BLAS band tier: when the MAX single-block matmul work 2·n_b²·g_b
+    exceeds ``JACCARD_BLAS_MIN_FLOPS`` (the measured single-core
+    crossover), the distinct (block, gram) rows fit
     ``HYBRID_STATS_CAP`` and the unpacked block matrices fit
     ``JACCARD_BLAS_BCAST_BUDGET``, the identical relation comes from
     :func:`_jaccard_bcast_pairs` — per-block row-band sgemm across
     ``defaultParallelism`` tasks instead of one task per block, with
     bands dealt proportional to each block's flops.
 
-    ``stats`` (r14): optional pre-measured ``(pair_sum, g_lo, g_hi,
-    n_sum, n_blocks)`` — Σ_block n², the bracketing [max, Σ] of
-    per-block distinct-gram counts, Σ_block n, and the block count.  When provided, the internal
-    stats job AND the postings localCheckpoint are skipped (the kernel
-    is then the only consumer); the caller must hand over
-    cached/cheap-to-read postings.  Stats only pick the physical tier —
-    every tier emits the identical relation."""
+    ``stats``: optional pre-measured ``(n_docs, n_grams)`` of a postings
+    relation that holds ONE block (a constant block key).  When
+    provided, the internal stats job AND the postings localCheckpoint
+    are skipped (the kernel is then the only consumer); the caller must
+    hand over cached/cheap-to-read postings.  Stats only pick the
+    physical tier — every tier emits the identical relation."""
     if stats is not None:
-        # The caller already measured the block stats (e.g. the ppjoin
-        # ladder's one stats pass over a SINGLE constant block, where
-        # pair_sum = n_docs² and g_lo = g_hi = the global distinct-gram
-        # count): skip both the internal stats job AND the
-        # localCheckpoint — with no second consumer of the postings
-        # subtree inside this function, the barrier bought nothing and
-        # cost a full materialization pass (r14 second session).  The
-        # caller must hand over a postings relation that is cached or
-        # otherwise cheap to re-read (ppjoin's is `_shared_postings`'
-        # persisted relation).  Routing is unchanged: every tier emits
-        # the identical relation (equivalence pytest), so stats only
-        # ever select the physical plan.
-        pair_sum, g_lo, g_hi, n_sum, n_blocks = stats
-        # max single-block work, bounded from the bracketing stats:
-        # max_b n_b²·g_b ≤ (Σ_b n_b²)·max_b g_b (exact when one block)
+        # The caller already measured its single block (the ppjoin
+        # ladder's one stats pass): skip both the internal stats job
+        # AND the localCheckpoint — with no second consumer of the
+        # postings subtree inside this function, the barrier bought
+        # nothing and cost a full materialization pass.  One block makes
+        # every aggregate below exact.
+        n_sum, g_lo = stats
+        g_hi, pair_sum = g_lo, n_sum * n_sum
         work_hi = pair_sum * g_lo
     else:
-        # Materialize the postings ONCE (r14): the stats job below and
-        # the final kernel each re-ran the whole upstream tokenize pass
-        # (two MapInPandas executions per call — visible as two
-        # identical subtrees in the before-plans).  LAZY (r15): the
-        # stats job is the first action anyway, so it materializes the
-        # checkpoint as part of its own job — the eager variant paid a
-        # separate materialization job per call (measured 2.1-2.5 →
-        # 1.8-2.0 s on the lang-blocked sf0.1 stage).  It lives only
-        # for this invocation (no cross-run cache).  On a real cluster
-        # prefer reliable checkpoint; at 100 TB one tokenize scan
-        # instead of two is the same trade.
+        # Materialize the postings ONCE: the stats job below and the
+        # final kernel would each re-run the whole upstream tokenize
+        # pass.  LAZY: the stats job is the first action anyway, so it
+        # materializes the checkpoint as part of its own job — an eager
+        # checkpoint paid a separate materialization job per call
+        # (measured 2.1-2.5 → 1.8-2.0 s on the lang-blocked sf0.1
+        # stage).  It lives only for this invocation (no cross-run
+        # cache).  On a real cluster prefer reliable checkpoint; at
+        # 100 TB one tokenize scan instead of two is the same trade.
         postings = postings.localCheckpoint(eager=False)
         # ONE stats job (per-block distinct docs + grams).  The global
         # distinct-gram count is bracketed by [max g_b, Σ g_b]; routing
@@ -808,7 +764,6 @@ def jaccard_pairs_in_blocks(
                 F.max("g").alias("g_lo"),
                 F.sum("g").alias("g_hi"),
                 F.sum("n").alias("n_sum"),
-                F.count(F.lit(1)).alias("n_blocks"),
                 F.max(
                     F.col("n") * F.col("n") * F.col("g")
                 ).alias("work_hi"),
@@ -818,7 +773,6 @@ def jaccard_pairs_in_blocks(
         pair_sum = bstats["pair_sum"] or 0
         g_lo, g_hi = bstats["g_lo"] or 0, bstats["g_hi"] or 0
         n_sum = bstats["n_sum"] or 0
-        n_blocks = bstats["n_blocks"] or 0
         work_hi = bstats["work_hi"] or 0
     if (
         2 * work_hi > JACCARD_BLAS_MIN_FLOPS
@@ -829,18 +783,13 @@ def jaccard_pairs_in_blocks(
         # BLAS band tier: any single block whose sgemm exceeds the
         # measured single-core crossover serializes a task-per-block
         # plan by construction; spread its row bands over every core
-        # instead (bit-identical, see the tier).  r15: the tier now
-        # builds one matrix PER BLOCK (own gram axis, bands dealt
-        # proportional to per-block flops), so the r14 single-block
-        # fence is gone — the global-matrix edition paid n_total²·
-        # g_union flops on multi-block corpora (measured ~10× blowup on
-        # the lang-blocked corpus), the per-block edition pays exactly
-        # Σ n_b²·g_b.  The criterion is MAX-block work, not summed
-        # work: the tier's fixed cost (two driver collects + pack pass
-        # + broadcast, ~0.7-1 s locally) is only worth paying when some
-        # one block would otherwise straggle past the crossover (the
-        # 7.9 GFLOP sf0.1 ``en`` block measured a 0.2 s LOSS through
-        # the tier vs the 47 GFLOP ppjoin block's 1.5-2 s win).
+        # instead (bit-identical, see the tier).  The criterion is
+        # MAX-block work, not summed work: the tier's fixed cost (two
+        # driver collects + pack pass + broadcast, ~0.7-1 s locally) is
+        # only worth paying when some one block would otherwise
+        # straggle past the crossover (the 7.9 GFLOP sf0.1 ``en`` block
+        # measured a 0.2 s LOSS through the tier vs the 47 GFLOP ppjoin
+        # block's 1.5-2 s win).
         return _jaccard_bcast_pairs(postings, block_cols, threshold)
     if (
         g_hi <= DENSE_GRAM_BITS
@@ -1496,7 +1445,7 @@ def training_data_curation(
 
 # Deterministic 256-entry "gear" table (FastCDC-style), seeded by a fixed
 # LCG so the chunking is reproducible across sessions and processes.
-def _gear_table() -> "np.ndarray":
+def _splitmix_gear_table() -> "np.ndarray":
     import numpy as np
 
     vals, x = [], 0x9E3779B97F4A7C15
@@ -1582,7 +1531,7 @@ def cdc_chunk_positions(data: bytes, mask_bits: int = CDC_MASK_BITS,
     return ends
 
 
-_GEAR = _gear_table()
+_GEAR = _splitmix_gear_table()
 
 
 @query("cdc_chunk_stats")  # custom rolling-hash kernel — no SQL oracle;
@@ -1888,18 +1837,16 @@ def ppjoin_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         and JACCARD_DENSE_MIN_WORK < dense_work <= DENSE_WORK_BUDGET
     ):
         # tier 1: the whole corpus fits ONE matmul block (or bitset).
-        # The single constant block's stats are already measured by the
-        # ladder pass above (pair_sum = n_docs², g_lo = g_hi = the
-        # global distinct-gram count), so hand them over instead of
-        # paying a second stats job + checkpoint (r14; postings stay
-        # the `_shared_postings` persisted relation, so the kernel's
-        # read is warm).
+        # The single constant block's docs and distinct grams are already
+        # measured by the ladder pass above, so hand them over instead of
+        # paying a second stats job + checkpoint (postings stay the
+        # `_shared_postings` persisted relation, so the kernel's read is
+        # warm).
         return jaccard_pairs_in_blocks(
             postings.withColumn("__blk", F.lit(0)),
             ["__blk"],
             PPJOIN_THRESHOLD,
-            stats=(n_docs * n_docs, n_grams_total, n_grams_total,
-                   n_docs, 1),
+            stats=(n_docs, n_grams_total),
         )
     if vol <= DIRECT_JOIN_BUDGET:
         # tier 2: posting self-join volume is affordable
@@ -1948,10 +1895,18 @@ def _containment_direct_pairs(postings: DataFrame) -> DataFrame:
             F.first("n_a").alias("n_a"),
         )
     )
-    return inter.filter(
-        F.lit(CONTAINMENT_DEN) * F.col("n_common")
-        >= F.lit(CONTAINMENT_NUM) * F.col("n_a")
-    ).select(
+    return _containment_select(
+        inter.filter(
+            F.lit(CONTAINMENT_DEN) * F.col("n_common")
+            >= F.lit(CONTAINMENT_NUM) * F.col("n_a")
+        )
+    )
+
+
+def _containment_select(pairs: DataFrame) -> DataFrame:
+    """The relation every containment tier emits: ``(doc_a, doc_b,
+    n_common, n_a)`` as bigints plus the float64 ``n_common / n_a``."""
+    return pairs.select(
         "doc_a",
         "doc_b",
         F.col("n_common").cast("bigint").alias("n_common"),
@@ -1979,8 +1934,9 @@ def _containment_dense_pairs(postings: DataFrame) -> DataFrame:
     grams to probe (measured: 68 s at sf0.1 for tier 1 vs ~4 s here).
     Instead each doc's distinct-gram set packs into a G-bit bitset and
     the exact overlap of every ordered pair is a vectorized
-    ``popcount(bits_a AND bits_b)`` against a broadcast matrix — no
-    pair ever becomes a shuffle row; only qualifying pairs are emitted.
+    ``popcount(bits_a AND bits_b)`` against a broadcast matrix
+    (:func:`_containment_popcount_pairs`) — no pair ever becomes a
+    shuffle row; only qualifying pairs are emitted.
 
     Scale honesty: work is D²·(G/8) byte-ops, measured against
     ``DENSE_WORK_BUDGET`` before this tier is chosen.  Real 100 TB
@@ -1990,38 +1946,16 @@ def _containment_dense_pairs(postings: DataFrame) -> DataFrame:
     quadratic output is intrinsic and the bitset matrix (D·G/8 bytes,
     bounded by the same budget) is a justified broadcast."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    num, den = CONTAINMENT_NUM, CONTAINMENT_DEN
-    spark = postings.sparkSession
-    grams = sorted(
-        r["gram"] for r in postings.select("gram").distinct().collect()
-    )
-    gram_bit = {g: i for i, g in enumerate(grams)}
-    nbytes = (len(grams) + 7) // 8
-    bc_bits = spark.sparkContext.broadcast(gram_bit)
-
+    gram_bit = _gram_bits(postings)
+    nbytes = (len(gram_bit) + 7) // 8
+    # n = the doc's distinct-gram count, which is also its bitset's
+    # popcount: the map holds every gram
     per_doc = postings.groupBy("doc_id").agg(
-        F.collect_set("gram").alias("grams")
+        F.first("n_grams").alias("n"),
+        F.collect_set("gram").alias("grams"),
     )
-
-    def pack(batches):
-        m = bc_bits.value
-        for pdf in batches:
-            out_ids, out_bits = [], []
-            for doc_id, gs in zip(pdf["doc_id"], pdf["grams"]):
-                buf = bytearray(nbytes)
-                for g in gs:
-                    bit = m[g]
-                    buf[bit >> 3] |= 1 << (bit & 7)
-                out_ids.append(int(doc_id))
-                out_bits.append(bytes(buf))
-            yield pd.DataFrame({"doc_id": out_ids, "bits": out_bits})
-
-    bitsets = per_doc.mapInPandas(
-        pack, schema="doc_id bigint, bits binary"
-    ).persist()
-
+    bitsets = _pack_bitsets(per_doc, gram_bit).persist()
     # bounded collect: D * (8 + G/8) bytes, inside DENSE_WORK_BUDGET's
     # eligibility check — the same justified-stats-collect pattern as
     # the tier ladder's volume probe
@@ -2031,30 +1965,45 @@ def _containment_dense_pairs(postings: DataFrame) -> DataFrame:
         work_budget=DENSE_WORK_BUDGET,
         bcast_budget=HYBRID_BCAST_BUDGET,
     )
-    ids_b = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    mat_b = np.frombuffer(
-        b"".join(bytes(r["bits"]) for r in rows), dtype=np.uint8
-    ).reshape(len(rows), nbytes)
-    bc_mat = spark.sparkContext.broadcast((ids_b, mat_b))
-    pc_table = np.array(
-        [bin(i).count("1") for i in range(256)], dtype=np.uint16
+    ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
+    bc_mat = postings.sparkSession.sparkContext.broadcast(
+        (ids, _bitset_matrix(rows, nbytes))
     )
+    return _containment_select(_containment_popcount_pairs(bitsets, bc_mat))
 
-    def kernel(batches):
-        ids, mat = bc_mat.value
+
+def _containment_popcount_pairs(bitsets: DataFrame, bc_mat) -> DataFrame:
+    """Every ordered pair ``(a, b ≠ a)`` whose exact overlap
+    ``popcount(bits_a AND bits_b)`` reaches the containment threshold
+    ``den·c ≥ num·n_a``: each ``(doc_id, n, bits)`` row of ``bitsets``
+    screened against the broadcast ``(ids, mat, ...)`` bitset matrix,
+    with ``n`` the doc's distinct-gram count.  Emits ``(doc_a, doc_b,
+    n_common, n_a)``; the dense tier and the hybrid tier's
+    frequent-alone pass share it."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    num, den = CONTAINMENT_NUM, CONTAINMENT_DEN
+    pc_table = _popcount_table()
+
+    def screen(batches):
+        ids, mat = bc_mat.value[:2]
         for pdf in batches:
             da, db, nc, na = [], [], [], []
-            for doc_id, bits in zip(pdf["doc_id"], pdf["bits"]):
+            for doc_id, n_a, bits in zip(
+                pdf["doc_id"], pdf["n"], pdf["bits"]
+            ):
                 a = np.frombuffer(bytes(bits), dtype=np.uint8)
                 common = pc_table[mat & a].sum(axis=1, dtype=np.int64)
-                n_a = int(pc_table[a].sum())
-                mask = (den * common >= num * n_a) & (ids != int(doc_id))
+                mask = (den * common >= num * int(n_a)) & (
+                    ids != int(doc_id)
+                )
                 hits = np.nonzero(mask)[0]
                 if len(hits):
                     da.extend([int(doc_id)] * len(hits))
                     db.extend(ids[hits].tolist())
                     nc.extend(common[hits].tolist())
-                    na.extend([n_a] * len(hits))
+                    na.extend([int(n_a)] * len(hits))
             yield pd.DataFrame(
                 {
                     "doc_a": pd.Series(da, dtype="int64"),
@@ -2064,29 +2013,19 @@ def _containment_dense_pairs(postings: DataFrame) -> DataFrame:
                 }
             )
 
-    out = bitsets.mapInPandas(
-        kernel,
+    return bitsets.mapInPandas(
+        screen,
         schema="doc_a bigint, doc_b bigint, n_common bigint, n_a bigint",
-    )
-    return out.select(
-        "doc_a",
-        "doc_b",
-        "n_common",
-        "n_a",
-        (F.col("n_common").cast("double") / F.col("n_a")).alias(
-            "containment"
-        ),
     )
 
 
 def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
-    """Containment tier 3b (dense corpora, BLAS band edition — r14):
-    the same exact relation as :func:`_containment_dense_pairs`, but
-    the D²-pair overlap count runs as ``defaultParallelism`` row-band
-    sgemms against the incidence matrix instead of a per-doc Python
-    popcount loop on however few tasks the tiny bitset relation
-    coalesced to (the Jaccard band's fix, :func:`_jaccard_bcast_pairs`,
-    asymmetric edition).
+    """Containment tier 3b (dense corpora, BLAS band edition): the same
+    exact relation as :func:`_containment_dense_pairs`, but the D²-pair
+    overlap count runs as ``defaultParallelism`` row-band sgemms against
+    the incidence matrix instead of a per-doc Python popcount loop on
+    however few tasks the tiny bitset relation coalesced to (the Jaccard
+    band's fix, :func:`_jaccard_bcast_pairs`, asymmetric edition).
 
     The driver hand-off is the PACKED bitset matrix (the dense tier's
     own D·G/8-byte form — measured: collecting per-doc gram-string
@@ -2107,36 +2046,14 @@ def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
 
     num, den = CONTAINMENT_NUM, CONTAINMENT_DEN
     spark = postings.sparkSession
-    grams = sorted(
-        r["gram"] for r in postings.select("gram").distinct().collect()
-    )
-    g = len(grams)
-    gram_bit = {x: i for i, x in enumerate(grams)}
-    nbytes = (g + 7) // 8
-    bc_bits = spark.sparkContext.broadcast(gram_bit)
-
+    gram_bit = _gram_bits(postings)
+    g = len(gram_bit)
     per_doc = postings.groupBy("doc_id").agg(
         F.collect_set("gram").alias("grams")
     )
-
-    def pack(batches):
-        bits_map = bc_bits.value
-        for pdf in batches:
-            out_ids, out_bits = [], []
-            for doc_id, gs in zip(pdf["doc_id"], pdf["grams"]):
-                buf = bytearray(nbytes)
-                for x in gs:
-                    bit = bits_map[x]
-                    buf[bit >> 3] |= 1 << (bit & 7)
-                out_ids.append(int(doc_id))
-                out_bits.append(bytes(buf))
-            yield pd.DataFrame({"doc_id": out_ids, "bits": out_bits})
-
     # bounded collect: D * (8 + G/8) bytes — the dense tier's own
     # justified-stats-collect pattern, NOT the float32 matrix
-    rows = per_doc.mapInPandas(
-        pack, schema="doc_id bigint, bits binary"
-    ).collect()
+    rows = _pack_bitsets(per_doc, gram_bit).collect()
     rows.sort(key=lambda r: r["doc_id"])
     n = len(rows)
     _assert_dense_actuals(
@@ -2145,10 +2062,7 @@ def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
         bcast_budget=JACCARD_BLAS_BCAST_BUDGET,
     )
     ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    packed = np.frombuffer(
-        b"".join(bytes(r["bits"]) for r in rows), dtype=np.uint8
-    ).reshape(n, nbytes)
-    bc = spark.sparkContext.broadcast((ids, packed))
+    bc = spark.sparkContext.broadcast((ids, _bitset_matrix(rows, (g + 7) // 8)))
     k = max(1, spark.sparkContext.defaultParallelism)
     bands = spark.range(0, k, 1, k)
     empty = pd.DataFrame(
@@ -2159,8 +2073,8 @@ def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
     def kernel(batches):
         b_ids, b_packed = bc.value
         nn = len(b_ids)
-        # unpack once per task: LSB-first bit order matches the packer
-        # (buf[bit>>3] |= 1 << (bit&7)); float32 counts exact at G < 2^24
+        # unpack once per task: LSB-first bit order matches the packer;
+        # float32 counts exact at G < 2^24
         b_m = np.unpackbits(
             b_packed, axis=1, count=g, bitorder="little"
         ).astype(np.float32)
@@ -2199,18 +2113,11 @@ def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
                     }
                 )
 
-    out = bands.mapInPandas(
-        kernel,
-        schema="doc_a bigint, doc_b bigint, n_common bigint, n_a bigint",
-    )
-    return out.select(
-        "doc_a",
-        "doc_b",
-        "n_common",
-        "n_a",
-        (F.col("n_common").cast("double") / F.col("n_a")).alias(
-            "containment"
-        ),
+    return _containment_select(
+        bands.mapInPandas(
+            kernel,
+            schema="doc_a bigint, doc_b bigint, n_common bigint, n_a bigint",
+        )
     )
 
 
@@ -2272,33 +2179,12 @@ def _containment_hybrid_pairs(
     ):
         return None
 
-    gram_bit = {g: i for i, g in enumerate(freq)}
-    bc_bits = spark.sparkContext.broadcast(gram_bit)
-
     per_doc = postings.groupBy("doc_id").agg(
         F.first("n_grams").alias("n"),
         F.collect_set("gram").alias("grams"),
     )
-
-    def pack(batches):
-        m = bc_bits.value
-        for pdf in batches:
-            ids, ns, bits = [], [], []
-            for doc_id, n, gs in zip(
-                pdf["doc_id"], pdf["n"], pdf["grams"]
-            ):
-                buf = bytearray(nbytes)
-                for g in gs:
-                    bit = m.get(g)
-                    if bit is not None:
-                        buf[bit >> 3] |= 1 << (bit & 7)
-                ids.append(int(doc_id))
-                ns.append(int(n))
-                bits.append(bytes(buf))
-            yield pd.DataFrame({"doc_id": ids, "n": ns, "bits": bits})
-
-    bitsets = per_doc.mapInPandas(
-        pack, schema="doc_id bigint, n bigint, bits binary"
+    bitsets = _pack_bitsets(
+        per_doc, {g: i for i, g in enumerate(freq)}, absent_ok=True
     ).persist()
     rows = bitsets.collect()  # bounded by HYBRID_BCAST_BUDGET
     _assert_dense_actuals(
@@ -2307,16 +2193,10 @@ def _containment_hybrid_pairs(
         bcast_budget=HYBRID_BCAST_BUDGET,
     )
     ids_all = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    n_all = np.array([r["n"] for r in rows], dtype=np.int64)
-    mat_all = np.frombuffer(
-        b"".join(bytes(r["bits"]) for r in rows), dtype=np.uint8
-    ).reshape(len(rows), max(nbytes, 1))
     pos_of = {int(v): i for i, v in enumerate(ids_all)}
-    pc_table = np.array(
-        [bin(i).count("1") for i in range(256)], dtype=np.uint16
-    )
+    pc_table = _popcount_table()
     bc_mat = spark.sparkContext.broadcast(
-        (ids_all, n_all, mat_all, pos_of)
+        (ids_all, _bitset_matrix(rows, nbytes), pos_of)
     )
 
     # rare-tail posting self-join: exact shared-RARE-gram counts for
@@ -2356,7 +2236,7 @@ def _containment_hybrid_pairs(
     )
 
     def add_cfreq(batches):
-        ids, ns, mat, pos = bc_mat.value
+        _ids, mat, pos = bc_mat.value
         for pdf in batches:
             cf = []
             for a, b in zip(pdf["doc_a"], pdf["doc_b"]):
@@ -2385,49 +2265,10 @@ def _containment_hybrid_pairs(
 
     # frequent-alone qualifiers: all-pairs popcount screen; pairs that
     # ALSO share a rare gram are handled above (anti-join dedups)
-    def freq_alone(batches):
-        ids, ns, mat, _pos = bc_mat.value
-        for pdf in batches:
-            da, db, nc, na = [], [], [], []
-            for doc_id, n_a, bits in zip(
-                pdf["doc_id"], pdf["n"], pdf["bits"]
-            ):
-                a = np.frombuffer(bytes(bits), dtype=np.uint8)
-                common = pc_table[mat & a].sum(axis=1, dtype=np.int64)
-                mask = (den * common >= num * int(n_a)) & (
-                    ids != int(doc_id)
-                )
-                hits = np.nonzero(mask)[0]
-                if len(hits):
-                    da.extend([int(doc_id)] * len(hits))
-                    db.extend(ids[hits].tolist())
-                    nc.extend(common[hits].tolist())
-                    na.extend([int(n_a)] * len(hits))
-            yield pd.DataFrame(
-                {
-                    "doc_a": pd.Series(da, dtype="int64"),
-                    "doc_b": pd.Series(db, dtype="int64"),
-                    "n_common": pd.Series(nc, dtype="int64"),
-                    "n_a": pd.Series(na, dtype="int64"),
-                }
-            )
-
-    qual_freq = bitsets.mapInPandas(
-        freq_alone,
-        schema="doc_a bigint, doc_b bigint, n_common bigint, n_a bigint",
-    ).join(rare_pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"],
-           "left_anti")
-
-    out = qual_rare.unionByName(qual_freq)
-    return out.select(
-        "doc_a",
-        "doc_b",
-        "n_common",
-        "n_a",
-        (F.col("n_common").cast("double") / F.col("n_a")).alias(
-            "containment"
-        ),
+    qual_freq = _containment_popcount_pairs(bitsets, bc_mat).join(
+        rare_pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
     )
+    return _containment_select(qual_rare.unionByName(qual_freq))
 
 
 def _containment_prefix_pairs(postings: DataFrame) -> DataFrame:
@@ -2526,16 +2367,10 @@ def _containment_prefix_pairs(postings: DataFrame) -> DataFrame:
             F.first("n_a").alias("n_a"),
         )
     )
-    return verified.filter(
-        F.lit(den) * F.col("n_common") >= F.lit(num) * F.col("n_a")
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.col("n_common").cast("bigint").alias("n_common"),
-        F.col("n_a").cast("bigint").alias("n_a"),
-        (F.col("n_common").cast("double") / F.col("n_a")).alias(
-            "containment"
-        ),
+    return _containment_select(
+        verified.filter(
+            F.lit(den) * F.col("n_common") >= F.lit(num) * F.col("n_a")
+        )
     )
 
 

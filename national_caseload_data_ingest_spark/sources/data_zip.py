@@ -16,10 +16,11 @@ Spark-first re-expression of the reference's ``DataZip`` pipeline
 3. For each normal table (sorted, A25): discover member files
    ``{table}(_{DISTRICT})?.txt`` (``/root/reference/ncd/
    normal_table.py:233-235``), project fixed-width → typed + redaction
-   shadows, attach ``filename_district`` from the *file name* (via
-   ``input_file_name()``, so a single distributed read covers every
-   district), and write through the catalog; ``is_partitioned`` iff every
-   file carried a district suffix (``/root/reference/ncd/normal_table.py:62``).
+   shadows, and write through the catalog.  A table is partitioned iff
+   every file carries a district suffix (``/root/reference/ncd/
+   normal_table.py:62``); only then does it get ``filename_district``,
+   from the *file name* (via ``input_file_name()``, so a single
+   distributed read covers every district).
 4. Global tables (UTF-8 stacked file; silent no-op when absent) and lookup
    tables (``table_gs_*`` members, latin-1, sorted) land unpartitioned.
 
@@ -152,9 +153,10 @@ class NcdZipLoader:
     ) -> tuple[DataFrame, bool] | None:
         """One distributed read over every district file of a table.
 
-        Returns ``(df, is_partitioned)`` — df carries ``filename_district``
-        extracted from each row's source file name, NULL for the
-        all-districts (unsuffixed) file.
+        Returns ``(df, is_partitioned)``.  A partitioned table (every
+        file carries a district suffix) gets ``filename_district``
+        extracted from each row's source file name; an unpartitioned one
+        gets no such column.
         """
         pattern = district_file_pattern(schema.name)
         files = {
@@ -166,19 +168,14 @@ class NcdZipLoader:
             return None
         is_partitioned = None not in files
         lines = self.spark.read.text(sorted(files.values()))
-        df = project_fixed_width(lines, schema).withColumn(
-            PARTITION_COLUMN,
-            F.regexp_extract(
-                F.input_file_name(), r"_([A-Z]+)\.txt$", 1
-            ),
-        )
-        # Unsuffixed file → empty extract → NULL district (reference key None)
-        df = df.withColumn(
-            PARTITION_COLUMN,
-            F.when(F.col(PARTITION_COLUMN) == "", None).otherwise(
-                F.col(PARTITION_COLUMN)
-            ),
-        )
+        df = project_fixed_width(lines, schema)
+        if is_partitioned:
+            df = df.withColumn(
+                PARTITION_COLUMN,
+                F.regexp_extract(
+                    F.input_file_name(), r"_([A-Z]+)\.txt$", 1
+                ),
+            )
         return df, is_partitioned
 
     def _load_normal_table(self, staged: StagedZip, schema: TableSchema) -> None:
@@ -186,8 +183,6 @@ class NcdZipLoader:
         if result is None:
             return
         df, is_partitioned = result
-        if not is_partitioned:
-            df = df.drop(PARTITION_COLUMN)
         self.catalog.write_table(
             schema.name.lower(), df, partitioned=is_partitioned
         )

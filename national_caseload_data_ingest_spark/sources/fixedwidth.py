@@ -95,7 +95,7 @@ def project_fixed_width(lines: DataFrame, schema: TableSchema) -> DataFrame:
     ``redacted_*`` shadows.
     """
     # Offsets-preserving CR handling (A4).
-    value = F.regexp_replace(F.col("value"), "\r", " ")
+    value = F.translate(F.col("value"), "\r", " ")
     cells = [F.trim(F.substring(value, f.start, f.length)) for f in schema.fields]
     data = [
         F.when(cell == REDACTION_MARKER, F.lit(None)).otherwise(_cast_cell(cell, f))

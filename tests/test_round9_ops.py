@@ -1004,7 +1004,7 @@ def test_jaccard_blocks_stats_handoff_equals_internal_stats(spark):
                     blocked,
                     ["__blk"],
                     t,
-                    stats=(n_docs * n_docs, n_grams, n_grams, n_docs, 1),
+                    stats=(n_docs, n_grams),
                 ).collect()
             )
             assert handed == auto and auto, t

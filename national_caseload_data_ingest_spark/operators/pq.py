@@ -8,11 +8,11 @@ sub-blocks and vector-quantizes each block independently against a
 per-block codebook of ``K`` centroids, so a vector becomes ``M`` small
 integer codes.  At the shipped shape (d=64, M=8, K=256) that is 8
 one-byte codes for a 256-byte float32 vector — a 32× compression of the
-column the scoring pass actually scans.  At 100 TB this is the property
-that matters: the top-k screen reads the CODES relation, never the raw
-embeddings, and scoring is an O(M) table gather per vector instead of an
-O(d) dot product.  (Larger corpora raise M, not K: M=16-64 byte codes is
-the standard production range; the design is unchanged.)
+column a scoring pass over stored codes would scan.  At 100 TB that is
+the property that matters: such a screen reads the CODES relation, never
+the raw embeddings, and scoring is an O(M) table gather per vector
+instead of an O(d) dot product.  (Larger corpora raise M, not K: M=16-64
+byte codes is the standard production range; the design is unchanged.)
 
 Spark-first decomposition, reusing the similarity.py conventions:
 
@@ -34,15 +34,23 @@ Spark-first decomposition, reusing the similarity.py conventions:
   normalized sub-blocks and the codebook entries, the approximate score
   of a corpus vector is the sum of M table gathers, and each batch
   keeps a per-query shortlist (top k + pad, closed under score ties to
-  one ulp).  The shortlist then goes through the shared
-  ``_exact_rerank`` fold, so every EMITTED score is the bitwise-exact
-  cosine — identical values to brute/LSH/IVF for identical pairs; PQ
-  approximation affects only WHICH candidates reach the rerank.
+  one ulp — the shared ``_topk_closed`` screen).  The shortlist then
+  goes through the shared ``_exact_rerank`` fold, so every EMITTED score
+  is the bitwise-exact cosine — identical values to brute/LSH/IVF for
+  identical pairs; PQ approximation affects only WHICH candidates reach
+  the rerank.
+* **What runs today**: ``pq_topk`` trains fresh codebooks, so there is
+  no stored codes relation to read.  Its one narrow pass over the RAW
+  embeddings encodes each Arrow batch and ADC-screens it in the same
+  kernel.  ``pq_encode`` produces the (vec_id, codes) relation, but no
+  search reads it yet: a screen over stored codes (the compressed scan
+  described above) is the scale path this layout is for, not code that
+  runs.
 
 Unlike the brute-force screen, the PQ screen can evict a true neighbor
 (that is the accuracy/compression trade): recall@10 against the exact
 brute-force ranking is measured and floored in
-``tests/test_round7_ops.py``, the trainer/encoder are pinned by a numpy
+``tests/test_pq.py``, the trainer/encoder are pinned by a numpy
 reimplementation parity test, and codes are verified in-range with
 every block populated.  Registered rows-only (hash-seeded k-means has
 no SQL twin — the IVF/LSH convention).
@@ -54,7 +62,6 @@ extends the build brief's similarity-search band.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 from national_caseload_data_ingest_spark.operators.similarity import (
@@ -62,7 +69,11 @@ from national_caseload_data_ingest_spark.operators.similarity import (
     TOP_K,
     _collect_queries,
     _exact_rerank,
+    _hash_seeds,
+    _no_pairs,
     _normalized,
+    _sq_dists,
+    _topk_closed,
     _vec_matrix,
 )
 
@@ -88,19 +99,25 @@ def _encode_blocks(vn, books):
     to the lowest code id, numpy argmin convention — matches IVF)."""
     import numpy as np  # noqa: PLC0415
 
-    n, d = vn.shape
-    m, k, sub = books.shape
-    codes = np.empty((n, m), dtype=np.int32)
+    m, _k, sub = books.shape
+    codes = np.empty((len(vn), m), dtype=np.int32)
     for b in range(m):
-        blk = vn[:, b * sub : (b + 1) * sub]  # (n, sub)
-        cb = books[b]  # (k, sub)
-        dist = (
-            np.einsum("ij,ij->i", blk, blk)[:, None]
-            - 2.0 * (blk @ cb.T)
-            + np.einsum("ij,ij->i", cb, cb)[None, :]
-        )
+        # Bound to a name so each (n, K) buffer lives until the next one
+        # is built: freed first, malloc trims it and the next block
+        # re-faults its pages (measured ~20% of the encode at K=256).
+        dist = _sq_dists(vn[:, b * sub : (b + 1) * sub], books[b])
         codes[:, b] = np.argmin(dist, axis=1)
     return codes
+
+
+def _encoded_batches(batches, books):
+    """Per non-empty Arrow batch: ``(pdf, normalized vectors, codes)`` —
+    the encode step every PQ kernel starts from."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        vn = _normalized(_vec_matrix(pdf["embedding"]))
+        yield pdf, vn, _encode_blocks(vn, books)
 
 
 def _stats_kernel(books_list):
@@ -117,11 +134,7 @@ def _stats_kernel(books_list):
         m, k, sub = books.shape
         cnt = np.zeros((m, k), dtype=np.int64)
         acc = np.zeros((m, k, sub), dtype=np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vn = _normalized(_vec_matrix(pdf["embedding"]))
-            codes = _encode_blocks(vn, books)
+        for _pdf, vn, codes in _encoded_batches(batches, books):
             for b in range(m):
                 blk = vn[:, b * sub : (b + 1) * sub]
                 np.add.at(cnt[b], codes[:, b], 1)
@@ -156,15 +169,7 @@ def pq_train(
     previous centroid (ivf_train convention)."""
     import numpy as np  # noqa: PLC0415
 
-    seeds = (
-        e.select("vec_id", "embedding")
-        .orderBy(F.xxhash64("vec_id"))
-        .limit(k_codes)
-        .collect()
-    )
-    sm = _normalized(
-        np.array([list(r["embedding"]) for r in seeds], dtype=np.float64)
-    )
+    sm = _normalized(_hash_seeds(e, k_codes))
     k_codes = sm.shape[0]  # corpora smaller than K get one code per vector
     d = sm.shape[1]
     if d % m_blocks:
@@ -201,11 +206,7 @@ def _encode_kernel(books_list):
         import pandas as pd  # noqa: PLC0415
 
         books = np.asarray(books_list, dtype=np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vn = _normalized(_vec_matrix(pdf["embedding"]))
-            codes = _encode_blocks(vn, books)
+        for pdf, _vn, codes in _encoded_batches(batches, books):
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -226,71 +227,24 @@ def pq_encode(e: DataFrame, books) -> DataFrame:
     )
 
 
-def _adc_screen_batch(ids, codes, qids, lut, shortlist: int):
-    """One batch of the ADC screen: approximate score = sum of M
-    lookup-table gathers, per-query top-``shortlist``, closed under
-    score ties to one ulp (the similarity.py screen contract).  Returns
-    the (query_id, neighbor_id) candidate frame for the batch."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    nq, m, _k = lut.shape
-    barange = np.arange(m)
-    sims = np.empty((len(ids), nq), dtype=np.float64)
-    for qi in range(nq):
-        sims[:, qi] = lut[qi][barange[None, :], codes].sum(axis=1)
-    sims[ids[:, None] == qids[None, :]] = -np.inf
-    kk_eff = min(shortlist, len(ids))
-    top = np.argpartition(-sims, kk_eff - 1, axis=0)[:kk_eff]
-    kth = sims[top, np.arange(nq)].min(axis=0)
-    cut = np.where(
-        np.isfinite(kth), kth - np.spacing(np.abs(kth)), -np.inf
-    )
-    rows, cols = np.nonzero(sims >= cut[None, :])
-    return pd.DataFrame({"query_id": qids[cols], "neighbor_id": ids[rows]})
-
-
-def _adc_screen_kernel(qids, lut, shortlist: int):
-    """mapInPandas generator over the CODES relation — the scale path,
-    where codes come from storage and raw vectors are never touched.
-    Emits (query_id, neighbor_id) only."""
-
-    def gen(batches):
-        import numpy as np  # noqa: PLC0415
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            codes = np.stack(pdf["codes"].to_numpy())  # (n, M)
-            yield _adc_screen_batch(ids, codes, qids, lut, shortlist)
-
-    return gen
-
-
 def _encode_adc_kernel(books_list, qids, lut, shortlist: int):
-    """Fused encode + ADC screen over the raw embeddings (r14, guide
-    §4.1): when the codes are computed inline (this query trains fresh
-    codebooks, so there is no stored codes relation to scan), chaining
-    ``pq_encode`` into ``_adc_screen_kernel`` paid a second JVM↔Arrow
-    round-trip just to hand the (vec_id, codes) rows back to Python.
-    One kernel computes codes and screens them batch-by-batch — the
-    per-batch math and shortlist logic are byte-for-byte the shared
-    helpers, so emitted candidates are identical whenever the batch
-    boundaries are (and the scan batches ARE the boundaries both ways
-    at every tested scale)."""
+    """mapInPandas generator, fused encode + ADC screen over the raw
+    embeddings: per Arrow batch, encode the vectors, score each as the sum
+    of M lookup-table gathers per query, and keep the closed per-query
+    top-``shortlist``.  One kernel, so the codes never make a JVM↔Arrow
+    round trip.  Emits (query_id, neighbor_id) only."""
 
     def gen(batches):
         import numpy as np  # noqa: PLC0415
 
         books = np.asarray(books_list, dtype=np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            vn = _normalized(_vec_matrix(pdf["embedding"]))
-            codes = _encode_blocks(vn, books)
-            yield _adc_screen_batch(ids, codes, qids, lut, shortlist)
+        nq, m, _k = lut.shape
+        barange = np.arange(m)
+        for pdf, _vn, codes in _encoded_batches(batches, books):
+            sims = np.empty((len(codes), nq), dtype=np.float64)
+            for qi in range(nq):
+                sims[:, qi] = lut[qi][barange[None, :], codes].sum(axis=1)
+            yield _topk_closed(sims, pdf["vec_id"].to_numpy(), qids, shortlist)
 
     return gen
 
@@ -302,22 +256,15 @@ def pq_topk(
     m_blocks: int = PQ_BLOCKS,
     k_codes: int = PQ_CODES,
 ) -> DataFrame:
-    """PQ ANN: train codebooks, encode the corpus (narrow), ADC-screen the
-    codes against the query lookup tables (narrow — scans M ints per
-    vector, not d floats), exact-fold rescore the shortlist."""
+    """PQ ANN: train codebooks, then one narrow pass over the raw
+    embeddings that encodes each batch and ADC-screens its codes against
+    the query lookup tables, and an exact-fold rescore of the shortlist."""
     import numpy as np  # noqa: PLC0415
 
-    books = pq_train(e, m_blocks=m_blocks, k_codes=k_codes)
     qids, q = _collect_queries(e, n_queries)
     if len(qids) == 0:
-        return _exact_rerank(
-            e,
-            e.limit(0).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-            ),
-            k,
-        )
+        return _exact_rerank(e, _no_pairs(e), k)
+    books = pq_train(e, m_blocks=m_blocks, k_codes=k_codes)
     qn = _normalized(q)
     sub = qn.shape[1] // m_blocks
     # lut[qi, b, c] = qn[qi, block b] · books[b, c] — exact inner products
@@ -337,9 +284,9 @@ def pq_topk(
 
 @query("ann_pq_topk")  # approximate — recall floor vs brute force in tests
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-domain ANN top-k: the scoring pass scans 8 int codes per
-    vector (32× fewer bytes than the raw embedding column), scores are an
-    O(M) gather, and the emitted cosines are exact (shortlist is
-    exact-rerank'd).  See module docstring for the 100 TB shape."""
+    """PQ ANN top-k: each vector is encoded to 8 int codes and scored by
+    an O(M) lookup-table gather inside one fused pass over the raw
+    embeddings, and the emitted cosines are exact (the shortlist is
+    exact-rerank'd).  See the module docstring for the 100 TB shape."""
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     return pq_topk(e)

@@ -56,10 +56,12 @@ LSH_PLANES = 8
 LSH_SEED = 0xD1CE
 
 
-def _collect_queries(e: DataFrame, n_queries: int):
-    """Collect the (tiny) query-vector set to the driver as a float64
-    matrix — the same justified driver-side-model pattern as IVF centroids:
-    k × dim doubles, inlined into the batch kernels as a closure."""
+def _collect_queries(e: DataFrame, n_queries: int, dtype: str = "float64"):
+    """Collect the (tiny) query-vector set to the driver as ``(qids, q)``,
+    sorted by ``vec_id``: the same justified driver-side-model pattern as
+    IVF centroids, k × dim numbers inlined into the batch kernels as a
+    closure.  ``q`` is empty (shape ``(0,)``) when no ``vec_id`` is below
+    ``n_queries``; every plan guards on ``len(qids) == 0``."""
     import numpy as np  # noqa: PLC0415
 
     rows = (
@@ -69,8 +71,31 @@ def _collect_queries(e: DataFrame, n_queries: int):
     )
     rows.sort(key=lambda r: r["vec_id"])
     qids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    q = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
+    q = np.array([list(r["embedding"]) for r in rows], dtype=dtype)
     return qids, q
+
+
+def _no_pairs(e: DataFrame) -> DataFrame:
+    """The empty (query_id, neighbor_id) candidate relation — what every
+    plan screens when the query set is empty."""
+    return e.limit(0).select(
+        F.col("vec_id").alias("query_id"), F.col("vec_id").alias("neighbor_id")
+    )
+
+
+def _hash_seeds(e: DataFrame, k: int):
+    """(k, dim) float64 matrix of the k vectors with the smallest
+    ``xxhash64(vec_id)``: the deterministic, seed-free k-means
+    initialisation shared by IVF and PQ training."""
+    import numpy as np  # noqa: PLC0415
+
+    rows = (
+        e.select("vec_id", "embedding")
+        .orderBy(F.xxhash64("vec_id"))
+        .limit(k)
+        .collect()
+    )
+    return np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
 
 
 def _normalized(m):
@@ -81,49 +106,61 @@ def _normalized(m):
     return m / norms[:, None]
 
 
-def _vec_matrix(series):
-    """Arrow list column → (n, dim) float64 matrix."""
+def _vec_matrix(series, dtype: str = "float64"):
+    """Arrow list column → (n, dim) matrix.  The quantizers pass
+    ``float32`` to consume the raw values exactly as SQL reads them."""
     import numpy as np  # noqa: PLC0415
 
-    return np.array([np.asarray(v, dtype=np.float64) for v in series])
+    return np.array([np.asarray(v, dtype=dtype) for v in series])
+
+
+def _sq_dists(v, c):
+    """(n, k) squared Euclidean distances between the rows of ``v`` and
+    ``c`` as one matmul: ‖v‖² − 2v·c + ‖c‖²."""
+    import numpy as np  # noqa: PLC0415
+
+    return (
+        np.einsum("ij,ij->i", v, v)[:, None]
+        - 2.0 * (v @ c.T)
+        + np.einsum("ij,ij->i", c, c)[None, :]
+    )
+
+
+def _topk_closed(sims, ids, qids, kk: int):
+    """One batch of the float top-k screen: ``sims`` is the (b, nq)
+    higher-is-better score of corpus rows ``ids`` against queries
+    ``qids``.  Masks self-pairs, keeps each query's top ``kk`` plus every
+    row within one ulp of its cut score (the survivor set is closed under
+    score ties, so a >PAD tie cluster never loses its tiebreak winner),
+    and returns the (query_id, neighbor_id) frame."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    sims[ids[:, None] == qids[None, :]] = -np.inf
+    kk_eff = min(kk, len(ids))
+    top = np.argpartition(-sims, kk_eff - 1, axis=0)[:kk_eff]  # (kk, nq)
+    # kth is -inf when the batch has <= kk rows and contains the query
+    # itself (its masked self-pair lands inside the top); the cut must stay
+    # -inf there (keep everything), not become NaN via -inf - spacing(inf)
+    # and drop the whole batch.
+    kth = sims[top, np.arange(sims.shape[1])].min(axis=0)  # (nq,)
+    cut = np.where(np.isfinite(kth), kth - np.spacing(np.abs(kth)), -np.inf)
+    rows, cols = np.nonzero(sims >= cut[None, :])
+    return pd.DataFrame({"query_id": qids[cols], "neighbor_id": ids[rows]})
 
 
 def _screen_topk_kernel(qids, qn, kk: int):
     """mapInPandas generator: per Arrow batch, cosine-score every corpus
-    vector against ALL queries (one BLAS matmul) and keep the numpy top-kk
-    per query.  Emits only (query_id, neighbor_id) — scores are assigned by
-    the exact rescore."""
+    vector against ALL queries (one BLAS matmul) and keep the closed
+    top-kk per query.  Emits only (query_id, neighbor_id) — scores are
+    assigned by the exact rescore."""
 
     def gen(batches):
-        import numpy as np  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf["vec_id"].to_numpy()
             sims = _normalized(_vec_matrix(pdf["embedding"])) @ qn.T  # (b, nq)
-            sims[ids[:, None] == qids[None, :]] = -np.inf  # mask self-pairs
-            kk_eff = min(kk, len(ids))
-            top = np.argpartition(-sims, kk_eff - 1, axis=0)[:kk_eff]  # (kk, nq)
-            # cut score per query; keep every row tied with it (to one ulp)
-            # so a >PAD tie cluster can never lose its tiebreak winner.
-            # kth is -inf when the batch has <= kk rows and contains the
-            # query itself (its masked self-pair lands inside the top) —
-            # the cut must stay -inf there (keep everything), not become
-            # NaN via -inf - spacing(inf) and drop the whole batch.
-            kth = sims[top, np.arange(sims.shape[1])].min(axis=0)  # (nq,)
-            cut = np.where(
-                np.isfinite(kth), kth - np.spacing(np.abs(kth)), -np.inf
-            )
-            keep = sims >= cut[None, :]
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[cols],
-                    "neighbor_id": ids[rows],
-                }
-            )
+            yield _topk_closed(sims, pdf["vec_id"].to_numpy(), qids, kk)
 
     return gen
 
@@ -165,9 +202,7 @@ def brute_topk(e: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> Data
     narrow mapInPandas stage), exact-fold rescore of the survivors."""
     qids, q = _collect_queries(e, n_queries)
     if len(qids) == 0:
-        return _exact_rerank(e, e.limit(0).select(
-            F.col("vec_id").alias("query_id"), F.col("vec_id").alias("neighbor_id")
-        ), k)
+        return _exact_rerank(e, _no_pairs(e), k)
     screen = e.select("vec_id", "embedding").mapInPandas(
         _screen_topk_kernel(qids, _normalized(q), k + SCREEN_PAD),
         schema="query_id bigint, neighbor_id bigint",
@@ -216,21 +251,26 @@ def _plane_matrix(dim: int, planes: int = LSH_PLANES):
     return rng.standard_normal((planes, dim))
 
 
+def _signatures(v, w):
+    """Hyperplane-LSH bucket id per row of ``v``: bit p is set when the
+    row lies on the positive side of plane ``w[p]`` (one matmul)."""
+    import numpy as np  # noqa: PLC0415
+
+    pows = (1 << np.arange(w.shape[0])).astype(np.int64)
+    return ((v @ w.T) > 0).astype(np.int64) @ pows
+
+
 def _signature_kernel(w):
-    """mapInPandas generator: hyperplane signature bits per vector — one
+    """mapInPandas generator: hyperplane signature per corpus vector, one
     matmul per Arrow batch against the (planes × dim) matrix."""
 
     def gen(batches):
-        import numpy as np  # noqa: PLC0415
         import pandas as pd  # noqa: PLC0415
 
-        weights = np.asarray(w, dtype=np.float64)
-        pows = (1 << np.arange(weights.shape[0])).astype(np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
-            proj = _vec_matrix(pdf["embedding"]) @ weights.T  # (b, planes)
-            sig = (proj > 0).astype(np.int64) @ pows
+            sig = _signatures(_vec_matrix(pdf["embedding"]), w)
             yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), "sig": sig})
 
     return gen
@@ -249,27 +289,16 @@ def lsh_topk(e: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFr
     random vectors (this synthetic corpus) recall ≈ scanned fraction — the
     theoretical behavior; tests assert planted-duplicate recovery and a
     measured-recall floor instead of recall-on-noise."""
-    import numpy as np  # noqa: PLC0415
-
     qids, q = _collect_queries(e, n_queries)
     if len(qids) == 0:
-        return _exact_rerank(
-            e,
-            e.limit(0).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-            ),
-            k,
-        )
+        return _exact_rerank(e, _no_pairs(e), k)
     w = _plane_matrix(q.shape[1])
     sigs = e.select("vec_id", "embedding").mapInPandas(
         _signature_kernel(w), schema="vec_id bigint, sig bigint"
     )
-    pows = (1 << np.arange(LSH_PLANES)).astype(np.int64)
-    qsig = ((q @ w.T) > 0).astype(np.int64) @ pows
     probes = [
         (int(qid), int(s) ^ flip)
-        for qid, s in zip(qids, qsig)
+        for qid, s in zip(qids, _signatures(q, w))
         for flip in [0, *[1 << p for p in range(LSH_PLANES)]]
     ]
     spark = e.sparkSession
@@ -330,37 +359,39 @@ N_PROBE = 2
 LLOYD_ITERS = 2
 
 
-def _assign_kernel(cents):
-    """mapInPandas generator: nearest-centroid id per vector via one
-    squared-distance matmul per Arrow batch (||v||² - 2v·c + ||c||²).
-    Ties resolve to the lowest cluster id (argmin-first), matching the
-    previous expression formulation."""
+def _assign_kernel(cents, n_assign: int):
+    """mapInPandas generator: each vector → its ``n_assign`` nearest
+    centroid cells (a 1→n narrow explosion, one squared-distance matmul
+    per Arrow batch).  Stable sort, so ties resolve to the lowest cluster
+    id and the first cell is the argmin."""
 
     def gen(batches):
         import numpy as np  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
 
         c = np.asarray(cents, dtype=np.float64)  # (k, dim)
-        c_sq = np.einsum("ij,ij->i", c, c)
+        na = min(n_assign, len(c))
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = _vec_matrix(pdf["embedding"])
-            d = np.einsum("ij,ij->i", v, v)[:, None] - 2.0 * (v @ c.T) + c_sq[None, :]
-            out = pdf[["vec_id", "embedding"]].copy()
-            out["cluster"] = np.argmin(d, axis=1).astype(np.int32)
+            d = _sq_dists(_vec_matrix(pdf["embedding"]), c)
+            near = np.argsort(d, axis=1, kind="stable")[:, :na]  # (b, na)
+            out = pdf.loc[pdf.index.repeat(na), ["vec_id", "embedding"]].copy()
+            out["cluster"] = near.ravel().astype(np.int32)
             yield out
 
     return gen
 
 
-def ivf_assign(e: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """(vec_id, embedding, cluster) — nearest-centroid id per vector as a
-    pure NARROW stage (no join, no shuffle): the centroid model is a driver
-    closure shipped with the kernel, and assignment is one BLAS matmul per
-    Arrow batch — the property that makes IVF viable at 100 TB."""
+def ivf_assign(
+    e: DataFrame, cents: list[list[float]], n_assign: int = 1
+) -> DataFrame:
+    """(vec_id, embedding, cluster) — each vector's ``n_assign`` nearest
+    centroid ids (one row each) as a pure NARROW stage (no join, no
+    shuffle): the centroid model is a driver closure shipped with the
+    kernel, and assignment is one BLAS matmul per Arrow batch — the
+    property that makes IVF viable at 100 TB."""
     return e.select("vec_id", "embedding").mapInPandas(
-        _assign_kernel([list(c) for c in cents]),
+        _assign_kernel([list(c) for c in cents], n_assign),
         schema="vec_id bigint, embedding array<float>, cluster int",
     )
 
@@ -388,13 +419,7 @@ def ivf_train(
     no shuffle).  Initial centroids are the k vectors with the smallest
     ``xxhash64(vec_id)`` — deterministic, seed-free.  Each Lloyd iteration
     costs one cluster-keyed shuffle into a per-cluster mean kernel."""
-    seeds = (
-        e.select("vec_id", "embedding")
-        .orderBy(F.xxhash64("vec_id"))
-        .limit(k)
-        .collect()
-    )
-    cents = [[float(v) for v in r["embedding"]] for r in seeds]
+    cents = _hash_seeds(e, k).tolist()
     for _ in range(iters):
         new = (
             ivf_assign(e, cents)
@@ -465,23 +490,11 @@ def ivf_topk(
     batch screen, not the interpreted fold."""
     import numpy as np  # noqa: PLC0415
 
-    cents = ivf_train(e, k=n_centroids)
     qids, q = _collect_queries(e, n_queries)
     if len(qids) == 0:
-        return _exact_rerank(
-            e,
-            e.limit(0).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-            ),
-            k,
-        )
-    c = np.asarray(cents, dtype=np.float64)
-    d = (
-        np.einsum("ij,ij->i", q, q)[:, None]
-        - 2.0 * (q @ c.T)
-        + np.einsum("ij,ij->i", c, c)[None, :]
-    )
+        return _exact_rerank(e, _no_pairs(e), k)
+    cents = ivf_train(e, k=n_centroids)
+    d = _sq_dists(q, np.asarray(cents, dtype=np.float64))
     probe_rows = [
         (int(qid), int(cl))
         for qid, row in zip(qids, np.argsort(d, axis=1, kind="stable"))
@@ -503,33 +516,6 @@ def ivf_topk(
     return _exact_rerank(e, screened, k)
 
 
-def _multi_assign_kernel(cents, n_assign: int):
-    """mapInPandas generator: each vector → its ``n_assign`` nearest
-    centroid cells (1→n narrow explosion, one squared-distance matmul per
-    Arrow batch).  Multi-assignment is what makes IVF blocking usable for
-    NEAR-DUP (not just top-k): a pair near a cell boundary still shares at
-    least one cell when both sides claim their 2 nearest."""
-
-    def gen(batches):
-        import numpy as np  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
-
-        c = np.asarray(cents, dtype=np.float64)
-        c_sq = np.einsum("ij,ij->i", c, c)
-        na = min(n_assign, len(c))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = _vec_matrix(pdf["embedding"])
-            d = np.einsum("ij,ij->i", v, v)[:, None] - 2.0 * (v @ c.T) + c_sq[None, :]
-            near = np.argsort(d, axis=1, kind="stable")[:, :na]  # (b, na)
-            out = pdf.loc[pdf.index.repeat(na), ["vec_id", "embedding"]].copy()
-            out["cell"] = near.ravel().astype(np.int32)
-            yield out
-
-    return gen
-
-
 def ivf_neardup(
     e: DataFrame,
     threshold: float,
@@ -540,10 +526,13 @@ def ivf_neardup(
     label-blocked oracle (`embedding_cosine_neardup`) stands in for.
 
     Every vector is assigned to its ``n_assign`` nearest k-means cells (a
-    narrow numpy map — no shuffle); the bounded all-pairs screen then runs
-    per CELL instead of per label, so block size is controlled by the
-    centroid count (~corpus/k per cell; scale rule k ≈ sqrt(corpus)), not
-    by data skew in a label column.  Pairs found in two shared cells are
+    narrow numpy map — no shuffle).  Multi-assignment is what makes IVF
+    blocking usable for near-dup, not just top-k: a pair near a cell
+    boundary still shares a cell when both sides claim their 2 nearest.
+    The bounded all-pairs screen then runs per CELL instead of per label,
+    so block size is controlled by the centroid count (~corpus/k per
+    cell; scale rule k ≈ sqrt(corpus)), not by data skew in a label
+    column.  Pairs found in two shared cells are
     deduped before the exact rescore, and every emitted pair carries the
     bitwise-exact fold cosine, so precision is 1.0 by construction;
     recall misses only pairs whose members share no assigned cell
@@ -557,12 +546,9 @@ def ivf_neardup(
     )
 
     cents = ivf_train(e, k=n_centroids)
-    assigned = e.select("vec_id", "embedding").mapInPandas(
-        _multi_assign_kernel([list(c) for c in cents], n_assign),
-        schema="vec_id bigint, embedding array<float>, cell int",
-    )
     screen = (
-        assigned.groupBy("cell")
+        ivf_assign(e, cents, n_assign)
+        .groupBy("cluster")
         .applyInPandas(
             _cosine_block_kernel(threshold, MAX_BLOCK_DOCS),
             schema="vec_a bigint, vec_b bigint",
@@ -795,14 +781,6 @@ def _global_abs_max(e: DataFrame) -> float:
     return float(row["mx"] or 0.0)
 
 
-def _vec_matrix32(series):
-    """Arrow list column → (n, dim) float32 matrix (no float64 widening —
-    the quantizers consume the raw float32 exactly as SQL reads it)."""
-    import numpy as np  # noqa: PLC0415
-
-    return np.array([np.asarray(v, dtype=np.float32) for v in series])
-
-
 _Q8_SQL = f"""
     g AS (
         SELECT MAX(list_max(list_transform(embedding, a -> abs(a)))) AS mx
@@ -858,7 +836,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = _int8_quantize_np(_vec_matrix32(pdf["embedding"]), mx)
+            q = _int8_quantize_np(_vec_matrix(pdf["embedding"], "float32"), mx)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].astype("int64"),
@@ -894,7 +872,7 @@ def _int_topk_kernel(qids, kk: int, score_fn):
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy()
-            scores = score_fn(_vec_matrix32(pdf["embedding"]))
+            scores = score_fn(_vec_matrix(pdf["embedding"], "float32"))
             scores[ids[:, None] == qids[None, :]] = np.iinfo(np.int64).min
             kk_eff = min(kk, len(ids))
             top = np.argpartition(-scores, kk_eff - 1, axis=0)[:kk_eff]
@@ -919,26 +897,19 @@ def _int_topk(
     The kernel always screens on a HIGHER-is-better internal score;
     ``negate=True`` means the published metric is its negation (Hamming
     distance: internal score = -hamming, published ascending)."""
-    import numpy as np  # noqa: PLC0415
-
-    rows = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["vec_id"])
-    qids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    qmat = np.array([list(r["embedding"]) for r in rows], dtype=np.float32)
-    score_fn = score_fn_builder(qmat)
-    screened = e.select("vec_id", "embedding").mapInPandas(
-        _int_topk_kernel(qids, k, score_fn),
-        schema="query_id bigint, neighbor_id bigint, score bigint",
-    ).filter(
-        # a masked self-pair (score = int64 min) survives the batch cut
-        # when its batch holds <= k rows; on a corpus with < k real
-        # candidates it could otherwise leak into the final window
-        F.col("query_id") != F.col("neighbor_id")
-    )
+    qids, qmat = _collect_queries(e, N_QUERIES, "float32")
+    if len(qids) == 0:
+        screened = _no_pairs(e).withColumn("score", F.lit(None).cast("bigint"))
+    else:
+        screened = e.select("vec_id", "embedding").mapInPandas(
+            _int_topk_kernel(qids, k, score_fn_builder(qmat)),
+            schema="query_id bigint, neighbor_id bigint, score bigint",
+        ).filter(
+            # a masked self-pair (score = int64 min) survives the batch cut
+            # when its batch holds <= k rows; on a corpus with < k real
+            # candidates it could otherwise leak into the final window
+            F.col("query_id") != F.col("neighbor_id")
+        )
     w = W.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")
     )
@@ -953,7 +924,6 @@ def _int_topk(
             F.col("rk").cast("int").alias("rk"),
         )
     )
-
 
 
 @query(
@@ -989,8 +959,6 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores make the cross-engine comparison exact and the per-batch
     tie-cut provably lossless.  Rank quality vs the float-dot baseline
     is pinned by a recall-floor pytest (0.90 measured at both SFs)."""
-    import numpy as np  # noqa: PLC0415
-
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     mx = _global_abs_max(e)
 
@@ -1147,31 +1115,27 @@ def kmeans_int8_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     mx = _global_abs_max(e)
-    init_rows = (
-        e.filter(F.col("vec_id") < KMEANS_K)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    init_rows.sort(key=lambda r: r["vec_id"])
-    cents = _int8_quantize_np(
-        np.array([list(r["embedding"]) for r in init_rows], np.float32), mx
-    )
+    _, init = _collect_queries(e, KMEANS_K, "float32")
+    cents = _int8_quantize_np(init, mx)
+
+    def assign(pdf, C):
+        """(codes, integer squared distances to every centroid, nearest
+        centroid) for one Arrow batch; ties go to the smallest j."""
+        q = _int8_quantize_np(_vec_matrix(pdf["embedding"], "float32"), mx)
+        d2 = ((q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+        return q, d2, d2.argmin(1)
 
     def partials_kernel(C):
-        Cl = C.copy()
-
         def gen(batches):
             import pandas as pd  # noqa: PLC0415
 
             for pdf in batches:
                 if not len(pdf):
                     continue
-                q = _int8_quantize_np(_vec_matrix32(pdf["embedding"]), mx)
-                d2 = ((q[:, None, :] - Cl[None, :, :]) ** 2).sum(-1)
-                assign = d2.argmin(1)  # ties -> smallest j on exact ints
+                q, _, nearest = assign(pdf, C)
                 cl, cnt, sums = [], [], []
                 for j in range(KMEANS_K):
-                    mask = assign == j
+                    mask = nearest == j
                     if not mask.any():
                         continue
                     cl.append(j)
@@ -1216,19 +1180,16 @@ def kmeans_int8_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     def final_kernel(batches):
         import pandas as pd  # noqa: PLC0415
 
-        C = cents
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = _int8_quantize_np(_vec_matrix32(pdf["embedding"]), mx)
-            d2 = ((q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            assign = d2.argmin(1)
+            _, d2, nearest = assign(pdf, cents)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].astype("int64"),
-                    "cluster": pd.Series(assign, dtype="int32"),
+                    "cluster": pd.Series(nearest, dtype="int32"),
                     "dist2": pd.Series(
-                        d2[np.arange(len(assign)), assign], dtype="int64"
+                        d2[np.arange(len(nearest)), nearest], dtype="int64"
                     ),
                 }
             )

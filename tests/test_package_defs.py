@@ -2,8 +2,10 @@
 
 A module that defines the same top-level function or class name twice
 keeps only the later definition: every caller that runs after the module
-finishes importing gets it, whichever one it meant.  No linter in this
-environment reports the rebinding, so the check is an ``ast`` walk.
+finishes importing gets it, whichever one it meant.  A top-level private
+function or class that no code references is dead weight that still
+reads as a live plan.  No linter in this environment reports either, so
+the checks are ``ast`` walks.
 """
 
 from __future__ import annotations
@@ -12,13 +14,21 @@ import ast
 from collections import Counter
 from pathlib import Path
 
-PACKAGE = Path(__file__).resolve().parent.parent / "national_caseload_data_ingest_spark"
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "national_caseload_data_ingest_spark"
+
+
+def _parsed(root: Path):
+    for path in sorted(root.rglob("*.py")):
+        parts = path.relative_to(root).parts
+        if any(p.startswith(".") or p == "__pycache__" for p in parts):
+            continue
+        yield path, ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
 
 
 def test_no_module_defines_a_top_level_name_twice():
     dupes = {}
-    for path in sorted(PACKAGE.rglob("*.py")):
-        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+    for path, tree in _parsed(PACKAGE):
         counts = Counter(
             node.name
             for node in tree.body
@@ -30,3 +40,35 @@ def test_no_module_defines_a_top_level_name_twice():
         if twice:
             dupes[str(path.relative_to(PACKAGE))] = twice
     assert not dupes, dupes
+
+
+def test_every_private_top_level_def_is_referenced():
+    """Each top-level ``_private`` function or class in the package is
+    named by code somewhere in the repo: a ``Name``, an ``Attribute`` or
+    an import alias.  A mention in a docstring or comment does not count."""
+    referenced = set()
+    private = {}
+    for path, tree in _parsed(REPO):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias):
+                referenced.add(node.name.rsplit(".", 1)[-1])
+        if PACKAGE in path.parents:
+            private[str(path.relative_to(PACKAGE))] = [
+                node.name
+                for node in tree.body
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                and node.name.startswith("_")
+                and not node.name.startswith("__")
+            ]
+    unreferenced = {
+        module: sorted(set(names) - referenced)
+        for module, names in private.items()
+        if set(names) - referenced
+    }
+    assert not unreferenced, unreferenced

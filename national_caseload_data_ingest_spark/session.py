@@ -26,6 +26,19 @@ Design notes (SURVEY.md §7 step 1):
   built elsewhere keeps the stock daemon and its per-task cost.
   Executors must be able to import this package, as the operators'
   pickled UDFs already require.
+- **In-JVM ``file://`` permissions** — without libhadoop, Hadoop's
+  ``RawLocalFileSystem.setPermission`` forks a ``chmod`` process, and it
+  runs on every file create and every mkdir: about 300 forks (about 5 ms
+  of CPU each) per ingest of the benchmark dump.  ``fs.file.impl`` points
+  at ``jvm/NioLocalFileSystem.java``, which sets plain rwx modes through
+  java.nio (files and dirs get the same modes as before) and keeps the
+  rename rule of Hive's ``ProxyLocalFileSystem``, the class ``file://``
+  resolves to otherwise.  The committed ``jvm/ncd-localfs.jar``
+  (``tools/build_localfs_jar.py``) goes on the launch classpath, not in
+  ``spark.jars``: spark-submit opens ``file://`` before it loads
+  ``spark.jars``.  Like the daemon, this is a launch-time setting.
+  Streaming checkpoints write through Hadoop's ``FileContext``
+  (``RawLocalFs``), which this class does not reach; they still fork.
 """
 
 from __future__ import annotations
@@ -33,6 +46,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The file:// filesystem get_spark launches with, and its committed jar.
+LOCAL_FS_CLASS = "national_caseload_data_ingest_spark.jvm.NioLocalFileSystem"
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "ncd-localfs.jar"
+)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -153,6 +172,11 @@ def get_spark(
         .config(
             "spark.python.daemon.module", "national_caseload_data_ingest_spark.pydaemon"
         )
+        # file:// sets permissions in the JVM instead of forking chmod for
+        # every file and dir it writes (module docstring).
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        .config("spark.driver.extraClassPath", LOCAL_FS_JAR)
+        .config("spark.executor.extraClassPath", LOCAL_FS_JAR)
         # Run-once analytics on a single JVM: C1-only JIT (TieredStopAtLevel=1)
         # compiles generated code immediately instead of interpreting while
         # waiting for C2 profile thresholds, and -XX:-DontCompileHugeMethods

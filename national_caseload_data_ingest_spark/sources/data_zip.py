@@ -125,14 +125,15 @@ class NcdZipLoader:
         self.zip_path = zip_path
 
     def load(self) -> list[str]:
-        """Process normal, global, then lookup tables; returns table names."""
+        """Process normal, global, then lookup tables; returns the names of
+        the tables written (a README table with no member file is not)."""
         staged = stage_members(self.zip_path)
         loaded: list[str] = []
         try:
             schemas = self._normal_schemas(staged)
             for name in sorted(schemas):
-                self._load_normal_table(staged, schemas[name])
-                loaded.append(name)
+                if self._load_normal_table(staged, schemas[name]):
+                    loaded.append(name)
             loaded += self._load_global_tables(staged)
             loaded += self._load_lookup_tables(staged)
         finally:
@@ -178,14 +179,16 @@ class NcdZipLoader:
             )
         return df, is_partitioned
 
-    def _load_normal_table(self, staged: StagedZip, schema: TableSchema) -> None:
+    def _load_normal_table(self, staged: StagedZip, schema: TableSchema) -> bool:
+        """Write the table; False when the zip holds no file for it."""
         result = self.read_normal_table(staged, schema)
         if result is None:
-            return
+            return False
         df, is_partitioned = result
         self.catalog.write_table(
             schema.name.lower(), df, partitioned=is_partitioned
         )
+        return True
 
     # -- global + lookup tables --------------------------------------------
 

@@ -10,7 +10,7 @@ import pytest
 
 from national_caseload_data_ingest_spark.catalog import local_catalog
 from national_caseload_data_ingest_spark.sources.data_zip import NcdZipLoader
-from tests.conftest import build_fixture_zip
+from tests.conftest import GS_CASE_ROWS, README_TEXT, build_fixture_zip
 
 
 @pytest.fixture(scope="module")
@@ -260,6 +260,21 @@ def test_zip_without_global_file_is_noop(spark, tmp_path):
     names = NcdZipLoader(spark, catalog, path).load()
     assert "GS_DISTRICT" not in names
     assert "GS_CASE" in names
+
+
+def test_readme_table_without_a_file_is_not_reported(spark, tmp_path):
+    """The README declares GS_COURT_HIST but the zip holds no file for it:
+    nothing is written, so ``load`` must not name it."""
+    path = str(tmp_path / "nofile.zip")
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("README.TXT", README_TEXT.encode("latin-1"))
+        zf.writestr("gs_case.txt", "\n".join(GS_CASE_ROWS).encode("latin-1"))
+    catalog = local_catalog(spark, str(tmp_path / "wh"), db_name="ncd_nofile")
+    assert NcdZipLoader(spark, catalog, path).load() == ["GS_CASE"]
+    tables = {
+        t.name for t in spark.catalog.listTables("ncd_nofile") if not t.isTemporary
+    }
+    assert tables == {"gs_case"}
 
 
 def test_missing_readme_loads_no_normal_tables(spark, tmp_path):

@@ -11,7 +11,7 @@ import os
 import subprocess
 import sys
 
-from national_caseload_data_ingest_spark.session import RUNTIME_CONFS
+from national_caseload_data_ingest_spark.session import LOCAL_FS_CLASS, RUNTIME_CONFS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -120,3 +120,25 @@ def test_add_py_file_zip_imports_inside_a_task(spark, tmp_path):
         return [shipped_after_start.ANSWER]
 
     assert sc.parallelize(range(4), 4).mapPartitions(answer).collect() == [42] * 4
+
+
+def test_file_scheme_resolves_to_the_engine_filesystem(spark, tmp_path):
+    """``file:///`` is the in-JVM-permission filesystem on the driver and
+    in the tasks.  A task's writes land in the Hadoop statistics of the
+    filesystem class that made them, so the engine's raw class counts the
+    bytes of a write and the stock raw class counts none."""
+    jvm = spark.sparkContext._jvm
+    FileSystem = jvm.org.apache.hadoop.fs.FileSystem
+    fs = FileSystem.get(
+        jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    assert fs.getClass().getName() == LOCAL_FS_CLASS
+    engine = FileSystem.getStatistics("file", fs.getRawFileSystem().getClass())
+    stock = FileSystem.getStatistics(
+        "file", jvm.java.lang.Class.forName("org.apache.hadoop.fs.RawLocalFileSystem")
+    )
+    before = engine.getBytesWritten(), stock.getBytesWritten()
+    spark.range(1000).repartition(2).write.parquet(str(tmp_path / "t"))
+    after = engine.getBytesWritten(), stock.getBytesWritten()
+    assert after[0] > before[0]
+    assert after[1] == before[1]

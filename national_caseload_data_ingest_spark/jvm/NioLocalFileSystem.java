@@ -1,14 +1,24 @@
 package national_caseload_data_ingest_spark.jvm;
 
+import java.io.File;
 import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
 import java.nio.file.Files;
 import java.nio.file.attribute.PosixFilePermission;
 import java.util.EnumSet;
 import java.util.Set;
 
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.ChecksumFs;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FileStatus;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RawLocalFileSystem;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
@@ -18,9 +28,11 @@ import org.apache.hadoop.fs.permission.FsPermission;
  * {@code chmod} process, and Hadoop calls it on every file create and every
  * mkdir.  {@link Raw} sets a plain rwx mode through java.nio instead; a mode
  * with the sticky bit, or a store without POSIX attributes, takes the stock
- * path.  {@link #rename} keeps the one override of Hive's
- * {@code ProxyLocalFileSystem}, the class {@code file://} resolves to
- * without this one.
+ * path.  It also asks java.nio whether a path is a symlink before the stock
+ * link lookup forks {@code readlink}.  {@link #rename} keeps the one
+ * override of Hive's {@code ProxyLocalFileSystem}, the class {@code file://}
+ * resolves to without this one.  {@link Fs} puts {@link Raw} under
+ * {@code FileContext}, which Structured Streaming checkpoints write through.
  */
 public class NioLocalFileSystem extends LocalFileSystem {
   public NioLocalFileSystem() {
@@ -56,6 +68,54 @@ public class NioLocalFileSystem extends LocalFileSystem {
         }
       }
       super.setPermission(p, permission);
+    }
+
+    /**
+     * The stock lookup forks {@code readlink} on {@code f.toString()} and
+     * reads an empty answer as "not a link"; a path java.nio sees as no
+     * link gets the same answer without the fork.
+     */
+    @Override
+    public FileStatus getFileLinkStatus(Path f) throws IOException {
+      if (!Files.isSymbolicLink(new File(f.toString()).toPath())) {
+        return getFileStatus(f);
+      }
+      return super.getFileLinkStatus(f);
+    }
+  }
+
+  /** Hadoop's {@code LocalFs} (the {@code FileContext} filesystem) over {@link Raw}. */
+  public static class Fs extends ChecksumFs {
+    public Fs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+      super(new RawFs(conf));
+    }
+  }
+
+  /** Hadoop's {@code RawLocalFs} over {@link Raw}. */
+  static class RawFs extends DelegateToFileSystem {
+    RawFs(Configuration conf) throws IOException, URISyntaxException {
+      super(FsConstants.LOCAL_FS_URI, new Raw(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
+    }
+
+    @Override
+    public int getUriDefaultPort() {
+      return -1;
+    }
+
+    @Override
+    public FsServerDefaults getServerDefaults(Path f) throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    @SuppressWarnings("deprecation")
+    public FsServerDefaults getServerDefaults() throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public boolean isValidName(String src) {
+      return true;
     }
   }
 }

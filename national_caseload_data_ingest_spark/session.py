@@ -37,8 +37,10 @@ Design notes (SURVEY.md §7 step 1):
   (``tools/build_localfs_jar.py``) goes on the launch classpath, not in
   ``spark.jars``: spark-submit opens ``file://`` before it loads
   ``spark.jars``.  Like the daemon, this is a launch-time setting.
-  Streaming checkpoints write through Hadoop's ``FileContext``
-  (``RawLocalFs``), which this class does not reach; they still fork.
+  Streaming checkpoints and state stores write through Hadoop's
+  ``FileContext``, which ``fs.file.impl`` does not reach:
+  ``fs.AbstractFileSystem.file.impl`` points it at the same class's
+  ``Fs``.  Neither forks ``readlink`` to learn that a path is no symlink.
 """
 
 from __future__ import annotations
@@ -175,6 +177,7 @@ def get_spark(
         # file:// sets permissions in the JVM instead of forking chmod for
         # every file and dir it writes (module docstring).
         .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", LOCAL_FS_CLASS + "$Fs")
         .config("spark.driver.extraClassPath", LOCAL_FS_JAR)
         .config("spark.executor.extraClassPath", LOCAL_FS_JAR)
         # Run-once analytics on a single JVM: C1-only JIT (TieredStopAtLevel=1)

@@ -2,15 +2,22 @@
 
 The Spark-first replacement for the reference's per-row Python pipeline
 (CR-strip → csvkit fixed2csv → dict cast → JSON, SURVEY.md §2.1 A4-A9):
-here the whole thing is a single narrow projection over ``spark.read.text``
-— substring slicing, redaction, and casts are all ``Column`` expressions
-inside one whole-stage-codegen span.  No UDFs, no shuffle, no Python in the
-executor hot path; at 100 TB this scales linearly with input splits.
+here the whole thing is two narrow projections over ``spark.read.text``
+inside one whole-stage-codegen span.  The first slices and trims each
+field's cell, once per row; the second reads the cells as columns for
+redaction, casts and shadows.  Spark's subexpression elimination does not
+share an expression used only inside CASE WHEN branches, so a cell written
+into every branch would be sliced and trimmed again for each of them; and
+``CollapseProject`` keeps the two projections apart because each cell is
+read more than once.  No UDFs, no shuffle, no Python in the executor hot
+path; at 100 TB this scales linearly with input splits.
 
 Semantics reproduced (with reference citations):
 
 - ``\r`` is replaced by a **space, not removed**, so column offsets never
   shift (``/root/reference/ncd/normal_table.py:270-291``).
+  Only a line that holds a ``\r`` is rewritten; on every other line the
+  rule costs a byte scan, not a decode of the line into a Java ``String``.
 - A cell equal to ``*`` is a DOJ redaction marker: value → NULL and the
   ``redacted_{col}`` shadow BOOLEAN → true
   (``/root/reference/ncd/normal_table.py:200-222``).
@@ -33,6 +40,7 @@ Semantics reproduced (with reference citations):
   paths to each other.  A year of six or more digits is NULL without
   parsing, as under the reference's ``strptime('%Y')``: the legacy parser
   raises ``long overflow`` on years past 292277.
+- A blank DATE or FLOAT cell is NULL without a parse attempt.
 - VARCHAR keeps empty strings as ``''`` (Python ``str()`` never raises), so
   only redaction produces NULL strings.
 """
@@ -75,14 +83,16 @@ def _oracle_date(cell: Column) -> Column:
 
 def _cast_cell(cell: Column, f: FieldSpec) -> Column:
     """Typed value for one already-trimmed field, null-on-failure,
-    reference semantics."""
+    reference semantics.  A blank DATE or FLOAT cell is NULL before any
+    parse: the legacy date parser and ``Double.parseDouble`` would only
+    throw on it."""
     spark_type = f.spark_type()
     if isinstance(spark_type, T.LongType):
         return F.when(cell.rlike(_INT_RE), cell.cast("bigint"))
     if isinstance(spark_type, T.DateType):
-        return _oracle_date(cell)
+        return F.when(cell != "", _oracle_date(cell))
     if isinstance(spark_type, T.DoubleType):
-        return cell.cast("double")
+        return F.when(cell != "", cell.cast("double"))
     return cell
 
 
@@ -94,13 +104,19 @@ def project_fixed_width(lines: DataFrame, schema: TableSchema) -> DataFrame:
     :meth:`TableSchema.spark_schema`: all data columns, then all
     ``redacted_*`` shadows.
     """
-    # Offsets-preserving CR handling (A4).
-    value = F.translate(F.col("value"), "\r", " ")
-    cells = [F.trim(F.substring(value, f.start, f.length)) for f in schema.fields]
+    # Offsets-preserving CR handling (A4), on the lines that hold a CR.
+    value = F.col("value")
+    value = F.when(F.instr(value, "\r") > 0, F.translate(value, "\r", " ")).otherwise(value)
+    # Each cell once per row, in a projection of its own (module docstring).
+    cells = lines.select(
+        *(F.trim(F.substring(value, f.start, f.length)).alias(f"_c{i}")
+          for i, f in enumerate(schema.fields))
+    )
+    cols = [F.col(f"_c{i}") for i in range(len(schema.fields))]
     data = [
         F.when(cell == REDACTION_MARKER, F.lit(None)).otherwise(_cast_cell(cell, f))
-        for cell, f in zip(cells, schema.fields)
+        for cell, f in zip(cols, schema.fields)
     ]
-    shadows = [cell == REDACTION_MARKER for cell in cells]
+    shadows = [cell == REDACTION_MARKER for cell in cols]
     names = schema.spark_schema().names
-    return lines.select(*(c.alias(n) for c, n in zip(data + shadows, names)))
+    return cells.select(*(c.alias(n) for c, n in zip(data + shadows, names)))

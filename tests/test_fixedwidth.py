@@ -4,6 +4,7 @@ null-on-cast-failure, Oracle dates, CR handling, NUMBER int() parity."""
 import datetime
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from national_caseload_data_ingest_spark.sources.fixedwidth import (
     project_fixed_width,
@@ -77,6 +78,55 @@ def test_varchar_keeps_empty_string(spark):
     r = rows[""]
     # str('') never raises → empty string survives, not NULL (SURVEY §1.2)
     assert r["sid"] == "" and r["redacted_sid"] is False
+
+
+def test_blank_cells_are_null_except_varchar(spark):
+    # Space-only cells: NULL for NUMBER, DATE and FLOAT (int(''),
+    # strptime('') and float('') raise), '' for VARCHAR; none is redacted.
+    rows = _rows(spark, ["    " + " " * 5 + " " * 11 + " " * 8])
+    r = rows[""]
+    assert (r["sid"], r["num"], r["dt"], r["flt"]) == ("", None, None, None)
+    assert not any(r[f"redacted_{c}"] for c in ("sid", "num", "dt", "flt"))
+
+
+def test_each_cell_is_computed_once(spark):
+    # One slice per field plus the DATE fast path's three part slices
+    # (day, month, year).  Spark's subexpression elimination does not
+    # share a cell used only inside CASE WHEN branches, so a cell written
+    # into each branch is sliced again for every branch that reads it.
+    df = spark.createDataFrame([Row(value="x")], ["value"])
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        project_fixed_width(df, SCHEMA)._jdf.queryExecution(), "codegen"
+    )
+    dates = sum(f.src_type == "DATE" for f in SCHEMA.fields)
+    assert plan.count("substringSQL(") == len(SCHEMA.fields) + 3 * dates
+
+
+def test_lines_without_cr_are_unchanged(spark):
+    # The CR rewrite runs only on lines that hold one; every other line
+    # reaches the cells byte for byte as an unconditional translate leaves it.
+    whole = TableSchema(
+        "W", (FieldSpec("K", "VARCHAR2", 1, 2), FieldSpec("REST", "VARCHAR2", 3, 40))
+    )
+    lines = [
+        "01 tab\there  ",
+        "02É ü 漢字 trailing   ",
+        "03\u00a0nbsp \x00 nul",
+        "04 cr\rinside\r",
+        "05",
+    ]
+    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
+    got = {r["k"]: r["rest"] for r in project_fixed_width(df, whole).collect()}
+    value = F.translate("value", "\r", " ")
+    want = dict(
+        df.select(
+            F.trim(F.substring(value, 1, 2)), F.trim(F.substring(value, 3, 38))
+        ).collect()
+    )
+    assert {k: v.encode() for k, v in got.items()} == {
+        k: v.encode() for k, v in want.items()
+    }
+    assert got["04"] == "cr inside"
 
 
 def test_cr_becomes_space_offsets_preserved(spark):

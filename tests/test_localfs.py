@@ -1,10 +1,11 @@
 """The engine's ``file://`` filesystem (``jvm/NioLocalFileSystem.java``).
 
 It sets permissions through java.nio instead of forking ``chmod`` for
-every file and dir a write creates, writes the same modes as the stock
-class, keeps the rename rule of Hive's ``ProxyLocalFileSystem`` (the class
-``file://`` resolves to without it), and ships as a committed jar that
-must match its source.
+every file and dir a write creates, through ``FileSystem`` and through
+``FileContext`` (streaming checkpoints) alike, writes the same modes as
+the stock class, keeps the rename rule of Hive's ``ProxyLocalFileSystem``
+(the class ``file://`` resolves to without it), and ships as a committed
+jar that must match its source.
 """
 
 import json
@@ -61,21 +62,44 @@ print("RESULT " + json.dumps(out))
 """
 
 
-def test_writes_fork_no_chmod_and_keep_their_modes(tmp_path):
-    """A logging ``chmod`` first on ``PATH`` records every fork; the stock
-    class forks one per file and dir of these two writes (40 of them)."""
+STREAM = """
+import json, os, sys
+from national_caseload_data_ingest_spark.session import get_spark
+
+src, ckpt, log = sys.argv[1:]
+spark = get_spark("localfs-stream", master="local[2]", shuffle_partitions=2)
+open(log, "w").close()  # count from here: the session start is not a write
+counts = spark.readStream.text(src).groupBy("value").count()
+query = (
+    counts.writeStream.format("memory").queryName("counts").outputMode("complete")
+    .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+)
+query.awaitTermination()
+out = {"forks": open(log).read().splitlines()}
+out["rows"] = sorted(tuple(r) for r in spark.table("counts").collect())
+out["files"] = sorted(
+    os.path.relpath(os.path.join(d, n), ckpt) for d, _, files in os.walk(ckpt) for n in files
+)
+print("RESULT " + json.dumps(out))
+"""
+
+
+def _run_logging_forks(tmp_path, script, *args):
+    """Run ``script`` in a fresh interpreter with a logging ``chmod`` and
+    ``readlink`` first on ``PATH``, which append each fork to the last
+    argument's log file; return the script's ``RESULT`` JSON."""
     bindir = tmp_path / "bin"
     bindir.mkdir()
-    log = tmp_path / "chmod.log"
-    real = shutil.which("chmod")
-    (bindir / "chmod").write_text(
-        f'#!/bin/sh\necho "chmod $*" >> "{log}"\nexec {real} "$@"\n'
-    )
-    (bindir / "chmod").chmod(0o755)
+    log = tmp_path / "forks.log"
+    for tool in ("chmod", "readlink"):
+        real = shutil.which(tool)
+        (bindir / tool).write_text(
+            f'#!/bin/sh\necho "{tool} $*" >> "{log}"\nexec {real} "$@"\n'
+        )
+        (bindir / tool).chmod(0o755)
     env = dict(os.environ, PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}")
-    warehouse = tmp_path / "wh"
     proc = subprocess.run(
-        [sys.executable, "-c", WRITES, str(warehouse), str(log)],
+        [sys.executable, "-c", script, *map(str, args), str(log)],
         cwd=ROOT,
         env=env,
         capture_output=True,
@@ -84,7 +108,14 @@ def test_writes_fork_no_chmod_and_keep_their_modes(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     line = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")][-1]
-    out = json.loads(line[len("RESULT "):])
+    return json.loads(line[len("RESULT "):])
+
+
+def test_writes_fork_no_chmod_and_keep_their_modes(tmp_path):
+    """The stock class forks one ``chmod`` per file and dir of these two
+    writes (40 of them)."""
+    warehouse = tmp_path / "wh"
+    out = _run_logging_forks(tmp_path, WRITES, warehouse)
 
     assert out["write_forks"] == []
     modes = out["modes"]
@@ -100,6 +131,24 @@ def test_writes_fork_no_chmod_and_keep_their_modes(tmp_path):
     # The sticky bit is not plain rwx: it goes through the stock chmod.
     assert oct(out["sticky"] & 0o7777) == "0o1777"
     assert out["all_forks"] == [f"chmod 1777 {warehouse / 'sticky'}"]
+
+
+def test_streaming_checkpoint_forks_nothing(tmp_path):
+    """A stateful query's checkpoint (offsets, commits, metadata, state
+    store deltas) goes through ``FileContext``; with Hadoop's ``LocalFs``
+    under it this query forks over a hundred ``chmod`` and ``readlink``."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part.txt").write_text("a\nb\na\n")
+    ckpt = tmp_path / "ckpt"
+    out = _run_logging_forks(tmp_path, STREAM, src, ckpt)
+
+    assert out["forks"] == []
+    assert out["rows"] == [["a", 2], ["b", 1]]
+    files = out["files"]
+    assert "metadata" in files
+    assert "offsets/0" in files and "commits/0" in files
+    assert any(f.startswith("state/0/") and f.endswith(".delta") for f in files)
 
 
 def _filesystem(spark, cls):
@@ -131,6 +180,23 @@ def test_rename_refuses_an_existing_file(spark, tmp_path, cls):
         fs.close()
 
 
+@pytest.mark.parametrize("cls", [STOCK, LOCAL_FS_CLASS])
+def test_link_status_matches_the_stock_lookup(spark, tmp_path, cls):
+    """The java.nio symlink test answers as the stock ``readlink`` fork
+    does: a symlink reports its target, a plain file reports none."""
+    fs, Path = _filesystem(spark, cls)
+    try:
+        target, link = tmp_path / "target.txt", tmp_path / "link.txt"
+        target.write_text("x")
+        link.symlink_to(target)
+        status = fs.getFileLinkStatus(Path(str(link)))
+        assert status.isSymlink()
+        assert status.getSymlink().toUri().getPath() == str(target)
+        assert not fs.getFileLinkStatus(Path(str(target))).isSymlink()
+    finally:
+        fs.close()
+
+
 @pytest.mark.skipif(shutil.which("javac") is None, reason="needs a JDK")
 def test_committed_jar_matches_its_source(tmp_path):
     rebuilt = tmp_path / "rebuilt.jar"
@@ -149,7 +215,9 @@ def test_committed_jar_matches_its_source(tmp_path):
 
     got = classes(rebuilt)
     assert sorted(got) == [
+        "national_caseload_data_ingest_spark/jvm/NioLocalFileSystem$Fs.class",
         "national_caseload_data_ingest_spark/jvm/NioLocalFileSystem$Raw.class",
+        "national_caseload_data_ingest_spark/jvm/NioLocalFileSystem$RawFs.class",
         "national_caseload_data_ingest_spark/jvm/NioLocalFileSystem.class",
     ]
     assert got == classes(LOCAL_FS_JAR)

@@ -40,7 +40,6 @@ Semantics reproduced (with reference citations):
   paths to each other.  A year of six or more digits is NULL without
   parsing, as under the reference's ``strptime('%Y')``: the legacy parser
   raises ``long overflow`` on years past 292277.
-- A blank DATE or FLOAT cell is NULL without a parse attempt.
 - VARCHAR keeps empty strings as ``''`` (Python ``str()`` never raises), so
   only redaction produces NULL strings.
 """
@@ -83,16 +82,14 @@ def _oracle_date(cell: Column) -> Column:
 
 def _cast_cell(cell: Column, f: FieldSpec) -> Column:
     """Typed value for one already-trimmed field, null-on-failure,
-    reference semantics.  A blank DATE or FLOAT cell is NULL before any
-    parse: the legacy date parser and ``Double.parseDouble`` would only
-    throw on it."""
+    reference semantics."""
     spark_type = f.spark_type()
     if isinstance(spark_type, T.LongType):
         return F.when(cell.rlike(_INT_RE), cell.cast("bigint"))
     if isinstance(spark_type, T.DateType):
-        return F.when(cell != "", _oracle_date(cell))
+        return _oracle_date(cell)
     if isinstance(spark_type, T.DoubleType):
-        return F.when(cell != "", cell.cast("double"))
+        return cell.cast("double")
     return cell
 
 

@@ -74,19 +74,20 @@ def test_typed_projection_and_redaction(spark):
 
 
 def test_varchar_keeps_empty_string(spark):
-    rows = _rows(spark, ["    " + "    1" + " " * 11 + " " * 8])
-    r = rows[""]
+    df = spark.createDataFrame(
+        [("    " + "    1" + " " * 11 + " " * 8,), (" " * 28,)], ["value"]
+    )
+    rows = {r["num"]: r for r in project_fixed_width(df, SCHEMA).collect()}
+    r = rows[1]
     # str('') never raises → empty string survives, not NULL (SURVEY §1.2)
     assert r["sid"] == "" and r["redacted_sid"] is False
-
-
-def test_blank_cells_are_null_except_varchar(spark):
-    # Space-only cells: NULL for NUMBER, DATE and FLOAT (int(''),
-    # strptime('') and float('') raise), '' for VARCHAR; none is redacted.
-    rows = _rows(spark, ["    " + " " * 5 + " " * 11 + " " * 8])
-    r = rows[""]
-    assert (r["sid"], r["num"], r["dt"], r["flt"]) == ("", None, None, None)
-    assert not any(r[f"redacted_{c}"] for c in ("sid", "num", "dt", "flt"))
+    # A blank NUMBER, DATE or FLOAT cell is NULL (int(''), strptime('') and
+    # float('') raise), and no blank cell is redacted.
+    assert r["dt"] is None and r["flt"] is None
+    blank = rows[None]
+    assert (blank["sid"], blank["dt"], blank["flt"]) == ("", None, None)
+    for row in (r, blank):
+        assert not any(row[f"redacted_{c}"] for c in ("sid", "num", "dt", "flt"))
 
 
 def test_each_cell_is_computed_once(spark):

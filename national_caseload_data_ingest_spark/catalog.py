@@ -138,7 +138,7 @@ class SparkCatalog:
         """
         cols = _column_list(schema.fields)
         partition_clause = (
-            "\nPARTITIONED BY (filename_district STRING)" if partitioned else ""
+            f"\nPARTITIONED BY ({PARTITION_COLUMN} STRING)" if partitioned else ""
         )
         location = f"s3://{data_bucket}/{s3_prefix}/{self.db_name}/{table_name}"
         ddl = (

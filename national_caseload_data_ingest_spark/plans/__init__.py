@@ -3,8 +3,8 @@
 The engine's performance contract is expressed as assertions over Catalyst
 physical plans — filters reach the parquet scan, dims broadcast, top-k
 never globally sorts, nothing silently degrades to a cartesian product.
-``tests/test_plans.py`` enforces these on the operator catalog; the same
-helpers are available to users tuning their own queries.
+``tests/test_plans.py`` enforces these on the operator catalog with the
+helpers below.
 """
 
 from __future__ import annotations
@@ -37,10 +37,6 @@ def _tree_section(plan: str) -> str:
     return plan[: m.start()] if m else plan
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Every ``PushedFilters: [...]`` group found in the plan's scans."""
     plan = physical_plan(df)
@@ -63,24 +59,8 @@ def join_kinds(df: DataFrame) -> list[str]:
     )
 
 
-def codegen_span_count(df: DataFrame) -> int:
-    """Number of distinct WholeStageCodegen spans in the executed plan.
-
-    Simple-mode plan strings mark codegen'd operators as ``*(N) Op``; the
-    distinct ``N`` values are the codegen stages.  With AQE, execute the
-    DataFrame first (e.g. ``df.collect()``) or the plan shows the
-    pre-adaptive tree."""
-    s = df._jdf.queryExecution().executedPlan().toString()
-    return len(set(re.findall(r"\*\((\d+)\)", s)))
-
-
 def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in physical_plan(df)
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges (excludes broadcast exchanges)."""
-    return len(shuffle_exchanges(df))
 
 
 def shuffle_exchanges(df: DataFrame) -> list[str]:
@@ -92,8 +72,3 @@ def shuffle_exchanges(df: DataFrame) -> list[str]:
         for ln in tree.splitlines()
         if re.search(r"\bExchange\b", ln) and "Broadcast" not in ln
     ]
-
-
-def assert_no_cartesian(df: DataFrame) -> None:
-    kinds = join_kinds(df)
-    assert "CartesianProduct" not in kinds, f"cartesian product in plan: {kinds}"

@@ -55,8 +55,6 @@ LOCAL_FS_JAR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "jvm", "ncd-localfs.jar"
 )
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 # The engine's SQL confs: get_spark builds every session with them, and
 # they are all runtime-settable, so configure_runtime also applies them to
 # a session the caller (e.g. a benchmark harness) built, once per session
@@ -80,8 +78,9 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Runtime bloom-filter join pruning: for a selective fact-fact join
     # the build side injects a bloom filter into the probe side's scan,
-    # cutting shuffle input before it's written.  Off by default in
-    # Spark; at 100 TB it's one of the cheapest shuffle reducers.
+    # cutting shuffle input before it's written.  A plain PySpark 4.1
+    # session has it on already; the entry keeps it on in a session built
+    # elsewhere with it off, since configure_runtime applies every entry.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     # Whole-stage codegen normally ABANDONS a stage whose generated
     # method exceeds 64 KB bytecode (falls back to interpreted
@@ -150,9 +149,8 @@ def get_spark(
         .config(map=RUNTIME_CONFS)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or int(cpus)),
         )
-        .config("spark.sql.parquet.filterPushdown", "true")
         # Local mode: the driver is the only JVM; give it headroom but leave
         # room for Python workers (container has 128 GiB).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))

@@ -640,11 +640,10 @@ def _funnel_update_factory(steps: tuple[str, ...]):
     Greedy arrival-order advancement equals the batch min-time
     semantics (`operators/behavior.funnel_user_steps`) when ingestion
     is event-time ordered across batches — the standard append-log
-    case; out-of-order feeds should use the reorder-buffered variant
-    (:func:`_funnel_buffered_update_factory` /
-    :func:`funnel_stream_buffered`), which releases events only after
-    the watermark passes them.  State here is two scalars per user:
-    bounded by the user population, not history.
+    case; out-of-order feeds should use the reorder-buffered kernel
+    (:func:`_funnel_buffered_update_factory`), which releases events
+    only after the watermark passes them.  State here is two scalars per
+    user: bounded by the user population, not history.
 
     Note: Spark 4's ``transformWithStateInPandas`` expresses the same
     machine with typed ValueState (a mixin sketch lived here briefly),
@@ -793,28 +792,6 @@ def _funnel_buffered_update_factory(steps: tuple[str, ...]):
             )
 
     return update
-
-
-def funnel_stream_buffered(
-    spark: SparkSession, events_dir: str, delay: str = WATERMARK
-) -> DataFrame:
-    """Event-time-correct streaming funnel: watermarked input feeding
-    the reorder-buffered kernel.  Output matches the batch twin on any
-    feed whose out-of-orderness is bounded by ``delay`` (events still
-    inside the delay horizon when the stream ends remain buffered —
-    correctness over completeness, the standard watermark trade)."""
-    from national_caseload_data_ingest_spark.operators.behavior import (  # noqa: PLC0415
-        FUNNEL_STEPS,
-    )
-
-    e = _events_stream(spark, events_dir).withWatermark("ts", delay)
-    return e.groupBy("user_id").applyInPandasWithState(
-        _funnel_buffered_update_factory(FUNNEL_STEPS),
-        outputStructType=FUNNEL_OUT,
-        stateStructType=_FUNNEL_BUF_STATE,
-        outputMode="update",
-        timeoutConf="EventTimeTimeout",
-    )
 
 
 def correlate_signup_purchase_outer(

@@ -2,7 +2,7 @@
 
 A module that defines the same top-level function or class name twice
 keeps only the later definition: every caller that runs after the module
-finishes importing gets it, whichever one it meant.  A top-level private
+finishes importing gets it, whichever one it meant.  A top-level
 function or class that no code references is dead weight that still
 reads as a live plan.  No linter in this environment reports either, so
 the checks are ``ast`` walks.
@@ -42,12 +42,14 @@ def test_no_module_defines_a_top_level_name_twice():
     assert not dupes, dupes
 
 
-def test_every_private_top_level_def_is_referenced():
-    """Each top-level ``_private`` function or class in the package is
-    named by code somewhere in the repo: a ``Name``, an ``Attribute`` or
-    an import alias.  A mention in a docstring or comment does not count."""
+def test_every_undecorated_top_level_def_is_referenced():
+    """Each top-level function or class in the package is named by code
+    somewhere in the repo: a ``Name``, an ``Attribute`` or an import
+    alias.  A mention in a docstring or comment does not count.  A public
+    decorated def is exempt: ``@query`` registers it in ``QUERIES``,
+    which callers reach by name."""
     referenced = set()
-    private = {}
+    defined = {}
     for path, tree in _parsed(REPO):
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
@@ -57,18 +59,18 @@ def test_every_private_top_level_def_is_referenced():
             elif isinstance(node, ast.alias):
                 referenced.add(node.name.rsplit(".", 1)[-1])
         if PACKAGE in path.parents:
-            private[str(path.relative_to(PACKAGE))] = [
+            defined[str(path.relative_to(PACKAGE))] = [
                 node.name
                 for node in tree.body
                 if isinstance(
                     node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
                 )
-                and node.name.startswith("_")
+                and (node.name.startswith("_") or not node.decorator_list)
                 and not node.name.startswith("__")
             ]
     unreferenced = {
         module: sorted(set(names) - referenced)
-        for module, names in private.items()
+        for module, names in defined.items()
         if set(names) - referenced
     }
     assert not unreferenced, unreferenced

@@ -717,7 +717,7 @@ def test_funnel_stream_out_of_order_cross_batch_semantics(spark, tmp_path):
     assert len(batch) == 1 and batch[0]["step_reached"] == 2
 
 
-def test_funnel_stream_buffered_matches_batch_on_out_of_order_feed(
+def test_buffered_funnel_kernel_matches_batch_on_out_of_order_feed(
     spark, tmp_path
 ):
     """The reorder-buffered funnel fixes EXACTLY the divergence the

@@ -41,12 +41,47 @@ Design notes (SURVEY.md §7 step 1):
   ``FileContext``, which ``fs.file.impl`` does not reach:
   ``fs.AbstractFileSystem.file.impl`` points it at the same class's
   ``Fs``.  Neither forks ``readlink`` to learn that a path is no symlink.
+- **Class-data sharing for the driver JVM** — a cold driver reads, parses
+  and verifies about 22k classes out of Spark's jars, about 12 s of the
+  JVM's class-loading time, and the paper's CLI pays that once per zip.
+  The JVM can map those classes, already parsed and verified, from a
+  dynamic CDS archive instead.  JDK 17 records one only as a JVM exits
+  (``-XX:ArchiveClassesAtExit``), so the first launch for a key records
+  it and every later launch maps it (``-XX:SharedArchiveFile``).  The
+  archives live in ``CDS_DIR``, next to ``jvm/ncd-localfs.jar`` in the
+  checkout (``spark.local.dir`` is made afresh per run); if that
+  directory is not writable the JVM launches without CDS.  An archive's
+  name is ``ncd-driver-<options>-<inputs>.jsa``: ``<options>`` hashes the
+  driver's Java options and heap size (above 32g the JVM turns compressed
+  oops off and rejects an archive recorded with a small heap, so the 48g
+  default and a 1g benchmark keep separate archives), ``<inputs>`` the
+  ``java`` binary, its ``lib/modules`` and each jar on the driver class
+  path (path, size, mtime).  A recording prunes the archives with its
+  options hash and another inputs hash.  Each takes 140-210 MB.  The
+  recording launch costs more: 6-11 CPU-s more set-up on the benchmark
+  dump, and the JVM writes the archive as it exits (1 s for a short
+  run, 20-30 s after the tier-1 suite).  That is paid once per checkout,
+  JDK, jar set and option set; a harness that runs every run in a fresh
+  checkout pays it on every run and is slower than without CDS.
+  Only a finished archive is passed to the JVM: a truncated archive whose
+  header is valid crashes the JVM that maps it (SIGBUS), and the JVM
+  writes the header last.  So the JVM records to ``….part.jsa``, claimed
+  with an exclusive create, and a later launch renames it into place once
+  its first 4 bytes are the magic ``CDS_MAGIC``.  A claim that stays
+  unfinished (a recording running, failed or killed) launches without
+  CDS and is not recorded again; deleting ``jvm/*.jsa`` starts afresh.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # The file:// filesystem get_spark launches with, and its committed jar.
@@ -54,6 +89,16 @@ LOCAL_FS_CLASS = "national_caseload_data_ingest_spark.jvm.NioLocalFileSystem"
 LOCAL_FS_JAR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "jvm", "ncd-localfs.jar"
 )
+
+# Where get_spark keeps the driver's class-data-sharing archives (module
+# docstring): next to the jar, in the checkout.
+CDS_DIR = os.path.dirname(LOCAL_FS_JAR)
+# The first 4 bytes of a dynamic archive whose header the JVM has written
+# (CDS_DYNAMIC_ARCHIVE_MAGIC 0xf00baba8, little-endian).
+CDS_MAGIC = b"\xa8\xab\x0b\xf0"
+# A recording prints dozens of "Preload Warning" lines, and a mapping the
+# JVM rejects falls back to loading from the jars: neither is an error.
+CDS_QUIET = "-Xlog:cds*=off"
 
 # The engine's SQL confs: get_spark builds every session with them, and
 # they are all runtime-settable, so configure_runtime also applies them to
@@ -139,45 +184,47 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for the test/bench
     environment; on a real cluster pass ``None`` and let spark-submit decide.
+    A call that launches the driver JVM starts it from its class-data-sharing
+    archive, or records that archive as the JVM exits (module docstring).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config(map=RUNTIME_CONFS)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(cpus)),
-        )
-        # Local mode: the driver is the only JVM; give it headroom but leave
-        # room for Python workers (container has 128 GiB).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    launch = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or int(cpus)),
+        # Local mode: the driver is the only JVM.  The heap is a ceiling
+        # that grows on demand, so 48g also runs on a 15 GiB VM.  Above 32g
+        # the JVM turns compressed oops off, so this default and a small
+        # heap (perfbench's 1g) keep separate CDS archives.
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
         # Shuffle/spill files on tmpfs: the test VM's block device has high
-        # iowait variance and 126 GiB of RAM-backed /dev/shm sits idle.  On
-        # a real cluster leave spark.local.dir to the deployment (NVMe).
-        .config(
-            "spark.local.dir",
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_DIR",
-                "/dev/shm/spark-local"
-                if os.path.isdir("/dev/shm")
-                else os.path.join(os.path.sep, "tmp", "spark-local"),
-            ),
-        )
-        .config("spark.ui.enabled", "false")
+        # iowait variance.  On a real cluster leave spark.local.dir to the
+        # deployment (NVMe).
+        "spark.local.dir": os.environ.get(
+            "SPARK_GRAFT_LOCAL_DIR",
+            "/dev/shm/spark-local"
+            if os.path.isdir("/dev/shm")
+            else os.path.join(os.path.sep, "tmp", "spark-local"),
+        ),
+        "spark.ui.enabled": "false",
         # Python workers fork from a daemon that reads an unchanged
         # pyspark.zip once, not on every task (module docstring).
-        .config(
-            "spark.python.daemon.module", "national_caseload_data_ingest_spark.pydaemon"
-        )
+        "spark.python.daemon.module": "national_caseload_data_ingest_spark.pydaemon",
         # file:// sets permissions in the JVM instead of forking chmod for
         # every file and dir it writes (module docstring).
-        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
-        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", LOCAL_FS_CLASS + "$Fs")
-        .config("spark.driver.extraClassPath", LOCAL_FS_JAR)
-        .config("spark.executor.extraClassPath", LOCAL_FS_JAR)
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_FS_CLASS + "$Fs",
+        # Spark's own jars come right after ours, ahead of the launcher's
+        # $SPARK_CONF_DIR: that directory holds Spark's *.template files,
+        # and JDK 17 will not record a CDS archive when a class loads from
+        # behind a non-empty directory on the class path.  No jar there
+        # carries a root log4j2/spark/Hadoop/Hive conf file, so the conf
+        # directory still supplies each one
+        # (tests/test_session_cds.py checks both).
+        "spark.driver.extraClassPath": os.pathsep.join(
+            [LOCAL_FS_JAR, os.path.join(_find_spark_home(), "jars", "*")]
+        ),
+        "spark.executor.extraClassPath": LOCAL_FS_JAR,
         # Run-once analytics on a single JVM: C1-only JIT (TieredStopAtLevel=1)
         # compiles generated code immediately instead of interpreting while
         # waiting for C2 profile thresholds, and -XX:-DontCompileHugeMethods
@@ -186,20 +233,91 @@ def get_spark(
         # 3-15× first-run speedups on wide-aggregate plans.  Long-running
         # clusters should override via SPARK_GRAFT_JAVA_OPTS (C2 wins once
         # code is hot for hours).
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_JAVA_OPTS",
-                "-XX:-DontCompileHugeMethods -XX:TieredStopAtLevel=1 "
-                "-XX:ReservedCodeCacheSize=512m",
-            ),
+        "spark.driver.extraJavaOptions": os.environ.get(
+            "SPARK_GRAFT_JAVA_OPTS",
+            "-XX:-DontCompileHugeMethods -XX:TieredStopAtLevel=1 "
+            "-XX:ReservedCodeCacheSize=512m",
+        ),
+        **(extra_conf or {}),
+    }
+    recording = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cds, recording = _cds_options(launch)
+        launch["spark.driver.extraJavaOptions"] = " ".join(
+            [launch["spark.driver.extraJavaOptions"], *cds]
         )
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(master)
+        .config(map=RUNTIME_CONFS)
+        .config(map=launch)
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    try:
+        spark = builder.getOrCreate()
+    except BaseException:
+        # The launch failed, so no JVM records: free the claim for the next.
+        if recording is not None:
+            with contextlib.suppress(OSError):
+                os.remove(recording)
+        raise
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _cds_options(launch: dict[str, str]) -> tuple[list[str], str | None]:
+    """The CDS options of a driver launch with confs ``launch``, and the
+    path it records to, if it records (module docstring)."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java or not os.access(CDS_DIR, os.W_OK):
+        return [], None
+    java = os.path.realpath(java)
+    files = [java, os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules")]
+    for entry in launch["spark.driver.extraClassPath"].split(os.pathsep):
+        if os.path.basename(entry) == "*":
+            files += sorted(glob.glob(entry + ".jar"))
+        elif entry:
+            files.append(entry)
+    inputs = hashlib.sha256()
+    for path in files:
+        try:
+            st = os.stat(path)
+        except OSError:
+            continue  # the JVM skips a missing class-path entry too
+        inputs.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    options = hashlib.sha256(
+        f"{launch['spark.driver.memory']}\0{launch['spark.driver.extraJavaOptions']}".encode()
+    )
+    prefix = os.path.join(CDS_DIR, f"ncd-driver-{options.hexdigest()[:16]}-")
+    stem = prefix + inputs.hexdigest()[:16]
+    archive, recording = stem + ".jsa", stem + ".part.jsa"
+    # A recording is renamed into place only once the JVM has written its
+    # header, which it writes last: a truncated archive with a valid header
+    # crashes the JVM that maps it (SIGBUS).
+    if not _cds_finished(archive) and _cds_finished(recording):
+        with contextlib.suppress(FileNotFoundError):  # a concurrent launch did it
+            os.replace(recording, archive)
+    if _cds_finished(archive):
+        return [f"-XX:SharedArchiveFile={archive}", CDS_QUIET], None
+    # One recording per key: a claim that is still there and unfinished is
+    # a recording that is running, or one that failed or was killed.
+    try:
+        os.close(os.open(recording, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
+    except OSError:
+        return [], None
+    for old in glob.glob(glob.escape(prefix) + "*.jsa"):
+        if not old.startswith(stem):
+            with contextlib.suppress(OSError):
+                os.remove(old)
+    return [f"-XX:ArchiveClassesAtExit={recording}", CDS_QUIET], recording
+
+
+def _cds_finished(path: str) -> bool:
+    try:
+        with open(path, "rb") as fh:
+            return fh.read(len(CDS_MAGIC)) == CDS_MAGIC
+    except OSError:
+        return False
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:

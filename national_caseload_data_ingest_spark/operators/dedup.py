@@ -39,7 +39,6 @@ from national_caseload_data_ingest_spark.operators.registry import (
 # ≳ (1/8)^(1/4) ≈ 0.6 with high probability.
 MINHASH_PERMS = 32
 MINHASH_BANDS = 8
-ROWS_PER_BAND = MINHASH_PERMS // MINHASH_BANDS
 JACCARD_THRESHOLD = 0.5
 SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4
@@ -364,20 +363,10 @@ def _jaccard_block_kernel(threshold: float, max_docs: int, max_cells: int):
     return kernel
 
 
-def _gram_bits(postings: DataFrame) -> dict[str, int]:
-    """Gram → bit index over the postings' sorted distinct grams (one
-    bounded driver collect; every dense tier's routing caps the count)."""
-    grams = sorted(
-        r["gram"] for r in postings.select("gram").distinct().collect()
-    )
-    return {g: i for i, g in enumerate(grams)}
-
-
 def _pack_bitsets(
     per_doc: DataFrame,
     bit_map: dict,
     block_col: str | None = None,
-    absent_ok: bool = False,
 ) -> DataFrame:
     """Replace ``per_doc``'s ``grams`` array column with ``bits``: each
     row's grams packed LSB-first (gram bit i sets bit ``i & 7`` of byte
@@ -385,8 +374,7 @@ def _pack_bitsets(
     into ``ceil(len(map) / 8)`` bytes.  Every other column passes
     through.  ``bit_map`` is one gram → bit map, or with ``block_col``
     one such map per value of that column.  A gram missing from its map
-    raises ``KeyError`` unless ``absent_ok`` (a map over part of the
-    vocabulary, whose other grams are dropped)."""
+    raises ``KeyError``."""
     from pyspark.sql.types import StructType  # noqa: PLC0415
 
     bc = per_doc.sparkSession.sparkContext.broadcast(bit_map)
@@ -401,8 +389,6 @@ def _pack_bitsets(
             bits = []
             for key, gs in zip(keys, pdf["grams"]):
                 m = maps[key] if block_col else maps
-                if absent_ok:
-                    gs = [x for x in gs if x in m]
                 buf = bytearray((len(m) + 7) // 8)
                 for x in gs:
                     bit = m[x]
@@ -423,140 +409,45 @@ def _bitset_matrix(rows: list, nbytes: int):
     ).reshape(len(rows), nbytes)
 
 
-def _popcount_table():
-    """Set-bit count of every byte value, uint16 so row sums do not wrap."""
-    import numpy as np  # noqa: PLC0415
-
-    return np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
-
-
-# Dense-vocabulary routing for the blocked verifier: below MIN_WORK the
-# single-task-per-block matmul kernel is already fast (and avoids the
-# stats collect); above it the bitset tier's 32-way parallelism wins —
-# measured at sf1 (50k docs, 961 grams): the matmul kernel runs ONE task
-# per lang block (5 of 32 cores busy, minutes), the bitset tier spreads
-# the same exact work across every core.
-JACCARD_DENSE_MIN_WORK = 4_000_000_000
-
-# Dense-tier actuals may exceed the routing ESTIMATE by this factor
+# Pair-work cap of both BLAS band tiers, in float32 byte-ops (n² · 4g
+# per block): containment's router gates on it, and both tiers re-check
+# it after their collect.
+DENSE_WORK_BUDGET = 400_000_000_000
+# Band-tier actuals may exceed the routing ESTIMATE by this factor
 # before the post-collect assertion trips (estimates bracket, they
 # don't bound exactly: g_hi vs global-distinct, countDistinct HLL).
 DENSE_BUDGET_SLACK = 1.5
 
 
-def _assert_dense_actuals(
-    label: str,
-    n_rows: int,
-    row_bytes: int,
-    *,
-    work_budget: int,
-    bcast_budget: int,
-    pair_sum: int | None = None,
-) -> None:
-    """Post-collect budget assertion for every dense bitset tier
+def _assert_dense_actuals(label: str, n_rows: int, row_bytes: int) -> None:
+    """Post-collect budget assertion of both BLAS band tiers against
+    ``DENSE_WORK_BUDGET`` and ``JACCARD_BLAS_BCAST_BUDGET``
     (VERDICT r11 ask #6): the ROUTING decision used estimated stats
     from a separate job; if the corpus changed between that job and
     the collect (non-deterministic source, concurrent writer) the
     actuals can dwarf the estimate.  Fail loudly with the
     estimate-vs-actual delta instead of OOMing the driver broadcast or
-    wedging executors in an unbounded popcount."""
-    pairs = pair_sum if pair_sum is not None else n_rows * n_rows
-    actual_work = pairs * row_bytes
+    wedging executors in an unbounded sgemm."""
+    actual_work = n_rows * n_rows * row_bytes
     actual_bcast = n_rows * row_bytes
-    if (actual_bcast > bcast_budget * DENSE_BUDGET_SLACK
-            or actual_work > work_budget * DENSE_BUDGET_SLACK):
+    if (actual_bcast > JACCARD_BLAS_BCAST_BUDGET * DENSE_BUDGET_SLACK
+            or actual_work > DENSE_WORK_BUDGET * DENSE_BUDGET_SLACK):
         raise ValueError(
-            f"{label}: dense-tier ACTUALS exceed the routing budget — "
+            f"{label}: band-tier ACTUALS exceed the routing budget — "
             f"collected {n_rows:,} bitset rows × {row_bytes:,} B: "
-            f"broadcast {actual_bcast:,} B (budget {bcast_budget:,}), "
-            f"work {actual_work:,} byte-ops (budget {work_budget:,}), "
+            f"broadcast {actual_bcast:,} B "
+            f"(budget {JACCARD_BLAS_BCAST_BUDGET:,}), "
+            f"work {actual_work:,} byte-ops (budget {DENSE_WORK_BUDGET:,}), "
             f"slack ×{DENSE_BUDGET_SLACK}; the stats job no longer "
             "describes this corpus (non-deterministic source?) — "
             "refusing to proceed; route to the posting-join/prefix tier"
         )
 
 
-def _jaccard_dense_pairs(
-    postings: DataFrame, block_cols: list[str], threshold: float
-) -> DataFrame:
-    """Blocked exact Jaccard, dense-vocabulary tier: per-doc G-bit
-    bitsets against a broadcast matrix (same trick as
-    :func:`_containment_dense_pairs`), emitting the IDENTICAL
-    ``(doc_a < doc_b, jaccard)`` relation as the matmul kernel —
-    intersection counts are exact integers in both tiers and the one
-    float64 division is the same expression, so results are
-    bit-identical (equivalence pytest)."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    spark = postings.sparkSession
-    gram_bit = _gram_bits(postings)
-    nbytes = (len(gram_bit) + 7) // 8
-    blk = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in block_cols])
-    per_doc = (
-        postings.withColumn("__blk", blk)
-        .groupBy("doc_id", "__blk")
-        .agg(F.collect_set("gram").alias("grams"))
-    )
-    bitsets = _pack_bitsets(per_doc, gram_bit).persist()
-    rows = bitsets.collect()  # bounded: D * (G/8 + key) inside the budget
-    from collections import Counter  # noqa: PLC0415
-
-    blk_n = Counter(r["__blk"] for r in rows)
-    _assert_dense_actuals(
-        "_jaccard_dense_pairs", len(rows), max(nbytes, 1),
-        work_budget=DENSE_WORK_BUDGET,
-        bcast_budget=HYBRID_BCAST_BUDGET,
-        pair_sum=sum(c * c for c in blk_n.values()),
-    )
-    ids_all = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    blk_all = np.array([r["__blk"] for r in rows], dtype=object)
-    mat_all = _bitset_matrix(rows, nbytes)
-    pc_table = _popcount_table()
-    sizes_all = pc_table[mat_all].sum(axis=1, dtype=np.int64)
-    bc_mat = spark.sparkContext.broadcast(
-        (ids_all, blk_all, mat_all, sizes_all)
-    )
-
-    def kernel(batches):
-        ids, blks, mat, sizes = bc_mat.value
-        for pdf in batches:
-            da, db, jj = [], [], []
-            for doc_id, b, bits in zip(
-                pdf["doc_id"], pdf["__blk"], pdf["bits"]
-            ):
-                a = np.frombuffer(bytes(bits), dtype=np.uint8)
-                # doc_a < doc_b orientation: emit from the smaller id
-                mask = (ids > int(doc_id)) & (blks == b)
-                if not mask.any():
-                    continue
-                sub = np.nonzero(mask)[0]
-                common = pc_table[mat[sub] & a].sum(axis=1, dtype=np.int64)
-                n_a = int(pc_table[a].sum())
-                jac = common / (n_a + sizes[sub] - common)
-                keep = jac >= threshold
-                hits = sub[keep]
-                if len(hits):
-                    da.extend([int(doc_id)] * len(hits))
-                    db.extend(ids[hits].tolist())
-                    jj.extend(jac[keep].tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_a": pd.Series(da, dtype="int64"),
-                    "doc_b": pd.Series(db, dtype="int64"),
-                    "jaccard": pd.Series(jj, dtype="float64"),
-                }
-            )
-
-    return bitsets.mapInPandas(
-        kernel, schema="doc_a bigint, doc_b bigint, jaccard double"
-    )
-
-
 # BLAS band tier: flops threshold above which ONE block's sgemm
 # stops being "already fast" on a single task, and the float32
 # incidence-matrix broadcast cap that keeps the tier inside a sane
-# executor footprint (above it the 8×-denser bitset tier takes over,
+# executor footprint (above it the router keeps the per-block kernel,
 # same relation).  The crossover is measurement-calibrated: the tier
 # pays ~1-1.5 s of fixed orchestration (two driver collects + the
 # matrix broadcast), and single-core sgemm+screen throughput measures
@@ -566,6 +457,7 @@ def _jaccard_dense_pairs(
 # with margin on both sides.
 JACCARD_BLAS_MIN_FLOPS = 30_000_000_000
 JACCARD_BLAS_BCAST_BUDGET = 128 * 1024 * 1024
+JACCARD_BLAS_STATS_CAP = 1 << 20  # max distinct (block, gram) rows collected
 
 
 def _jaccard_bcast_pairs(
@@ -595,10 +487,10 @@ def _jaccard_bcast_pairs(
     blk = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in block_cols])
     blocked = postings.withColumn("__blk", blk)
     gram_rows = blocked.select("__blk", "gram").distinct().collect()
-    if len(gram_rows) > HYBRID_STATS_CAP:
+    if len(gram_rows) > JACCARD_BLAS_STATS_CAP:
         raise ValueError(
             f"jaccard BLAS tier: {len(gram_rows)} distinct (block, gram) "
-            f"rows exceed the driver stats cap {HYBRID_STATS_CAP}; "
+            f"rows exceed the driver stats cap {JACCARD_BLAS_STATS_CAP}; "
             "re-block finer or route to the posting-join tier."
         )
     gidx: dict[str, dict[str, int]] = {}
@@ -635,9 +527,7 @@ def _jaccard_bcast_pairs(
         # (one unpacked block) and the pair work before anything is
         # broadcast
         _assert_dense_actuals(
-            f"_jaccard_bcast_pairs[{b!r}]", len(rs), 4 * max(g_b, 1),
-            work_budget=DENSE_WORK_BUDGET,
-            bcast_budget=JACCARD_BLAS_BCAST_BUDGET,
+            f"_jaccard_bcast_pairs[{b!r}]", len(rs), 4 * max(g_b, 1)
         )
         total_work += len(rs) * len(rs) * 4 * g_b
         rs.sort(key=lambda r: r["doc_id"])  # block order ⇒ doc_a < doc_b
@@ -704,22 +594,16 @@ def jaccard_pairs_in_blocks(
     routing guidance (switch to the LSH band-bucket candidate generator)
     rather than silently running an unbounded O(n²).
 
-    Dense-vocabulary routing: when the measured pair work
-    Σ_block n² · G/8 exceeds ``JACCARD_DENSE_MIN_WORK`` and the
-    vocabulary fits a bounded bitset, the same exact relation comes
-    from :func:`_jaccard_dense_pairs` — one task PER PARTITION instead
-    of one task per block, so a 5-lang corpus uses all 32 cores rather
-    than 5 (measured: the sf1 en block alone held one core for minutes
-    under the matmul kernel).
-
-    BLAS band tier: when the MAX single-block matmul work 2·n_b²·g_b
-    exceeds ``JACCARD_BLAS_MIN_FLOPS`` (the measured single-core
+    One stats decision picks between two tiers.  BLAS band tier: when
+    the MAX single-block matmul work 2·n_b²·g_b exceeds
+    ``JACCARD_BLAS_MIN_FLOPS`` (the measured single-core
     crossover), the distinct (block, gram) rows fit
-    ``HYBRID_STATS_CAP`` and the unpacked block matrices fit
+    ``JACCARD_BLAS_STATS_CAP`` and the unpacked block matrices fit
     ``JACCARD_BLAS_BCAST_BUDGET``, the identical relation comes from
     :func:`_jaccard_bcast_pairs` — per-block row-band sgemm across
     ``defaultParallelism`` tasks instead of one task per block, with
-    bands dealt proportional to each block's flops.
+    bands dealt proportional to each block's flops.  Otherwise the
+    per-block kernel runs.
 
     ``stats``: optional pre-measured ``(n_docs, n_grams)`` of a postings
     relation that holds ONE block (a constant block key).  When
@@ -735,8 +619,7 @@ def jaccard_pairs_in_blocks(
         # nothing and cost a full materialization pass.  One block makes
         # every aggregate below exact.
         n_sum, g_lo = stats
-        g_hi, pair_sum = g_lo, n_sum * n_sum
-        work_hi = pair_sum * g_lo
+        g_hi, work_hi = g_lo, n_sum * n_sum * g_lo
     else:
         # Materialize the postings ONCE: the stats job below and the
         # final kernel would each re-run the whole upstream tokenize
@@ -760,7 +643,6 @@ def jaccard_pairs_in_blocks(
                 F.countDistinct("gram").alias("g"),
             )
             .agg(
-                F.sum(F.col("n") * F.col("n")).alias("pair_sum"),
                 F.max("g").alias("g_lo"),
                 F.sum("g").alias("g_hi"),
                 F.sum("n").alias("n_sum"),
@@ -770,14 +652,13 @@ def jaccard_pairs_in_blocks(
             )
             .collect()[0]
         )
-        pair_sum = bstats["pair_sum"] or 0
         g_lo, g_hi = bstats["g_lo"] or 0, bstats["g_hi"] or 0
         n_sum = bstats["n_sum"] or 0
         work_hi = bstats["work_hi"] or 0
     if (
         2 * work_hi > JACCARD_BLAS_MIN_FLOPS
         and g_lo < (1 << 24)
-        and g_hi <= HYBRID_STATS_CAP  # the tier collects every (block, gram)
+        and g_hi <= JACCARD_BLAS_STATS_CAP  # the tier collects (block, gram)
         and n_sum * 4 * g_lo <= JACCARD_BLAS_BCAST_BUDGET
     ):
         # BLAS band tier: any single block whose sgemm exceeds the
@@ -791,12 +672,6 @@ def jaccard_pairs_in_blocks(
         # measured a 0.2 s LOSS through the tier vs the 47 GFLOP ppjoin
         # block's 1.5-2 s win).
         return _jaccard_bcast_pairs(postings, block_cols, threshold)
-    if (
-        g_hi <= DENSE_GRAM_BITS
-        and pair_sum * ((g_lo + 7) // 8) > JACCARD_DENSE_MIN_WORK
-        and pair_sum * ((g_hi + 7) // 8) <= DENSE_WORK_BUDGET
-    ):
-        return _jaccard_dense_pairs(postings, block_cols, threshold)
     return postings.groupBy(*block_cols).applyInPandas(
         _jaccard_block_kernel(threshold, max_block_docs, max_block_cells),
         schema="doc_a bigint, doc_b bigint, jaccard double",
@@ -1785,12 +1660,13 @@ def ppjoin_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT bigram-Jaccard pairs at ≥ {PPJOIN_THRESHOLD}, with a
     stats-driven choice between three exact plans — the CBO move a
     fixed plan cannot make.  One aggregation over the postings yields
-    three driver scalars (bounded), then the ladder:
+    two driver scalars (bounded), then the ladder:
 
     1. corpus fits ONE incidence matrix (docs ≤ ``MAX_BLOCK_DOCS``,
-       docs × vocab ≤ ``MAX_BLOCK_CELLS``) → the blocked matmul kernel
-       (:func:`jaccard_pairs_in_blocks`) with a constant block key: all
-       pairwise intersections in one BLAS product.  The shipped
+       docs × vocab ≤ ``MAX_BLOCK_CELLS``) → the blocked matmul
+       (:func:`jaccard_pairs_in_blocks`, which picks its block kernel or
+       its BLAS band tier) with a constant block key: all pairwise
+       intersections in one BLAS product.  The shipped
        synthetic corpus is this shape — 931 distinct bigrams, median df
        285/5000 docs — where prefix filtering provably cannot prune (no
        gram is rare; measured: candidates ≈ 19% of ALL pairs at t=0.6
@@ -1810,34 +1686,19 @@ def ppjoin_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves zero miss whichever tier ran."""
     d = load_tables(spark, sf_dir, "documents")["documents"]
     postings = _shared_postings(d)
-    # One stats pass -> three driver scalars (bounded).  The ladder:
+    # One stats pass -> two driver scalars (bounded).  The ladder:
     stats = postings.groupBy("gram").agg(
         F.count(F.lit(1)).alias("df"),
     ).agg(
         F.count(F.lit(1)).alias("n_grams_total"),
         F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("vol"),
-        F.sum("df").alias("n_postings"),
     ).collect()[0]
     n_docs = d.count()
     n_grams_total = stats["n_grams_total"] or 0
     vol = stats["vol"] or 0
-    nbytes = (n_grams_total + 7) // 8
-    dense_work = n_docs * n_docs * nbytes
-    if (
-        n_docs <= MAX_BLOCK_DOCS
-        and n_docs * n_grams_total <= MAX_BLOCK_CELLS
-    ) or (
-        # tier 1b (round 11): corpus too many-doc'd for one matmul block
-        # but the vocabulary fits a bounded bitset — route through
-        # jaccard_pairs_in_blocks, whose internal dense tier computes
-        # the same exact relation one task per PARTITION (at the sf1
-        # measuring point the prefix tier degenerates: no gram is rare,
-        # so its candidate set approaches all pairs)
-        n_grams_total <= DENSE_GRAM_BITS
-        and JACCARD_DENSE_MIN_WORK < dense_work <= DENSE_WORK_BUDGET
-    ):
-        # tier 1: the whole corpus fits ONE matmul block (or bitset).
-        # The single constant block's docs and distinct grams are already
+    if n_docs <= MAX_BLOCK_DOCS and n_docs * n_grams_total <= MAX_BLOCK_CELLS:
+        # tier 1: the whole corpus fits ONE matmul block.  The single
+        # constant block's docs and distinct grams are already
         # measured by the ladder pass above, so hand them over instead of
         # paying a second stats job + checkpoint (postings stay the
         # `_shared_postings` persisted relation, so the kernel's read is
@@ -1917,150 +1778,48 @@ def _containment_select(pairs: DataFrame) -> DataFrame:
     )
 
 
-DENSE_GRAM_BITS = 16_384  # bitset tier: max distinct grams (2 KiB/doc)
-# D^2 * bitset_bytes byte-op cap.  4e11 ~= 15-20 s of vectorized popcount
-# across 32 cores (measured: sf1's 50k-doc/961-gram corpus = 3.0e11 runs
-# in that envelope); the broadcast matrix D * G/8 stays tiny relative to
-# the work bound (sf1: 6 MB), so work is the binding constraint.
-DENSE_WORK_BUDGET = 400_000_000_000
+DENSE_GRAM_BITS = 16_384  # band tier: max distinct grams (2 KiB/doc packed)
 DENSE_MIN_VOL = 1_000_000  # below this the direct join is already cheap
 
 
-def _containment_dense_pairs(postings: DataFrame) -> DataFrame:
-    """Containment tier 3 (DENSE corpora): when the measured vocabulary
-    is tiny (G ≤ ``DENSE_GRAM_BITS`` distinct grams) every gram is
-    frequent, so BOTH posting-join tiers degenerate — tier 1 enumerates
-    Σ df·(df−1) rows and tier 2's "rarest-grams" prefix has no rare
-    grams to probe (measured: 68 s at sf0.1 for tier 1 vs ~4 s here).
-    Instead each doc's distinct-gram set packs into a G-bit bitset and
-    the exact overlap of every ordered pair is a vectorized
-    ``popcount(bits_a AND bits_b)`` against a broadcast matrix
-    (:func:`_containment_popcount_pairs`) — no pair ever becomes a
-    shuffle row; only qualifying pairs are emitted.
-
-    Scale honesty: work is D²·(G/8) byte-ops, measured against
-    ``DENSE_WORK_BUDGET`` before this tier is chosen.  Real 100 TB
-    corpora have huge vocabularies (G ≫ the bitset budget) and route to
-    the prefix tier, whose cost is bounded by rare-gram document
-    frequencies; the dense tier exists for the small-G regime where the
-    quadratic output is intrinsic and the bitset matrix (D·G/8 bytes,
-    bounded by the same budget) is a justified broadcast."""
-    import numpy as np  # noqa: PLC0415
-
-    gram_bit = _gram_bits(postings)
-    nbytes = (len(gram_bit) + 7) // 8
-    # n = the doc's distinct-gram count, which is also its bitset's
-    # popcount: the map holds every gram
-    per_doc = postings.groupBy("doc_id").agg(
-        F.first("n_grams").alias("n"),
-        F.collect_set("gram").alias("grams"),
-    )
-    bitsets = _pack_bitsets(per_doc, gram_bit).persist()
-    # bounded collect: D * (8 + G/8) bytes, inside DENSE_WORK_BUDGET's
-    # eligibility check — the same justified-stats-collect pattern as
-    # the tier ladder's volume probe
-    rows = bitsets.collect()
-    _assert_dense_actuals(
-        "_containment_dense_pairs", len(rows), max(nbytes, 1),
-        work_budget=DENSE_WORK_BUDGET,
-        bcast_budget=HYBRID_BCAST_BUDGET,
-    )
-    ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    bc_mat = postings.sparkSession.sparkContext.broadcast(
-        (ids, _bitset_matrix(rows, nbytes))
-    )
-    return _containment_select(_containment_popcount_pairs(bitsets, bc_mat))
-
-
-def _containment_popcount_pairs(bitsets: DataFrame, bc_mat) -> DataFrame:
-    """Every ordered pair ``(a, b ≠ a)`` whose exact overlap
-    ``popcount(bits_a AND bits_b)`` reaches the containment threshold
-    ``den·c ≥ num·n_a``: each ``(doc_id, n, bits)`` row of ``bitsets``
-    screened against the broadcast ``(ids, mat, ...)`` bitset matrix,
-    with ``n`` the doc's distinct-gram count.  Emits ``(doc_a, doc_b,
-    n_common, n_a)``; the dense tier and the hybrid tier's
-    frequent-alone pass share it."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    num, den = CONTAINMENT_NUM, CONTAINMENT_DEN
-    pc_table = _popcount_table()
-
-    def screen(batches):
-        ids, mat = bc_mat.value[:2]
-        for pdf in batches:
-            da, db, nc, na = [], [], [], []
-            for doc_id, n_a, bits in zip(
-                pdf["doc_id"], pdf["n"], pdf["bits"]
-            ):
-                a = np.frombuffer(bytes(bits), dtype=np.uint8)
-                common = pc_table[mat & a].sum(axis=1, dtype=np.int64)
-                mask = (den * common >= num * int(n_a)) & (
-                    ids != int(doc_id)
-                )
-                hits = np.nonzero(mask)[0]
-                if len(hits):
-                    da.extend([int(doc_id)] * len(hits))
-                    db.extend(ids[hits].tolist())
-                    nc.extend(common[hits].tolist())
-                    na.extend([int(n_a)] * len(hits))
-            yield pd.DataFrame(
-                {
-                    "doc_a": pd.Series(da, dtype="int64"),
-                    "doc_b": pd.Series(db, dtype="int64"),
-                    "n_common": pd.Series(nc, dtype="int64"),
-                    "n_a": pd.Series(na, dtype="int64"),
-                }
-            )
-
-    return bitsets.mapInPandas(
-        screen,
-        schema="doc_a bigint, doc_b bigint, n_common bigint, n_a bigint",
-    )
-
-
 def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
-    """Containment tier 3b (dense corpora, BLAS band edition): the same
-    exact relation as :func:`_containment_dense_pairs`, but the D²-pair
-    overlap count runs as ``defaultParallelism`` row-band sgemms against
-    the incidence matrix instead of a per-doc Python popcount loop on
-    however few tasks the tiny bitset relation coalesced to (the Jaccard
-    band's fix, :func:`_jaccard_bcast_pairs`, asymmetric edition).
+    """Containment BLAS band tier (dense corpora): every gram is frequent,
+    so both posting-join tiers degenerate; the D²-pair overlap count
+    instead runs as ``defaultParallelism`` row-band sgemms against the
+    incidence matrix (the Jaccard band's plan,
+    :func:`_jaccard_bcast_pairs`, asymmetric edition).
 
-    The driver hand-off is the PACKED bitset matrix (the dense tier's
-    own D·G/8-byte form — measured: collecting per-doc gram-string
-    arrays instead cost ~65 MB of row-format driver transfer at sf0.1
-    and erased the kernel win); each band task unpacks its broadcast
-    copy to float32 once (LSB-first bit order, matching the packer)
-    and sgemms its contiguous row band against the full matrix.
+    The driver hand-off is the PACKED bitset matrix (D·G/8 bytes —
+    measured: collecting per-doc gram-string arrays instead cost ~65 MB
+    of row-format driver transfer at sf0.1 and erased the kernel win);
+    each band task unpacks its broadcast copy to float32 once (LSB-first
+    bit order, matching the packer) and sgemms its contiguous row band
+    against the full matrix.
 
-    Bit-identical to the bitset tier by construction: a 0/1 dot
-    product IS ``popcount(bits_a AND bits_b)``, and with G ≤
-    ``DENSE_GRAM_BITS`` (≪ 2²⁴) every count, every ``den·c`` /
-    ``num·n_a`` product, and every comparison is exact in float32;
-    survivors get the identical int64 casts and float64 division.  The
-    predicate keeps BOTH ordered directions (containment is
-    asymmetric), unlike the Jaccard band's ``ia < ib`` cut."""
+    Bit-identical to the direct join: a 0/1 dot product is the exact
+    overlap count, and with G ≤ ``DENSE_GRAM_BITS`` (≪ 2²⁴) every count,
+    every ``den·c`` / ``num·n_a`` product, and every comparison is exact
+    in float32; survivors get the identical int64 casts and float64
+    division.  The predicate keeps BOTH ordered directions (containment
+    is asymmetric), unlike the Jaccard band's ``ia < ib`` cut."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
     num, den = CONTAINMENT_NUM, CONTAINMENT_DEN
     spark = postings.sparkSession
-    gram_bit = _gram_bits(postings)
+    grams = sorted(
+        r["gram"] for r in postings.select("gram").distinct().collect()
+    )
+    gram_bit = {gram: i for i, gram in enumerate(grams)}
     g = len(gram_bit)
     per_doc = postings.groupBy("doc_id").agg(
         F.collect_set("gram").alias("grams")
     )
-    # bounded collect: D * (8 + G/8) bytes — the dense tier's own
-    # justified-stats-collect pattern, NOT the float32 matrix
+    # bounded collect: D * (8 + G/8) bytes, NOT the float32 matrix
     rows = _pack_bitsets(per_doc, gram_bit).collect()
     rows.sort(key=lambda r: r["doc_id"])
     n = len(rows)
-    _assert_dense_actuals(
-        "_containment_bcast_pairs", n, 4 * max(g, 1),
-        work_budget=DENSE_WORK_BUDGET,
-        bcast_budget=JACCARD_BLAS_BCAST_BUDGET,
-    )
+    _assert_dense_actuals("_containment_bcast_pairs", n, 4 * max(g, 1))
     ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
     bc = spark.sparkContext.broadcast((ids, _bitset_matrix(rows, (g + 7) // 8)))
     k = max(1, spark.sparkContext.defaultParallelism)
@@ -2119,156 +1878,6 @@ def _containment_bcast_pairs(postings: DataFrame) -> DataFrame:
             schema="doc_a bigint, doc_b bigint, n_common bigint, n_a bigint",
         )
     )
-
-
-# Hybrid frequent/rare containment tier (round 11, measured on the sf1h
-# long-tail corpus): at t = 1/2 the prefix filter cannot prune when the
-# per-doc "rare half" still contains mid-frequency grams — measured
-# 691M candidate rows at sf1h, OOM/GC-thrash territory.  The hybrid
-# splits the vocabulary instead: the FREQUENT head (peeled by df until
-# the remaining rare posting self-join volume fits a budget) lives in
-# per-doc bitsets (exact popcount intersections against a broadcast
-# matrix), the RARE tail goes through the cheap posting self-join.
-# n_common = c_freq + c_rare exactly, and every qualifying pair either
-# shares a rare gram (found by the rare join) or qualifies on frequent
-# grams alone (found by the all-pairs popcount screen) — a complete,
-# exact case split.
-CONTAINMENT_RARE_VOL_BUDGET = 200_000_000  # rare self-join output rows
-HYBRID_WORK_BUDGET = 1_000_000_000_000  # D^2 * freq-bitset bytes
-HYBRID_BCAST_BUDGET = 256 * 1024 * 1024  # broadcast matrix bytes
-HYBRID_STATS_CAP = 1 << 20  # max distinct grams for the df collect
-
-
-def _containment_hybrid_pairs(
-    postings: DataFrame, df_rows: list
-) -> DataFrame | None:
-    """Frequent/rare split containment (see the block comment above).
-    ``df_rows`` is the collected (gram, df) relation, df descending.
-    Returns None if any budget fence fails (caller falls through to the
-    prefix tier)."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    num, den = CONTAINMENT_NUM, CONTAINMENT_DEN
-    spark = postings.sparkSession
-
-    # peel the df-descending head into FREQ until the rare self-join
-    # volume Σ df·(df−1) fits the budget
-    total_vol = sum(d * (d - 1) for _, d in df_rows)
-    freq: list[str] = []
-    rare_vol = total_vol
-    for gram, d in df_rows:
-        if rare_vol <= CONTAINMENT_RARE_VOL_BUDGET:
-            break
-        freq.append(gram)
-        rare_vol -= d * (d - 1)
-    if rare_vol > CONTAINMENT_RARE_VOL_BUDGET:
-        return None
-    if not freq:
-        # nothing to peel: the whole vocabulary is already rare-cheap,
-        # so the hybrid degenerates to the direct join — let the ladder
-        # fall through to the simpler tiers
-        return None
-    if len(freq) > DENSE_GRAM_BITS:
-        return None
-    nbytes = (len(freq) + 7) // 8
-    n_docs = postings.select("doc_id").distinct().count()
-    if (
-        n_docs * n_docs * max(nbytes, 1) > HYBRID_WORK_BUDGET
-        or n_docs * max(nbytes, 1) > HYBRID_BCAST_BUDGET
-    ):
-        return None
-
-    per_doc = postings.groupBy("doc_id").agg(
-        F.first("n_grams").alias("n"),
-        F.collect_set("gram").alias("grams"),
-    )
-    bitsets = _pack_bitsets(
-        per_doc, {g: i for i, g in enumerate(freq)}, absent_ok=True
-    ).persist()
-    rows = bitsets.collect()  # bounded by HYBRID_BCAST_BUDGET
-    _assert_dense_actuals(
-        "_containment_hybrid_pairs", len(rows), max(nbytes, 1),
-        work_budget=HYBRID_WORK_BUDGET,
-        bcast_budget=HYBRID_BCAST_BUDGET,
-    )
-    ids_all = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    pos_of = {int(v): i for i, v in enumerate(ids_all)}
-    pc_table = _popcount_table()
-    bc_mat = spark.sparkContext.broadcast(
-        (ids_all, _bitset_matrix(rows, nbytes), pos_of)
-    )
-
-    # rare-tail posting self-join: exact shared-RARE-gram counts for
-    # every ordered pair sharing at least one rare gram
-    freq_df = spark.createDataFrame(
-        [(g,) for g in freq] or [(None,)], "gram string"
-    ).filter(F.col("gram").isNotNull())
-    # the join INPUT is small (rare postings) but its OUTPUT expands up
-    # to CONTAINMENT_RARE_VOL_BUDGET rows — AQE coalesces by input size
-    # and would run the expansion in 1-2 tasks (measured: minutes at the
-    # sf1h point), so pin the join parallelism explicitly
-    rare_posts = postings.join(
-        F.broadcast(freq_df), "gram", "left_anti"
-    ).repartition(64, "gram")
-    ra = rare_posts.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("gram").alias("g"),
-        F.col("n_grams").alias("n_a"),
-    )
-    rb = rare_posts.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("gram").alias("g"),
-        F.col("n_grams").alias("n_b"),
-    )
-    rare_pairs = (
-        ra.join(rb, "g")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .filter(F.lit(den) * F.col("n_b") >= F.lit(num) * F.col("n_a"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("c_rare"),
-            F.first("n_a").alias("n_a"),
-        )
-        # consumed twice (c_freq enrichment + the freq-alone anti-join):
-        # persist so the budget-bounded expansion join runs ONCE
-        .persist()
-    )
-
-    def add_cfreq(batches):
-        _ids, mat, pos = bc_mat.value
-        for pdf in batches:
-            cf = []
-            for a, b in zip(pdf["doc_a"], pdf["doc_b"]):
-                row = mat[pos[int(a)]] & mat[pos[int(b)]]
-                cf.append(int(pc_table[row].sum()))
-            out = pdf.copy()
-            out["c_freq"] = pd.Series(cf, dtype="int64")
-            yield out
-
-    rare_with_freq = rare_pairs.mapInPandas(
-        add_cfreq,
-        schema=(
-            "doc_a bigint, doc_b bigint, c_rare bigint, n_a bigint, "
-            "c_freq bigint"
-        ),
-    )
-    qual_rare = rare_with_freq.filter(
-        F.lit(den) * (F.col("c_rare") + F.col("c_freq"))
-        >= F.lit(num) * F.col("n_a")
-    ).select(
-        "doc_a",
-        "doc_b",
-        (F.col("c_rare") + F.col("c_freq")).alias("n_common"),
-        "n_a",
-    )
-
-    # frequent-alone qualifiers: all-pairs popcount screen; pairs that
-    # ALSO share a rare gram are handled above (anti-join dedups)
-    qual_freq = _containment_popcount_pairs(bitsets, bc_mat).join(
-        rare_pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
-    )
-    return _containment_select(qual_rare.unionByName(qual_freq))
 
 
 def _containment_prefix_pairs(postings: DataFrame) -> DataFrame:
@@ -2431,17 +2040,21 @@ def containment_quote_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the SAME cached postings relation as the Jaccard band
     (:func:`_shared_postings` — one narrow shingling pass, shared plan
-    cache), then a two-tier stats ladder (the Jaccard band's CBO move,
-    asymmetric edition): the ordered join volume Σ df·(df−1) is
-    measured FIRST, and at or below ``DIRECT_JOIN_BUDGET`` the
-    unfiltered posting join runs (:func:`_containment_direct_pairs` —
+    cache), then a three-tier stats ladder (the Jaccard band's CBO move,
+    asymmetric edition): the ordered join volume Σ df·(df−1) and the
+    vocabulary size are measured FIRST.  A dense corpus (volume past
+    ``DENSE_MIN_VOL``, at most ``DENSE_GRAM_BITS`` grams) whose D²-pair
+    sgemm passes the BLAS crossover and fits the band budgets runs the
+    band tier (:func:`_containment_bcast_pairs`).  Otherwise, at or below
+    ``DIRECT_JOIN_BUDGET`` the unfiltered posting join runs
+    (:func:`_containment_direct_pairs` —
     one gram-keyed equi-join + pair-keyed count); past the budget the
     prefix-filtered asymmetric plan runs instead
     (:func:`_containment_prefix_pairs` — probe the rarest
     ``n_a − ⌈t·n_a⌉ + 1`` grams per doc against the full postings,
     with the size and positional pruning theorems), whose candidate
     cost is bounded by rare-gram document frequencies rather than
-    stopword df².  Both tiers apply the integer cross-multiplied
+    stopword df².  All tiers apply the integer cross-multiplied
     predicate ``2·c ≥ n_a`` (no float boundary) and emit the identical
     relation (equivalence pytest).  The corpus at test SFs emits both
     FULL (c = n_a) and partial containments, so the threshold is
@@ -2460,43 +2073,17 @@ def containment_quote_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol, n_grams = stats["v"] or 0, stats["g"]
     if vol > DENSE_MIN_VOL and n_grams <= DENSE_GRAM_BITS:
         # dense-vocabulary regime: every gram is frequent, so both
-        # posting-join tiers degenerate; check the bitset tier's
-        # measured work bound (D^2 * bitset bytes)
+        # posting-join tiers degenerate.  Above the measured BLAS
+        # crossover the D²-pair overlap uses every core — same flops
+        # threshold and broadcast budget as the Jaccard band tier, and
+        # the work gate in the float32 bytes (n²·4g) that the band's
+        # post-collect assert measures
         n_docs = postings.select("doc_id").distinct().count()
-        if n_docs * n_docs * ((n_grams + 7) // 8) <= DENSE_WORK_BUDGET:
-            # band routing (r14): above the measured BLAS crossover the
-            # D²-pair overlap should use every core, not the handful of
-            # tasks the tiny bitset relation coalesces to — same flops
-            # threshold and broadcast budget as the Jaccard band tier,
-            # same relation either way (equivalence pytest)
-            flops = 2 * n_docs * n_docs * n_grams
-            if (flops > JACCARD_BLAS_MIN_FLOPS
-                    and n_docs * n_grams * 4 <= JACCARD_BLAS_BCAST_BUDGET
-                    # the band's post-collect assert measures work in
-                    # float32 bytes (n²·4g); gate on the same units so
-                    # a band-routed corpus can never fail where the
-                    # bitset tier would have succeeded
-                    and 4 * n_docs * n_docs * n_grams
-                    <= DENSE_WORK_BUDGET):
-                return _containment_bcast_pairs(postings)
-            return _containment_dense_pairs(postings)
+        if (2 * n_docs * n_docs * n_grams > JACCARD_BLAS_MIN_FLOPS
+                and n_docs * n_grams * 4 <= JACCARD_BLAS_BCAST_BUDGET
+                and 4 * n_docs * n_docs * n_grams <= DENSE_WORK_BUDGET):
+            return _containment_bcast_pairs(postings)
     if vol > DIRECT_JOIN_BUDGET:
-        # mixed-regime corpora (moderate vocabulary, frequent head +
-        # long tail): try the hybrid frequent/rare split before the
-        # prefix tier — at t = 1/2 the prefix cannot prune when the
-        # per-doc rare half still holds mid-df grams (measured: 691M
-        # candidates at the sf1h point)
-        if n_grams <= HYBRID_STATS_CAP:
-            df_rows = [
-                (r["gram"], r["df"])
-                for r in postings.groupBy("gram")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .orderBy(F.col("df").desc(), "gram")
-                .collect()  # bounded by HYBRID_STATS_CAP rows
-            ]
-            hybrid = _containment_hybrid_pairs(postings, df_rows)
-            if hybrid is not None:
-                return hybrid
         return _containment_prefix_pairs(postings)
     return _containment_direct_pairs(postings)
 

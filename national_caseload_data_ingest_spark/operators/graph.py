@@ -45,7 +45,6 @@ from national_caseload_data_ingest_spark.operators.dedup import neardup_pairs
 from national_caseload_data_ingest_spark.operators.registry import load_tables, query
 
 PAGERANK_ITERS = 10
-PAGERANK_DAMPING = 0.85  # keep the 0.85 / 0.15 literals in sync with the SQL
 
 
 def pagerank(edges: DataFrame, n_iter: int = PAGERANK_ITERS) -> DataFrame:
@@ -103,6 +102,8 @@ def pagerank(edges: DataFrame, n_iter: int = PAGERANK_ITERS) -> DataFrame:
             deg_n.join(contrib, F.col("node") == F.col("cnode"))
             .withColumn(
                 "pr",
+                # damping 0.85: keep the 0.85 / 0.15 literals in sync with
+                # the oracle SQL below
                 (F.lit(0.15) / F.col("n"))
                 + (F.lit(0.85) * F.col("contrib")),
             )

@@ -213,7 +213,6 @@ def _distance_map() -> list[tuple[int, int]]:
 
 
 _DIST_MAP = _distance_map()
-_DIST_CODE = {v: i + 1 for i, v in enumerate(_DIST_MAP)}
 
 
 def _plane_code_to_distance(width: int, code: int) -> int:

@@ -38,8 +38,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-_EPOCH = pd.Timestamp(0)
-
 
 def _pack_int(out: bytearray, n: int) -> None:
     if 0 <= n <= 0x7F:

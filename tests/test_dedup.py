@@ -77,7 +77,7 @@ def test_cdc_shared_passage_yields_shared_chunks():
 # -- blocked exact Jaccard routing ---------------------------------------------
 
 def test_jaccard_over_stats_cap_falls_through_to_block_kernel(spark, monkeypatch):
-    """A corpus whose distinct (block, gram) rows exceed HYBRID_STATS_CAP
+    """A corpus whose distinct (block, gram) rows exceed JACCARD_BLAS_STATS_CAP
     would make the BLAS band tier raise when it collects them; routing
     sends it to the per-block kernel instead, even when its work is past
     the BLAS crossover."""
@@ -102,7 +102,7 @@ def test_jaccard_over_stats_cap_falls_through_to_block_kernel(spark, monkeypatch
             ).collect()
         )
         monkeypatch.setattr(dedup, "JACCARD_BLAS_MIN_FLOPS", 0)
-        monkeypatch.setattr(dedup, "HYBRID_STATS_CAP", 4)
+        monkeypatch.setattr(dedup, "JACCARD_BLAS_STATS_CAP", 4)
         with pytest.raises(ValueError, match="stats cap"):
             dedup._jaccard_bcast_pairs(postings, ["lang"], 0.5)
         got = sorted(

@@ -3,9 +3,10 @@
 A module that defines the same top-level function or class name twice
 keeps only the later definition: every caller that runs after the module
 finishes importing gets it, whichever one it meant.  A top-level
-function or class that no code references is dead weight that still
-reads as a live plan.  No linter in this environment reports either, so
-the checks are ``ast`` walks.
+function or class that no code references, or a module-level constant
+that no code reads, is dead weight that still reads as a live plan.  No
+linter in this environment reports these, so the checks are ``ast``
+walks.
 """
 
 from __future__ import annotations
@@ -74,3 +75,50 @@ def test_every_undecorated_top_level_def_is_referenced():
         if set(names) - referenced
     }
     assert not unreferenced, unreferenced
+
+
+def _is_constant_name(name: str) -> bool:
+    bare = name.lstrip("_")
+    return bool(bare) and bare[0].isalpha() and bare == bare.upper()
+
+
+def test_every_module_level_constant_is_read():
+    """Each module-level UPPER_CASE constant in the package is read by
+    code somewhere in the repo: a ``Name`` or ``Attribute`` load or an
+    import alias.  Assigning it does not count, nor does a mention in a
+    docstring or comment."""
+    read = set()
+    defined = {}
+    for path, tree in _parsed(REPO):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and not isinstance(
+                node.ctx, ast.Store
+            ):
+                read.add(node.id)
+            elif isinstance(node, ast.Attribute) and isinstance(
+                node.ctx, ast.Load
+            ):
+                read.add(node.attr)
+            elif isinstance(node, ast.alias):
+                read.add(node.name.rsplit(".", 1)[-1])
+        if PACKAGE in path.parents:
+            names = []
+            for node in tree.body:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target] if isinstance(node, ast.AnnAssign)
+                    else []
+                )
+                for target in targets:
+                    for leaf in ast.walk(target):
+                        if isinstance(leaf, ast.Name) and _is_constant_name(
+                            leaf.id
+                        ):
+                            names.append(leaf.id)
+            defined[str(path.relative_to(PACKAGE))] = names
+    unread = {
+        module: sorted(set(names) - read)
+        for module, names in defined.items()
+        if set(names) - read
+    }
+    assert not unread, unread

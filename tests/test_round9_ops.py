@@ -703,55 +703,15 @@ def test_kmeans_int8_nonvacuous_and_matches_driver_recompute(spark):
     )
 
 
-def test_containment_dense_tier_equals_direct_on_planted_quotes(spark):
-    """Round 11: the dense-vocabulary bitset tier emits the identical
-    relation as the direct posting join on the planted-quote fixture."""
-    from national_caseload_data_ingest_spark.operators.dedup import (
-        _containment_dense_pairs,
-        _containment_direct_pairs,
-        _shared_postings,
-    )
-
-    short = "alpha beta gamma delta epsilon"
-    filler = " ".join(f"u{i} v{i}" for i in range(30))
-    texts = {
-        1: short,
-        2: short + " " + filler,
-        3: filler + " " + short,
-        4: "alpha beta gamma zzz qqq",
-        5: " ".join(f"w{i} x{i}" for i in range(25)),
-        6: short,
-    }
-    docs = spark.createDataFrame(
-        [(i, t, "en") for i, t in texts.items()],
-        "doc_id bigint, text string, lang string",
-    )
-    postings = _shared_postings(docs).persist()
-    try:
-        def rel(df):
-            return sorted(
-                (r.doc_a, r.doc_b, r.n_common, r.n_a,
-                 round(r.containment, 12))
-                for r in df.collect()
-            )
-
-        assert rel(_containment_dense_pairs(postings)) == rel(
-            _containment_direct_pairs(postings)
-        )
-    finally:
-        postings.unpersist()
-
-
 def test_containment_blas_band_tier_equals_bitset_tier(spark):
     """r14: the containment BLAS band tier (broadcast float32 incidence
     matrix, row-band sgemm per task) must emit the BIT-identical
-    relation as the bitset tier and the direct posting join.  Raw float
-    comparison on purpose: overlap counts are exact integers in float32
+    relation as the direct posting join.  Raw float comparison on
+    purpose: overlap counts are exact integers in float32
     (G ≤ DENSE_GRAM_BITS ≪ 2²⁴) and the float64 division is the same
     expression, so no tolerance is needed."""
     from national_caseload_data_ingest_spark.operators.dedup import (
         _containment_bcast_pairs,
-        _containment_dense_pairs,
         _containment_direct_pairs,
         _shared_postings,
     )
@@ -783,7 +743,6 @@ def test_containment_blas_band_tier_equals_bitset_tier(spark):
             )
 
         band = rel(_containment_bcast_pairs(postings))
-        assert band == rel(_containment_dense_pairs(postings))
         assert band == rel(_containment_direct_pairs(postings))
         assert band, "vacuous fixture — no qualifying pairs"
         # both full (c == n_a) and partial containments exercised
@@ -793,10 +752,10 @@ def test_containment_blas_band_tier_equals_bitset_tier(spark):
         postings.unpersist()
 
 
-def test_containment_dense_routing_by_measured_stats(spark):
-    """The public query routes to the bitset tier when the measured
-    vocabulary is small and the join volume is large enough to matter —
-    and the routed output equals the direct tier's."""
+def test_containment_dense_routing_by_measured_stats(spark, monkeypatch):
+    """The public query routes to the BLAS band tier when the measured
+    vocabulary is small and the join volume and pair flops are large
+    enough to matter — and the routed output equals the direct join's."""
     from national_caseload_data_ingest_spark.operators import dedup
 
     def rel(df):
@@ -805,23 +764,27 @@ def test_containment_dense_routing_by_measured_stats(spark):
             for r in df.collect()
         )
 
-    direct = rel(
-        dedup.containment_quote_pairs(spark, "/root/testdata/sf0.001")
-    )
-    orig = dedup.DENSE_MIN_VOL
-    dedup.DENSE_MIN_VOL = 0  # force the dense tier through the ladder
-    try:
-        dense = rel(
-            dedup.containment_quote_pairs(spark, "/root/testdata/sf0.001")
-        )
-    finally:
-        dedup.DENSE_MIN_VOL = orig
-    assert dense == direct and direct
+    band_calls = []
+    band = dedup._containment_bcast_pairs
+
+    def spy(postings):
+        band_calls.append(1)
+        return band(postings)
+
+    monkeypatch.setattr(dedup, "_containment_bcast_pairs", spy)
+    direct = rel(dedup.containment_quote_pairs(spark, SF_DIR))
+    assert not band_calls  # sf0.001 stays on the direct join
+    # force the band tier through the ladder
+    monkeypatch.setattr(dedup, "DENSE_MIN_VOL", 0)
+    monkeypatch.setattr(dedup, "JACCARD_BLAS_MIN_FLOPS", 0)
+    routed = rel(dedup.containment_quote_pairs(spark, SF_DIR))
+    assert band_calls == [1]
+    assert routed == direct and direct
 
 
 def test_dense_tier_budget_assertion_fails_loudly(spark):
     """VERDICT r11 ask #6: when the routing stats no longer describe
-    the corpus (simulated by calling the dense tiers DIRECTLY on a
+    the corpus (simulated by calling the BLAS band tiers DIRECTLY on a
     corpus whose actuals exceed a shrunk budget — exactly what a
     stats-fooling non-deterministic source produces), the post-collect
     assertion raises a loud ValueError with the estimate-vs-actual
@@ -830,8 +793,8 @@ def test_dense_tier_budget_assertion_fails_loudly(spark):
 
     from national_caseload_data_ingest_spark.operators import dedup
     from national_caseload_data_ingest_spark.operators.dedup import (
-        _containment_dense_pairs,
-        _jaccard_dense_pairs,
+        _containment_bcast_pairs,
+        _jaccard_bcast_pairs,
         _shared_postings,
         word_bigram_postings,
     )
@@ -844,122 +807,28 @@ def test_dense_tier_budget_assertion_fails_loudly(spark):
     cpost = _shared_postings(docs).persist()
     jpost = word_bigram_postings(docs).persist()
     orig_work, orig_bcast = (
-        dedup.DENSE_WORK_BUDGET, dedup.HYBRID_BCAST_BUDGET)
+        dedup.DENSE_WORK_BUDGET, dedup.JACCARD_BLAS_BCAST_BUDGET)
     try:
         dedup.DENSE_WORK_BUDGET = 1  # actuals now dwarf the "estimate"
         with _pt.raises(ValueError, match="ACTUALS exceed"):
-            _containment_dense_pairs(cpost).collect()
+            _containment_bcast_pairs(cpost).collect()
         with _pt.raises(ValueError, match="ACTUALS exceed"):
-            _jaccard_dense_pairs(jpost, [], 0.5).collect()
+            _jaccard_bcast_pairs(jpost, ["lang"], 0.5).collect()
         dedup.DENSE_WORK_BUDGET = orig_work
-        dedup.HYBRID_BCAST_BUDGET = 1  # broadcast side trips too
+        dedup.JACCARD_BLAS_BCAST_BUDGET = 1  # broadcast side trips too
         with _pt.raises(ValueError, match="ACTUALS exceed"):
-            _containment_dense_pairs(cpost).collect()
-        dedup.HYBRID_BCAST_BUDGET = orig_bcast
+            _containment_bcast_pairs(cpost).collect()
+        with _pt.raises(ValueError, match="ACTUALS exceed"):
+            _jaccard_bcast_pairs(jpost, ["lang"], 0.5).collect()
+        dedup.JACCARD_BLAS_BCAST_BUDGET = orig_bcast
         # untampered budgets: the same corpus passes clean
-        assert _containment_dense_pairs(cpost).collect() is not None
+        assert _containment_bcast_pairs(cpost).collect() is not None
+        assert _jaccard_bcast_pairs(jpost, ["lang"], 0.5).collect() is not None
     finally:
         dedup.DENSE_WORK_BUDGET = orig_work
-        dedup.HYBRID_BCAST_BUDGET = orig_bcast
+        dedup.JACCARD_BLAS_BCAST_BUDGET = orig_bcast
         cpost.unpersist()
         jpost.unpersist()
-
-
-def test_jaccard_dense_tier_equals_matmul_kernel(spark):
-    """Round 11: the dense bitset tier for blocked Jaccard emits the
-    bit-identical relation as the matmul kernel (exact integer counts,
-    same float64 division) across langs, thresholds, and orientations."""
-    from national_caseload_data_ingest_spark.operators.dedup import (
-        _jaccard_dense_pairs,
-        jaccard_pairs_in_blocks,
-        word_bigram_postings,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    texts = []
-    for i in range(40):
-        words = base.split()
-        if i % 3 == 0:
-            words = words[: 4 + i % 4] + [f"w{i}"]
-        if i % 5 == 0:
-            words.append("iota")
-        texts.append((i, " ".join(words), ("en", "fr")[i % 2]))
-    docs = spark.createDataFrame(
-        texts, "doc_id bigint, text string, lang string"
-    )
-    postings = word_bigram_postings(docs).persist()
-    try:
-        for t in (0.2, 0.5, 0.8):
-            kern = sorted(
-                (r.doc_a, r.doc_b, round(r.jaccard, 12))
-                for r in jaccard_pairs_in_blocks(
-                    postings, ["lang"], t
-                ).collect()
-            )
-            dense = sorted(
-                (r.doc_a, r.doc_b, round(r.jaccard, 12))
-                for r in _jaccard_dense_pairs(
-                    postings, ["lang"], t
-                ).collect()
-            )
-            assert dense == kern and kern, t
-    finally:
-        postings.unpersist()
-
-
-def test_containment_hybrid_tier_equals_direct(spark):
-    """Round 11: the frequent/rare hybrid tier emits the identical
-    relation as the direct posting join — forced through the ladder by
-    shrinking the rare-volume budget so the head peels."""
-    from national_caseload_data_ingest_spark.operators import dedup
-    from national_caseload_data_ingest_spark.operators.dedup import (
-        _containment_direct_pairs,
-        _containment_hybrid_pairs,
-        _shared_postings,
-    )
-    from pyspark.sql import functions as F
-
-    # corpus with a frequent head ('alpha beta' in most docs) and a
-    # rare tail (w{i} grams), plus planted full containments
-    texts = []
-    for i in range(30):
-        base = ["alpha", "beta", "gamma"]
-        if i % 3:
-            base += [f"w{i}", f"v{i}"]
-        if i % 5 == 0:
-            base = ["alpha", "beta"]  # short doc contained in others
-        texts.append((i, " ".join(base), "en"))
-    docs = spark.createDataFrame(
-        texts, "doc_id bigint, text string, lang string"
-    )
-    postings = _shared_postings(docs).persist()
-    try:
-        df_rows = [
-            (r["gram"], r["df"])
-            for r in postings.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .orderBy(F.col("df").desc(), "gram")
-            .collect()
-        ]
-        orig = dedup.CONTAINMENT_RARE_VOL_BUDGET
-        dedup.CONTAINMENT_RARE_VOL_BUDGET = 4  # force a non-empty head
-        try:
-            hybrid = _containment_hybrid_pairs(postings, df_rows)
-        finally:
-            dedup.CONTAINMENT_RARE_VOL_BUDGET = orig
-        assert hybrid is not None
-
-        def rel(df):
-            return sorted(
-                (r.doc_a, r.doc_b, r.n_common, r.n_a,
-                 round(r.containment, 12))
-                for r in df.collect()
-            )
-
-        assert rel(hybrid) == rel(_containment_direct_pairs(postings))
-        assert rel(hybrid)  # non-vacuous
-    finally:
-        postings.unpersist()
 
 
 def test_jaccard_blocks_stats_handoff_equals_internal_stats(spark):

@@ -8,9 +8,9 @@ Responsibilities (SURVEY.md §2.1 A10-A15, A19, A26):
 - ``write_table`` — partitioned writes under the same Hive layout the
   reference uploads to S3: ``{warehouse}/{db}/{table}/filename_district={D}/``
   (``/root/reference/ncd/athena.py:92-113``).  Default format is Parquet
-  (columnar, splittable, stats — the 100 TB-correct choice); a
-  ``fidelity_json`` mode writes gzipped JSON-lines matching the reference's
-  bytes-on-disk model (non-splittable; kept only for byte-level parity).
+  (columnar, splittable, with stats); a ``fidelity_json`` mode writes
+  gzipped JSON-lines matching the reference's bytes-on-disk model
+  (non-splittable; kept only for byte-level parity).
 - ``generate_ddl`` — CREATE EXTERNAL TABLE text with all data columns then
   all ``redacted_*`` shadows and an optional ``PARTITIONED BY
   (filename_district STRING)`` clause (``/root/reference/ncd/
@@ -25,8 +25,6 @@ exercised by this repo's tests (the sandbox has no object store).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -159,17 +157,16 @@ class SparkCatalog:
         table_name: str,
         df: DataFrame,
         partitioned: bool = False,
-        register: bool = True,
     ) -> None:
-        """Write + (optionally) register one table.
+        """Write and register one table.
 
         Partitioned tables land as ``.../filename_district=XX/`` exactly like
         the reference's S3 layout; ``MSCK REPAIR`` then discovers partitions,
         preserving the reference's two-step contract (A11 + A13).
 
         Parquet default; ``fidelity_json`` switches to gzipped JSON-lines
-        with DATE columns serialized as zero-padded ``yyyy-MM-dd`` strings —
-        the reference's wire format (``/root/reference/ncd/
+        with DATE columns serialized as ``yyyy-MM-dd`` strings, the
+        reference's wire format (``/root/reference/ncd/
         normal_table.py:105-107``).
         """
         location = self.table_location(table_name)
@@ -181,9 +178,7 @@ class SparkCatalog:
             options["compression"] = "gzip"
             for f in df.schema.fields:
                 if isinstance(f.dataType, T.DateType):
-                    out = out.withColumn(
-                        f.name, F.lpad(F.date_format(f.name, "yyyy-MM-dd"), 10, "0")
-                    )
+                    out = out.withColumn(f.name, F.date_format(f.name, "yyyy-MM-dd"))
         writer = out.write.format(writer_format).mode("overwrite").options(**options)
         if partitioned:
             # Dynamic overwrite: only partitions present in `df` are
@@ -195,51 +190,33 @@ class SparkCatalog:
             )
         writer.save(location)
 
-        if register:
-            self.create_db()
-            # Both DDL emitters place the partition column themselves.
-            columns = [
-                f.name
-                for f in df.schema.fields
-                if not (partitioned and f.name == PARTITION_COLUMN)
-            ]
-            ddl = self.generate_ddl(
+        self.create_db()
+        # Both DDL emitters place the partition column themselves.
+        columns = [
+            f.name
+            for f in df.schema.fields
+            if not (partitioned and f.name == PARTITION_COLUMN)
+        ]
+        ddl = self.generate_ddl(
+            table_name,
+            T.StructType([out.schema[c] for c in columns]),
+            partitioned=partitioned,
+        )
+        self.execute_query(f"DROP TABLE IF EXISTS {self.db_name}.{table_name}")
+        self.execute_query(ddl)
+        if partitioned:
+            self.recover_partitions(table_name)
+        if self.fidelity_json:
+            # Record (not execute) the reference-shaped Athena DDL so a
+            # fidelity-mode run's golden SQL log is comparable to the
+            # reference's AthenaMock capture byte-for-byte (A12 + A26).
+            # Dates were stringified for the JSON wire format above, so
+            # the fidelity text is generated from the ORIGINAL schema.
+            self.generate_fidelity_ddl(
                 table_name,
-                T.StructType([out.schema[c] for c in columns]),
+                T.StructType([df.schema[c] for c in columns]),
                 partitioned=partitioned,
             )
-            self.execute_query(f"DROP TABLE IF EXISTS {self.db_name}.{table_name}")
-            self.execute_query(ddl)
-            if partitioned:
-                self.recover_partitions(table_name)
-            if self.fidelity_json:
-                # Record (not execute) the reference-shaped Athena DDL so a
-                # fidelity-mode run's golden SQL log is comparable to the
-                # reference's AthenaMock capture byte-for-byte (A12 + A26).
-                # Dates were stringified for the JSON wire format above, so
-                # the fidelity text is generated from the ORIGINAL schema.
-                self.generate_fidelity_ddl(
-                    table_name,
-                    T.StructType([df.schema[c] for c in columns]),
-                    partitioned=partitioned,
-                )
 
     def recover_partitions(self, table_name: str) -> None:
         self.execute_query(f"MSCK REPAIR TABLE {self.db_name}.{table_name}")
-
-    # -- reads -------------------------------------------------------------
-
-    def table(self, table_name: str) -> DataFrame:
-        return self.spark.table(f"{self.db_name}.{table_name}")
-
-
-def local_catalog(
-    spark: SparkSession, base_dir: str, db_name: str = "ncd", **kw
-) -> SparkCatalog:
-    """Filesystem-backed catalog for tests — the A26 AthenaMock analog.
-
-    Data lands under ``{base_dir}/{db}/{table}/…`` mirroring the mock's
-    ``{prefix}/tables/…`` tree; issued SQL is inspectable via
-    ``executed_sql``.
-    """
-    return SparkCatalog(spark, os.path.abspath(base_dir), db_name=db_name, **kw)

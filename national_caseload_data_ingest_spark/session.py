@@ -9,8 +9,8 @@ Design notes (SURVEY.md §7 step 1):
   (``/root/reference/ncd/normal_table.py:105-107``); the legacy parser accepts
   upper-case month abbreviations for the ``dd-MMM-yyyy`` pattern.
 - **AQE on** — runtime shuffle-partition coalescing, skew-join splitting and
-  broadcast-join demotion/promotion.  At 100 TB the static
-  ``spark.sql.shuffle.partitions`` is always wrong for *some* stage; AQE
+  broadcast-join demotion/promotion.  A static
+  ``spark.sql.shuffle.partitions`` fits some stages and not others; AQE
   re-plans per-stage from actual map-output sizes.
 - **UTC session timezone** — keeps timestamp semantics identical between the
   Spark engine and the DuckDB correctness oracle.

@@ -24,10 +24,12 @@ Spark-first re-expression of the reference's ``DataZip`` pipeline
 4. Global tables (UTF-8 stacked file; silent no-op when absent) and lookup
    tables (``table_gs_*`` members, latin-1, sorted) land unpartitioned.
 
-At 100 TB the unit of parallelism is the file: a monthly dump is ~24 zips ×
-~94 districts × ~40 tables of members, which comfortably saturates a
-1000-executor cluster once staged (staging itself parallelizes across zips —
-see ``import_all``-equivalent in ``sources/listing.py``).
+The unit of parallelism is the staged member file: a table's district
+files are the input splits of its one read.  Staging is not parallel:
+``listing.load_all`` overlaps the downloads, but it loads the zips one after
+another, and each zip's members are staged in turn on the driver.  The
+largest load measured is a 199 MB, 5.1 M-row dump (ROADMAP item 4, scale
+25): 0.21-0.29 CPU-s per input MB.
 """
 
 from __future__ import annotations
@@ -74,7 +76,7 @@ STAGE_CHUNK_CHARS = 1 << 20
 
 @dataclass
 class StagedZip:
-    """Zip members staged to a scratch dir as UTF-8, CR-stripped text."""
+    """Zip members staged to a scratch dir as UTF-8 text, each CR a space."""
 
     stage_dir: str
     members: dict[str, str] = field(default_factory=dict)  # member -> path
@@ -88,9 +90,10 @@ def stage_members(zip_path: str) -> StagedZip:
 
     latin-1 maps each byte to one char, so fixed-width character extents are
     preserved; the CR replacement keeps offsets intact exactly like the
-    reference (space, not removal).  ``global_LIONS.txt`` is already UTF-8
-    (reference ``ncd/global_file.py:223``), decoded strictly so
-    invalid bytes raise.  Members stream through in ``STAGE_CHUNK_CHARS``
+    reference (space, not removal).  This is the one place the CR rule is
+    applied: ``project_fixed_width`` slices the staged lines as they are.
+    ``global_LIONS.txt`` is already UTF-8 (reference
+    ``ncd/global_file.py:223``), decoded strictly so invalid bytes raise.  Members stream through in ``STAGE_CHUNK_CHARS``
     chunks; the incremental decoder carries a multibyte character split
     across a chunk boundary, so the output equals a whole-member transcode.
     """

@@ -10,14 +10,15 @@ share an expression used only inside CASE WHEN branches, so a cell written
 into every branch would be sliced and trimmed again for each of them; and
 ``CollapseProject`` keeps the two projections apart because each cell is
 read more than once.  No UDFs, no shuffle, no Python in the executor hot
-path; at 100 TB this scales linearly with input splits.
+path.
+
+No line reaching the projection holds a CR: staging
+(``data_zip.stage_members``) turns each one into a space so that column
+offsets hold (``/root/reference/ncd/normal_table.py:270-291``), and
+``spark.read.text`` would end a line at any CR left over.
 
 Semantics reproduced (with reference citations):
 
-- ``\r`` is replaced by a **space, not removed**, so column offsets never
-  shift (``/root/reference/ncd/normal_table.py:270-291``).
-  Only a line that holds a ``\r`` is rewritten; on every other line the
-  rule costs a byte scan, not a decode of the line into a Java ``String``.
 - A cell equal to ``*`` is a DOJ redaction marker: value → NULL and the
   ``redacted_{col}`` shadow BOOLEAN → true
   (``/root/reference/ncd/normal_table.py:200-222``).
@@ -50,10 +51,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from national_caseload_data_ingest_spark.sources.schemas import FieldSpec, TableSchema
+from national_caseload_data_ingest_spark.sources.schemas import (
+    REDACTION_MARKER,
+    FieldSpec,
+    TableSchema,
+)
 
 _INT_RE = r"^[+-]?[0-9]+$"
-REDACTION_MARKER = "*"
 ORACLE_DATE_FORMAT = "dd-MMM-yyyy"
 _MONTHS = ("JAN", "FEB", "MAR", "APR", "MAY", "JUN",
            "JUL", "AUG", "SEP", "OCT", "NOV", "DEC")
@@ -101,12 +105,9 @@ def project_fixed_width(lines: DataFrame, schema: TableSchema) -> DataFrame:
     :meth:`TableSchema.spark_schema`: all data columns, then all
     ``redacted_*`` shadows.
     """
-    # Offsets-preserving CR handling (A4), on the lines that hold a CR.
-    value = F.col("value")
-    value = F.when(F.instr(value, "\r") > 0, F.translate(value, "\r", " ")).otherwise(value)
     # Each cell once per row, in a projection of its own (module docstring).
     cells = lines.select(
-        *(F.trim(F.substring(value, f.start, f.length)).alias(f"_c{i}")
+        *(F.trim(F.substring("value", f.start, f.length)).alias(f"_c{i}")
           for i, f in enumerate(schema.fields))
     )
     cols = [F.col(f"_c{i}") for i in range(len(schema.fields))]

@@ -42,6 +42,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from national_caseload_data_ingest_spark.sources.schemas import (
+    REDACTION_MARKER,
     camel_to_upper_snake,
     infer_ruler_extents,
     slice_by_extents,
@@ -77,8 +78,8 @@ def parse_ruler_fragment(fragment: str) -> tuple[list[str], list[list[object]]]:
         if not line.strip():
             continue
         cells = slice_by_extents(line, extents)
-        values = ["" if c == "*" else c for c in cells]
-        flags = [c == "*" for c in cells]
+        values = ["" if c == REDACTION_MARKER else c for c in cells]
+        flags = [c == REDACTION_MARKER for c in cells]
         rows.append(values + flags)
     return data_names + shadow_names, rows
 

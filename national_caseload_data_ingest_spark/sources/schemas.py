@@ -38,6 +38,11 @@ SPARK_TYPES: dict[str, T.DataType] = {
     "FLOAT": T.DoubleType(),
 }
 
+# A cell that is exactly this marks a DOJ redaction, in fixed-width and
+# ruler tables alike (``/root/reference/ncd/normal_table.py:200-222``,
+# ``/root/reference/ncd/global_file.py:98-101``).
+REDACTION_MARKER = "*"
+
 
 def ddl_name(data_type: T.DataType) -> str:
     """DDL spelling of a Spark type: STRING, BIGINT, DATE, DOUBLE, BOOLEAN
@@ -65,9 +70,6 @@ class FieldSpec:
             raise NotImplementedError(
                 f"Unsupported source field type: {self.src_type}"
             ) from None
-
-    def ddl_type(self) -> str:
-        return ddl_name(self.spark_type())
 
 
 @dataclass(frozen=True)
@@ -170,14 +172,3 @@ def camel_to_upper_snake(name: str) -> str:
     if snake.startswith("REDACTED__"):
         return "redacted_" + snake[len("REDACTED__") :]
     return snake
-
-
-def ruler_table_schema(name: str, header_line: str, divider_line: str) -> TableSchema:
-    """Schema for a ruler-formatted table: every data column STRING."""
-    extents = infer_ruler_extents(divider_line)
-    headers = slice_by_extents(header_line, extents)
-    fields = tuple(
-        FieldSpec(camel_to_upper_snake(h), "VARCHAR2", s, e)
-        for h, (s, e) in zip(headers, extents)
-    )
-    return TableSchema(name, fields)

@@ -7,7 +7,7 @@ join shuffles are paid once at ingest."""
 
 import pytest
 
-from national_caseload_data_ingest_spark.catalog import local_catalog
+from national_caseload_data_ingest_spark.catalog import SparkCatalog
 from national_caseload_data_ingest_spark.operators import layout
 from national_caseload_data_ingest_spark.operators.registry import load_tables
 from national_caseload_data_ingest_spark.plans import physical_plan
@@ -17,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, tmp_path_factory):
-    cat = local_catalog(
+    cat = SparkCatalog(
         spark, str(tmp_path_factory.mktemp("bkt")), db_name="bkt_db"
     )
     t = load_tables(spark, SF, "orders", "lineitem")
@@ -35,11 +35,11 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = bucketed_tables.table("orders_b").join(
-            bucketed_tables.table("lineitem_b"),
+        j = spark.table("bkt_db.orders_b").join(
+            spark.table("bkt_db.lineitem_b"),
             on=[
-                bucketed_tables.table("orders_b").o_orderkey
-                == bucketed_tables.table("lineitem_b").l_orderkey
+                spark.table("bkt_db.orders_b").o_orderkey
+                == spark.table("bkt_db.lineitem_b").l_orderkey
             ],
         )
         plan = physical_plan(j)
@@ -54,10 +54,10 @@ def test_bucketed_join_matches_unbucketed(spark, bucketed_tables):
     expected = t["orders"].join(
         t["lineitem"], t["orders"].o_orderkey == t["lineitem"].l_orderkey
     )
-    got = bucketed_tables.table("orders_b").join(
-        bucketed_tables.table("lineitem_b"),
-        bucketed_tables.table("orders_b").o_orderkey
-        == bucketed_tables.table("lineitem_b").l_orderkey,
+    got = spark.table("bkt_db.orders_b").join(
+        spark.table("bkt_db.lineitem_b"),
+        spark.table("bkt_db.orders_b").o_orderkey
+        == spark.table("bkt_db.lineitem_b").l_orderkey,
     )
     assert got.count() == expected.count() > 0
 
@@ -66,7 +66,7 @@ def test_bucketed_groupby_on_bucket_key_no_exchange(spark, bucketed_tables):
     """Aggregations on the bucket key also reuse the bucketing — no
     shuffle before the final agg."""
     df = (
-        bucketed_tables.table("lineitem_b")
+        spark.table("bkt_db.lineitem_b")
         .groupBy("l_orderkey")
         .count()
     )

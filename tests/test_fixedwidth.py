@@ -2,10 +2,12 @@
 null-on-cast-failure, Oracle dates, CR handling, NUMBER int() parity."""
 
 import datetime
+import zipfile
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from national_caseload_data_ingest_spark.sources.data_zip import stage_members
 from national_caseload_data_ingest_spark.sources.fixedwidth import (
     project_fixed_width,
 )
@@ -104,8 +106,8 @@ def test_each_cell_is_computed_once(spark):
 
 
 def test_lines_without_cr_are_unchanged(spark):
-    # The CR rewrite runs only on lines that hold one; every other line
-    # reaches the cells byte for byte as an unconditional translate leaves it.
+    # Each line reaches the cells byte for byte: a cell is the plain slice
+    # of the line, trimmed, whatever characters it holds.
     whole = TableSchema(
         "W", (FieldSpec("K", "VARCHAR2", 1, 2), FieldSpec("REST", "VARCHAR2", 3, 40))
     )
@@ -113,27 +115,33 @@ def test_lines_without_cr_are_unchanged(spark):
         "01 tab\there  ",
         "02É ü 漢字 trailing   ",
         "03\u00a0nbsp \x00 nul",
-        "04 cr\rinside\r",
         "05",
     ]
     df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
     got = {r["k"]: r["rest"] for r in project_fixed_width(df, whole).collect()}
-    value = F.translate("value", "\r", " ")
     want = dict(
         df.select(
-            F.trim(F.substring(value, 1, 2)), F.trim(F.substring(value, 3, 38))
+            F.trim(F.substring("value", 1, 2)), F.trim(F.substring("value", 3, 38))
         ).collect()
     )
     assert {k: v.encode() for k, v in got.items()} == {
         k: v.encode() for k, v in want.items()
     }
-    assert got["04"] == "cr inside"
 
 
-def test_cr_becomes_space_offsets_preserved(spark):
-    # A CR inside the NUM field: same row parses as if the CR were a space.
+def test_cr_becomes_space_offsets_preserved(spark, tmp_path):
+    # A CR inside the NUM field, staged from a zip member: the row parses
+    # as if the CR were a space.
     line = "EEEE" + "  \r 3" + "01-JAN-2017" + "     2.5"
-    rows = _rows(spark, [line])
+    zip_path = str(tmp_path / "cr.zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        zf.writestr("t.txt", (line + "\r\n").encode("latin-1"))
+    staged = stage_members(zip_path)
+    try:
+        lines = spark.read.text(staged.members["t.txt"])
+        rows = {r["sid"]: r for r in project_fixed_width(lines, SCHEMA).collect()}
+    finally:
+        staged.cleanup()
     r = rows["EEEE"]
     assert r["num"] == 3
     assert r["dt"] == datetime.date(2017, 1, 1)

@@ -1,5 +1,6 @@
 """A pure-Python model of the fixed-width cell rules, and a differential
-test of ``project_fixed_width`` against it.
+test of the ingest path against it: ``stage_members``, ``spark.read.text``
+and ``project_fixed_width`` together.
 
 ``convert_line`` converts one raw (latin-1) line under one ``TableSchema``
 the way the reference pipeline does (SURVEY.md §2.1 A4-A9): CR becomes a
@@ -25,13 +26,16 @@ before 1600) is pinned against that parser in ``test_date_fastpath.py``.
 from __future__ import annotations
 
 import datetime
+import os
 import re
+import tempfile
+import zipfile
 from collections import Counter
 
-import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from national_caseload_data_ingest_spark.sources.data_zip import stage_members
 from national_caseload_data_ingest_spark.sources.fixedwidth import (
     project_fixed_width,
 )
@@ -229,10 +233,19 @@ def batches(draw) -> tuple[TableSchema, list[bytes]]:
 @settings(max_examples=25, deadline=None)
 @given(batches())
 def test_projection_matches_model(spark, batch):
+    """The lines take the ingest path: one zip member with a newline after
+    each line, staged by ``stage_members``, read by ``spark.read.text`` and
+    projected."""
     schema, raws = batch
-    df = spark.createDataFrame(
-        pa.table({"value": pa.array([r.decode("latin-1") for r in raws], pa.string())})
-    )
-    got = Counter(tuple(r) for r in project_fixed_width(df, schema).collect())
+    with tempfile.TemporaryDirectory() as tmp:
+        zip_path = os.path.join(tmp, "lines.zip")
+        with zipfile.ZipFile(zip_path, "w") as zf:
+            zf.writestr("t.txt", b"".join(r + b"\n" for r in raws))
+        staged = stage_members(zip_path)
+        try:
+            df = spark.read.text(staged.members["t.txt"])
+            got = Counter(tuple(r) for r in project_fixed_width(df, schema).collect())
+        finally:
+            staged.cleanup()
     want = Counter(convert_line(r, schema) for r in raws)
     assert got == want, (got - want, want - got)

@@ -4,7 +4,7 @@ import os
 
 import pytest
 
-from national_caseload_data_ingest_spark.catalog import local_catalog
+from national_caseload_data_ingest_spark.catalog import SparkCatalog
 from national_caseload_data_ingest_spark.sources.globals import (
     parse_ruler_fragment,
     read_global_tables,
@@ -109,14 +109,14 @@ def test_codebook_is_one_partition_local_relation(spark):
 
 
 def test_codebook_write_leaves_one_data_file(spark, tmp_path):
-    cat = local_catalog(spark, str(tmp_path), db_name="codebook_files_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="codebook_files_db")
     df = read_global_tables(spark, GLOBAL_LIONS_TEXT)["GS_DISTRICT"]
     try:
         cat.write_table("gs_district", df)
         files = os.listdir(cat.table_location("gs_district"))
         data_files = [f for f in files if not f.startswith((".", "_"))]
         assert len(data_files) == 1, files
-        assert cat.table("gs_district").count() == 3
+        assert spark.table("codebook_files_db.gs_district").count() == 3
     finally:
         spark.sql("DROP DATABASE IF EXISTS codebook_files_db CASCADE")
 
@@ -132,10 +132,10 @@ def test_codebook_without_data_rows_keeps_schema(spark, tmp_path):
     ]
     assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == want
     assert df.count() == 0
-    cat = local_catalog(spark, str(tmp_path), db_name="codebook_empty_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="codebook_empty_db")
     try:
         cat.write_table("gs_empty", df)
-        back = cat.table("gs_empty")
+        back = spark.table("codebook_empty_db.gs_empty")
         assert [(f.name, f.dataType.simpleString()) for f in back.schema.fields] == want
         assert back.count() == 0
     finally:
@@ -147,11 +147,11 @@ def test_codebook_roundtrip_keeps_redaction_and_names(spark, tmp_path, fidelity_
     """Through a real write: ``''`` + ``redacted_* = true`` for a ``*`` cell,
     lowercase UPPER_SNAKE column names, in Parquet and JSON-lines mode."""
     db = f"codebook_rt_{int(fidelity_json)}_db"
-    cat = local_catalog(spark, str(tmp_path), db_name=db, fidelity_json=fidelity_json)
+    cat = SparkCatalog(spark, str(tmp_path), db_name=db, fidelity_json=fidelity_json)
     try:
         name, df = read_lookup_table(spark, LOOKUP_TEXT)
         cat.write_table(name.lower(), df)
-        back = cat.table("gs_position")
+        back = spark.table(f"{db}.gs_position")
         assert back.columns == [
             "code",
             "description",

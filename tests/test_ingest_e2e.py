@@ -8,7 +8,7 @@ import zipfile
 
 import pytest
 
-from national_caseload_data_ingest_spark.catalog import local_catalog
+from national_caseload_data_ingest_spark.catalog import SparkCatalog
 from national_caseload_data_ingest_spark.sources.data_zip import NcdZipLoader
 from tests.conftest import GS_CASE_ROWS, README_TEXT, build_fixture_zip
 
@@ -16,7 +16,7 @@ from tests.conftest import GS_CASE_ROWS, README_TEXT, build_fixture_zip
 @pytest.fixture(scope="module")
 def loaded(spark, fixture_zip, tmp_path_factory):
     warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    catalog = local_catalog(spark, warehouse, db_name="ncd_test")
+    catalog = SparkCatalog(spark, warehouse, db_name="ncd_test")
     names = NcdZipLoader(spark, catalog, fixture_zip).load()
     return catalog, names, warehouse
 
@@ -34,7 +34,9 @@ def test_all_tables_loaded(loaded):
 
 def test_normal_table_contents(loaded):
     catalog, _, _ = loaded
-    rows = {r["case_id"]: r for r in catalog.table("gs_case").collect()}
+    rows = {
+        r["case_id"]: r for r in catalog.spark.table("ncd_test.gs_case").collect()
+    }
     assert len(rows) == 4
 
     r1 = rows["CASE000001"]
@@ -68,7 +70,7 @@ def test_partitioned_layout_and_pruning(loaded):
     )
     assert subdirs == ["filename_district=CT", "filename_district=FLM"]
 
-    df = catalog.table("gs_court_hist")
+    df = catalog.spark.table("ncd_test.gs_court_hist")
     assert set(r["filename_district"] for r in df.collect()) == {"FLM", "CT"}
     pruned = df.filter(df.filename_district == "FLM")
     assert pruned.count() == 2
@@ -79,16 +81,21 @@ def test_partitioned_layout_and_pruning(loaded):
 
 def test_unpartitioned_table_has_no_district_column(loaded):
     catalog, _, _ = loaded
-    assert "filename_district" not in catalog.table("gs_case").columns
+    columns = catalog.spark.table("ncd_test.gs_case").columns
+    assert "filename_district" not in columns
 
 
 def test_global_and_lookup_tables(loaded):
     catalog, _, _ = loaded
-    district = {r["code"]: r for r in catalog.table("gs_district").collect()}
+    district = {
+        r["code"]: r for r in catalog.spark.table("ncd_test.gs_district").collect()
+    }
     assert district["CT"]["name"] == "Connecticut"
     assert district[""]["redacted_code"] is True
 
-    pos = {r["code"]: r for r in catalog.table("gs_position").collect()}
+    pos = {
+        r["code"]: r for r in catalog.spark.table("ncd_test.gs_position").collect()
+    }
     assert pos["AG"]["description"] == "Attorney General"
     assert pos["AG"]["active_flag"] == "Y"
 
@@ -114,7 +121,7 @@ def test_ddl_recorded(loaded):
 
 def test_fidelity_json_write_roundtrip(spark, tmp_path):
     """fidelity_json mode end-to-end: gzipped JSON-lines files on disk,
-    DATE columns serialized as zero-padded yyyy-MM-dd strings (the
+    DATE columns serialized as yyyy-MM-dd strings (the
     reference's wire format, ncd/normal_table.py:105-107), and the SQL log
     carries BOTH the executable Spark DDL and the reference-shaped Athena
     fidelity text (A10 + A12 + A26)."""
@@ -124,13 +131,12 @@ def test_fidelity_json_write_roundtrip(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from national_caseload_data_ingest_spark.catalog import local_catalog
-
-    cat = local_catalog(
+    cat = SparkCatalog(
         spark, str(tmp_path), db_name="fidelity_db", fidelity_json=True
     )
     df = spark.createDataFrame(
-        [(1, "01-JAN-0999"), (2, "15-AUG-1999")], "case_id long, raw string"
+        [(1, "01-JAN-0999"), (2, "15-AUG-1999"), (3, "01-JAN-10000")],
+        "case_id long, raw string",
     ).select(
         "case_id", F.to_date("raw", "dd-MMM-yyyy").alias("filed_date")
     )
@@ -144,8 +150,9 @@ def test_fidelity_json_write_roundtrip(spark, tmp_path):
             for line in fh:
                 rec = json.loads(line)
                 rows[rec["case_id"]] = rec["filed_date"]
-    # pre-1000 CE year zero-padded to width 10 — rjust(10,'0') parity
-    assert rows == {1: "0999-01-01", 2: "1999-08-15"}
+    # pre-1000 CE year zero-padded to width 10 — rjust(10,'0') parity;
+    # a five-digit year (the legacy parser reads one) keeps every digit
+    assert rows == {1: "0999-01-01", 2: "1999-08-15", 3: "10000-01-01"}
     assert any(
         "USING JSON" in s for s in cat.executed_sql
     ), "Spark-executable DDL missing"
@@ -162,8 +169,8 @@ def test_lookup_decode_join_broadcasts(loaded):
     from national_caseload_data_ingest_spark.plans import join_kinds
 
     catalog, _, _ = loaded
-    hist = catalog.table("gs_court_hist")
-    district = catalog.table("gs_district")
+    hist = catalog.spark.table("ncd_test.gs_court_hist")
+    district = catalog.spark.table("ncd_test.gs_district")
     decoded = hist.join(
         district, hist["filename_district"] == district["code"]
     ).select("case_id", "filename_district", "name")
@@ -256,7 +263,7 @@ def test_sql_over_loaded_tables(loaded):
 def test_zip_without_global_file_is_noop(spark, tmp_path):
     path = build_fixture_zip(str(tmp_path / "noglobal.zip"), include_global=False)
     warehouse = str(tmp_path / "wh2")
-    catalog = local_catalog(spark, warehouse, db_name="ncd_test2")
+    catalog = SparkCatalog(spark, warehouse, db_name="ncd_test2")
     names = NcdZipLoader(spark, catalog, path).load()
     assert "GS_DISTRICT" not in names
     assert "GS_CASE" in names
@@ -269,7 +276,7 @@ def test_readme_table_without_a_file_is_not_reported(spark, tmp_path):
     with zipfile.ZipFile(path, "w") as zf:
         zf.writestr("README.TXT", README_TEXT.encode("latin-1"))
         zf.writestr("gs_case.txt", "\n".join(GS_CASE_ROWS).encode("latin-1"))
-    catalog = local_catalog(spark, str(tmp_path / "wh"), db_name="ncd_nofile")
+    catalog = SparkCatalog(spark, str(tmp_path / "wh"), db_name="ncd_nofile")
     assert NcdZipLoader(spark, catalog, path).load() == ["GS_CASE"]
     tables = {
         t.name for t in spark.catalog.listTables("ncd_nofile") if not t.isTemporary
@@ -285,7 +292,7 @@ def test_missing_readme_loads_no_normal_tables(spark, tmp_path):
             "Report for GS_POSITION\n\nCode\n----\nAG\n\nEnd of report.",
         )
     # minimal sanity: loader shouldn't crash on a zip with no README
-    catalog = local_catalog(spark, str(tmp_path / "wh3"), db_name="ncd_test3")
+    catalog = SparkCatalog(spark, str(tmp_path / "wh3"), db_name="ncd_test3")
     try:
         NcdZipLoader(spark, catalog, p).load()
     except Exception as e:  # noqa: BLE001
@@ -297,9 +304,7 @@ def test_partitioned_reload_preserves_other_districts(spark, tmp_path):
     that district's partition (cumulative-dump semantics)."""
     from pyspark.sql import Row
 
-    from national_caseload_data_ingest_spark.catalog import local_catalog
-
-    cat = local_catalog(spark, str(tmp_path), db_name="reload_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="reload_db")
     try:
         full = spark.createDataFrame(
             [Row(case_id="A1", filename_district="FLM"),
@@ -312,7 +317,7 @@ def test_partitioned_reload_preserves_other_districts(spark, tmp_path):
         cat.write_table("gs_reload", update, partitioned=True)
         got = {
             (r["case_id"], r["filename_district"])
-            for r in cat.table("gs_reload").collect()
+            for r in spark.table("reload_db.gs_reload").collect()
         }
         assert got == {("A1", "FLM"), ("B2", "NYS")}, got
     finally:

@@ -6,7 +6,7 @@ import os
 
 import pyarrow.parquet as pq
 
-from national_caseload_data_ingest_spark.catalog import local_catalog
+from national_caseload_data_ingest_spark.catalog import SparkCatalog
 from national_caseload_data_ingest_spark.operators import layout
 from national_caseload_data_ingest_spark.operators.registry import load_tables
 
@@ -17,7 +17,7 @@ def test_range_clustered_files_have_disjoint_ranges(spark, tmp_path):
     """Every output file owns a disjoint o_orderkey range, so a range
     predicate can skip whole files on parquet stats — and the data
     round-trips losslessly."""
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db")
     orders = load_tables(spark, SF, "orders")["orders"]
     loc = layout.write_range_clustered(cat, "orders_rc", orders, ["o_orderkey"], 8)
     local = loc.removeprefix("file://")
@@ -37,7 +37,7 @@ def test_range_clustered_files_have_disjoint_ranges(spark, tmp_path):
 
 
 def test_compact_table_reduces_files_losslessly(spark, tmp_path):
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db2")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db2")
     orders = load_tables(spark, SF, "orders")["orders"]
     loc = cat.table_location("orders_many")
     orders.repartition(24).write.mode("overwrite").parquet(loc)
@@ -60,7 +60,7 @@ def test_compact_table_preserves_hive_partitions(spark, tmp_path):
     (flat rewrite at the table root) would leave it empty."""
     from pyspark.sql import functions as F
 
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db3")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db3")
     orders = load_tables(spark, SF, "orders")["orders"]
     part = orders.withColumn(
         "filename_district",
@@ -90,13 +90,12 @@ def test_compact_table_preserves_hive_partitions(spark, tmp_path):
     assert got == want  # partition column values intact
     # the registered table still prunes and answers correctly
     cat.recover_partitions("orders_part")
-    n_ct = cat.table("orders_part").filter("filename_district = 'CT'").count()
+    ct = spark.table("layout_db3.orders_part").filter("filename_district = 'CT'")
+    n_ct = ct.count()
     assert n_ct == sum(1 for r in want if r[-1] == "CT")  # partition col is last
 
 
 def test_compact_table_raises_on_remote_warehouse(spark):
-    from national_caseload_data_ingest_spark.catalog import SparkCatalog
-
     cat = SparkCatalog(spark, "s3a://some-bucket/warehouse", db_name="x")
     import pytest
 
@@ -111,14 +110,14 @@ def test_compact_table_recovers_partitioned_crash(spark, tmp_path):
     named 'CT.precompact' — and the table must round-trip losslessly."""
     from pyspark.sql import functions as F
 
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db5")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db5")
     orders = load_tables(spark, SF, "orders")["orders"]
     part = orders.withColumn(
         "filename_district",
         F.when(F.col("o_orderkey") % 2 == 0, "FLM").otherwise("CT"),
     ).repartition(8)
-    cat.write_table("orders_pcrash", part, partitioned=True, register=False)
     loc = cat.table_location("orders_pcrash")
+    part.write.partitionBy("filename_district").parquet(loc)
     local = loc.removeprefix("file://")
     want = sorted(tuple(r) for r in spark.read.parquet(loc).collect())
     # manufacture the crash: CT fully staged, renamed to backup, promote
@@ -145,7 +144,7 @@ def test_compact_table_recovers_from_crash_between_renames(spark, tmp_path):
     compact_table call must roll forward losslessly."""
     import shutil
 
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db4")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db4")
     orders = load_tables(spark, SF, "orders")["orders"]
     loc = cat.table_location("orders_crash")
     orders.repartition(8).write.mode("overwrite").parquet(loc)
@@ -187,7 +186,7 @@ def test_zordered_files_prune_on_both_dimensions(spark, tmp_path):
     predicate on EITHER column skip files via parquet min/max stats —
     including the second column, which a linear range-clustered layout
     cannot prune at all — and round-trip losslessly."""
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db")
     li = load_tables(spark, SF, "lineitem")["lineitem"]
     cols = ["l_orderkey", "l_partkey"]
     n_files = 16
@@ -222,7 +221,7 @@ def test_zordered_files_prune_on_both_dimensions(spark, tmp_path):
 
 
 def test_zordered_rejects_single_column(spark, tmp_path):
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db")
     li = load_tables(spark, SF, "lineitem")["lineitem"]
     import pytest
     with pytest.raises(ValueError, match="write_range_clustered"):
@@ -232,7 +231,7 @@ def test_zordered_rejects_single_column(spark, tmp_path):
 def test_analyze_table_records_catalog_stats(spark, tmp_path):
     """ANALYZE must land row-count table stats and per-column NDV in the
     catalog — the inputs the cost-based optimizer plans joins from."""
-    cat = local_catalog(spark, str(tmp_path), db_name="layout_db")
+    cat = SparkCatalog(spark, str(tmp_path), db_name="layout_db")
     nation = load_tables(spark, SF, "nation")["nation"]
     cat.write_table("nation_stats", nation, partitioned=False)
     layout.analyze_table(cat, "nation_stats", columns=["n_nationkey", "n_regionkey"])

@@ -12,11 +12,17 @@ walks.
 from __future__ import annotations
 
 import ast
+import importlib
 from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "national_caseload_data_ingest_spark"
+# The modules that carry the paper's ingest and query path.
+PAPER_SURFACE = (
+    "session", "catalog", "query", "sources.data_zip", "sources.fixedwidth",
+    "sources.schemas", "sources.globals", "sources.listing",
+)
 
 
 def _parsed(root: Path):
@@ -43,6 +49,20 @@ def test_no_module_defines_a_top_level_name_twice():
     assert not dupes, dupes
 
 
+def _named(tree: ast.AST) -> set[str]:
+    """Every name the code of ``tree`` uses: a ``Name``, an ``Attribute``
+    or an import alias."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+    return names
+
+
 def test_every_undecorated_top_level_def_is_referenced():
     """Each top-level function or class in the package is named by code
     somewhere in the repo: a ``Name``, an ``Attribute`` or an import
@@ -52,13 +72,7 @@ def test_every_undecorated_top_level_def_is_referenced():
     referenced = set()
     defined = {}
     for path, tree in _parsed(REPO):
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
-                referenced.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                referenced.add(node.attr)
-            elif isinstance(node, ast.alias):
-                referenced.add(node.name.rsplit(".", 1)[-1])
+        referenced |= _named(tree)
         if PACKAGE in path.parents:
             defined[str(path.relative_to(PACKAGE))] = [
                 node.name
@@ -75,6 +89,48 @@ def test_every_undecorated_top_level_def_is_referenced():
         if set(names) - referenced
     }
     assert not unreferenced, unreferenced
+
+
+def test_paper_surface_api_is_used_outside_tests():
+    """Each top-level def and class of the paper-surface modules, and each
+    method of their classes, is named by code outside ``tests/``: the
+    package, the entry scripts, ``perfbench/`` or ``tools/``.  API that
+    only tests call is a second way to do what production does another
+    way.  Dunder methods and methods that override a base class's
+    (``_ZipLinkParser.handle_starttag``) are called by the base class and
+    are exempt.
+
+    The check goes by name, so a method that shares its name with any
+    attribute used elsewhere passes it: a ``SparkCatalog.table`` that only
+    tests called would hide behind every ``spark.table`` call.
+    """
+    used = set()
+    for path, tree in _parsed(REPO):
+        if REPO / "tests" not in path.parents:
+            used |= _named(tree)
+    unused = {}
+    for name in PAPER_SURFACE:
+        module = importlib.import_module(f"{PACKAGE.name}.{name}")
+        tree = ast.parse(Path(module.__file__).read_text(encoding="utf-8"))
+        defs = []
+        for node in tree.body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            defs.append(node.name)
+            if isinstance(node, ast.ClassDef):
+                bases = getattr(module, node.name).__mro__[1:]
+                defs += [
+                    item.name
+                    for item in node.body
+                    if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not item.name.startswith("__")
+                    and not any(hasattr(base, item.name) for base in bases)
+                ]
+        if set(defs) - used:
+            unused[name] = sorted(set(defs) - used)
+    assert not unused, unused
 
 
 def _is_constant_name(name: str) -> bool:

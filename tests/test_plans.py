@@ -207,14 +207,14 @@ def test_fixed_width_projection_is_narrow(spark, fixture_zip, tmp_path):
         NcdZipLoader,
         stage_members,
     )
-    from national_caseload_data_ingest_spark.catalog import local_catalog
+    from national_caseload_data_ingest_spark.catalog import SparkCatalog
     from national_caseload_data_ingest_spark.sources.schemas import (
         extract_normal_schemas,
     )
 
     staged = stage_members(fixture_zip)
     try:
-        catalog_obj = local_catalog(spark, str(tmp_path), db_name="plans_db")
+        catalog_obj = SparkCatalog(spark, str(tmp_path), db_name="plans_db")
         loader = NcdZipLoader(spark, catalog_obj, fixture_zip)
         schemas = loader._normal_schemas(staged)
         df, _ = loader.read_normal_table(staged, schemas["GS_CASE"])

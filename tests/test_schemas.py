@@ -3,12 +3,12 @@ A18; reference regexes are the spec)."""
 
 import pytest
 
+from national_caseload_data_ingest_spark.sources.globals import parse_ruler_fragment
 from national_caseload_data_ingest_spark.sources.schemas import (
     FieldSpec,
     camel_to_upper_snake,
     extract_normal_schemas,
     infer_ruler_extents,
-    ruler_table_schema,
     slice_by_extents,
 )
 from tests.conftest import README_TEXT
@@ -41,8 +41,6 @@ def test_unknown_type_raises():
     spec = FieldSpec("X", "CLOB", 1, 4)
     with pytest.raises(NotImplementedError):
         spec.spark_type()
-    with pytest.raises(NotImplementedError):
-        spec.ddl_type()
 
 
 def test_spark_schema_shadow_order():
@@ -88,10 +86,11 @@ def test_camel_to_upper_snake(raw, expected):
 
 
 def test_ruler_table_schema_all_string():
-    schema = ruler_table_schema(
-        "GS_POSITION",
-        "Code  Description                 ActiveFlag",
-        "----  --------------------------  ----------",
+    columns, rows = parse_ruler_fragment(
+        "Code  Description                 ActiveFlag\n"
+        "----  --------------------------  ----------\n"
+        "AG    Attorney General            Y\n"
     )
-    assert [f.name for f in schema.fields] == ["CODE", "DESCRIPTION", "ACTIVE_FLAG"]
-    assert all(f.src_type == "VARCHAR2" for f in schema.fields)
+    assert columns[:3] == ["code", "description", "active_flag"]
+    # every data cell is the string the ruler cuts
+    assert rows == [["AG", "Attorney General", "Y", False, False, False]]

@@ -15,12 +15,20 @@ from __future__ import annotations
 import math
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+# DuckDB spills a query that outgrows its memory limit into its temp
+# directory, by default ``.tmp`` in the working directory with no size
+# cap.  The spill goes to a directory removed at exit instead, and a query
+# that would spill more than this fails with its own FAIL line rather than
+# filling the disk.
+ORACLE_SPILL_CAP = "4GB"
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -124,7 +132,11 @@ def main() -> int:
         )
     else:
         spark = get_spark("oracle-check")
-    con = duckdb.connect()
+    spill_dir = tempfile.TemporaryDirectory(prefix="oracle_spill_")
+    con = duckdb.connect(config={
+        "temp_directory": spill_dir.name,
+        "max_temp_directory_size": ORACLE_SPILL_CAP,
+    })
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
@@ -194,6 +206,8 @@ def main() -> int:
             print(f"ok   {name}: {sn} rows match "
                   f"({time.time()-t0:.1f}s){tol_note}")
     print(f"\n{len(failures)} failures" + (": " + ", ".join(failures) if failures else ""))
+    con.close()
+    spill_dir.cleanup()
     return 1 if failures else 0
 
 

@@ -27,7 +27,6 @@ exercised by this repo's tests (the sandbox has no object store).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from national_caseload_data_ingest_spark.sources.schemas import ddl_name
@@ -112,17 +111,15 @@ class SparkCatalog:
         table_name: str,
         schema: T.StructType,
         partitioned: bool = False,
-        data_bucket: str = "data-bucket",
-        s3_prefix: str = "ncd",
     ) -> str:
         """Byte-fidelity Athena DDL — the exact text the reference emits
         (``/root/reference/ncd/normal_table.py:184-198``,
         ``/root/reference/ncd/global_file.py:192-205``): ``CREATE EXTERNAL
         TABLE`` with a JsonSerDe ``ROW FORMAT`` clause, ``STORED AS
-        TEXTFILE``, an ``s3://{bucket}/{prefix}/{db}/{table}`` location
-        (prefix layout per ``/root/reference/ncd/athena.py:80-90``), a
-        trailing semicolon, and the reference's leading/trailing newlines
-        from its dedented template.
+        TEXTFILE``, an ``s3://data-bucket/ncd/{db}/{table}`` location (one
+        fixed bucket and prefix, laid out per the reference's
+        ``ncd/athena.py:80-90``), a trailing semicolon, and the
+        reference's leading/trailing newlines from its dedented template.
 
         The DATE mapping deliberately stays ``DATE`` even though the JSON
         wire format carries strftime strings — the reference admits this in
@@ -138,7 +135,7 @@ class SparkCatalog:
         partition_clause = (
             f"\nPARTITIONED BY ({PARTITION_COLUMN} STRING)" if partitioned else ""
         )
-        location = f"s3://{data_bucket}/{s3_prefix}/{self.db_name}/{table_name}"
+        location = f"s3://data-bucket/ncd/{self.db_name}/{table_name}"
         ddl = (
             f"\nCREATE EXTERNAL TABLE IF NOT EXISTS {table_name} (\n"
             f"    {cols}\n"
@@ -164,22 +161,16 @@ class SparkCatalog:
         the reference's S3 layout; ``MSCK REPAIR`` then discovers partitions,
         preserving the reference's two-step contract (A11 + A13).
 
-        Parquet default; ``fidelity_json`` switches to gzipped JSON-lines
-        with DATE columns serialized as ``yyyy-MM-dd`` strings, the
+        Parquet default; ``fidelity_json`` switches to gzipped JSON-lines,
+        whose writer emits each DATE cell as ``yyyy-MM-dd`` text, the
         reference's wire format (``/root/reference/ncd/
-        normal_table.py:105-107``).
+        normal_table.py:105-107``).  Both modes register the same schema.
         """
-        location = self.table_location(table_name)
-        out = df
-        writer_format = "parquet"
-        options = {}
+        writer = df.write.mode("overwrite")
         if self.fidelity_json:
-            writer_format = "json"
-            options["compression"] = "gzip"
-            for f in df.schema.fields:
-                if isinstance(f.dataType, T.DateType):
-                    out = out.withColumn(f.name, F.date_format(f.name, "yyyy-MM-dd"))
-        writer = out.write.format(writer_format).mode("overwrite").options(**options)
+            writer = writer.format("json").option("compression", "gzip")
+        else:
+            writer = writer.format("parquet")
         if partitioned:
             # Dynamic overwrite: only partitions present in `df` are
             # replaced.  NCD dumps are cumulative monthly snapshots
@@ -188,20 +179,14 @@ class SparkCatalog:
             writer = writer.partitionBy(PARTITION_COLUMN).option(
                 "partitionOverwriteMode", "dynamic"
             )
-        writer.save(location)
+        writer.save(self.table_location(table_name))
 
         self.create_db()
-        # Both DDL emitters place the partition column themselves.
-        columns = [
-            f.name
-            for f in df.schema.fields
-            if not (partitioned and f.name == PARTITION_COLUMN)
-        ]
-        ddl = self.generate_ddl(
-            table_name,
-            T.StructType([out.schema[c] for c in columns]),
-            partitioned=partitioned,
-        )
+        fields = df.schema.fields
+        if partitioned:  # both DDL emitters place the partition column
+            fields = [f for f in fields if f.name != PARTITION_COLUMN]
+        schema = T.StructType(fields)
+        ddl = self.generate_ddl(table_name, schema, partitioned=partitioned)
         self.execute_query(f"DROP TABLE IF EXISTS {self.db_name}.{table_name}")
         self.execute_query(ddl)
         if partitioned:
@@ -210,13 +195,7 @@ class SparkCatalog:
             # Record (not execute) the reference-shaped Athena DDL so a
             # fidelity-mode run's golden SQL log is comparable to the
             # reference's AthenaMock capture byte-for-byte (A12 + A26).
-            # Dates were stringified for the JSON wire format above, so
-            # the fidelity text is generated from the ORIGINAL schema.
-            self.generate_fidelity_ddl(
-                table_name,
-                T.StructType([df.schema[c] for c in columns]),
-                partitioned=partitioned,
-            )
+            self.generate_fidelity_ddl(table_name, schema, partitioned=partitioned)
 
     def recover_partitions(self, table_name: str) -> None:
         self.execute_query(f"MSCK REPAIR TABLE {self.db_name}.{table_name}")

@@ -150,18 +150,15 @@ def connected_components(
             .filter(F.col("a") != F.col("b"))
             .select(F.col("a").alias("hi"), F.col("b").alias("lo"))
             .distinct()
-            # lazy (r14): the convergence check below is the round's
-            # first action and materializes the checkpoint as part of
-            # its own job — the eager variant paid a separate
-            # materialization job per round.
-            .localCheckpoint(eager=False)
+            # Eager: the probe below reads e three times (a self-join
+            # among them); over a lazy checkpoint that probe once failed
+            # with an NPE (RDD.dependencies() null).
+            .localCheckpoint()
         )
         # star-forest test: one parent per child, and no parent (lo) is
         # itself a child (hi).  Roots are then the component minima.
-        # ONE action per round (r14): both structural violations union
-        # into a single existence probe (the loop previously ran two
-        # driver-blocking counts per round — 3 barriers per round with
-        # the eager checkpoint, now 1).
+        # Both structural violations union into a single existence
+        # probe: one action per round besides the checkpoint's.
         multi_parent_probe = (
             e.groupBy("hi")
             .count()

@@ -175,23 +175,22 @@ RUNTIME_CONFS = {
 
 def get_spark(
     app_name: str = "national-caseload-data-ingest-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession: every ``RUNTIME_CONFS``
     entry plus the launch-time settings below.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for the test/bench
-    environment; on a real cluster pass ``None`` and let spark-submit decide.
+    The master is ``$SPARK_MASTER``, else ``local[$SPARK_GRAFT_CPUS]``;
+    ``SPARK_GRAFT_CPUS`` also sets the shuffle partitions and defaults to
+    the CPUs this process may run on.  The master set here overrides
+    spark-submit's ``--master``, so a cluster run sets ``SPARK_MASTER``.
     A call that launches the driver JVM starts it from its class-data-sharing
     archive, or records that archive as the JVM exits (module docstring).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     launch = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or int(cpus)),
+        "spark.sql.shuffle.partitions": cpus,
         # Local mode: the driver is the only JVM.  The heap is a ceiling
         # that grows on demand, so 48g also runs on a 15 GiB VM.  Above 32g
         # the JVM turns compressed oops off, so this default and a small

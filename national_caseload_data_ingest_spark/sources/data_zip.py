@@ -86,7 +86,8 @@ class StagedZip:
 
 
 def stage_members(zip_path: str) -> StagedZip:
-    """Extract every ``.txt`` member, re-encoded to UTF-8 with ``\\r``→space.
+    """Extract every member that is not a directory, re-encoded to UTF-8
+    with ``\\r``→space, to a file of its own in a fresh staging directory.
 
     latin-1 maps each byte to one char, so fixed-width character extents are
     preserved; the CR replacement keeps offsets intact exactly like the

@@ -104,7 +104,11 @@ def build_fixture_zip(path: str, include_global: bool = True) -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=4)
+    # local[4] with 4 shuffle partitions, whatever the caller exports.
+    with pytest.MonkeyPatch.context() as env:
+        env.setenv("SPARK_GRAFT_CPUS", "4")
+        env.delenv("SPARK_MASTER", raising=False)
+        s = get_spark("tests")
     yield s
 
 

@@ -105,6 +105,30 @@ def test_each_cell_is_computed_once(spark):
     assert plan.count("substringSQL(") == len(SCHEMA.fields) + 3 * dates
 
 
+def test_wide_table_projections_stay_in_codegen(spark, tmp_path):
+    # A real NCD table runs to about 60 fields, so 120 output columns with
+    # the shadows.  Whole-stage codegen drops any operator whose output
+    # has more than spark.sql.codegen.maxFields (Spark's default is 100),
+    # and the typed projection would then evaluate row by row.
+    types = ("VARCHAR2", "NUMBER", "DATE", "FLOAT")
+    wide = TableSchema(
+        "WIDE",
+        tuple(
+            FieldSpec(f"F{i}", types[i % 4], 11 * i + 1, 11 * i + 11)
+            for i in range(60)
+        ),
+    )
+    (tmp_path / "wide.txt").write_text("x" * 660 + "\n")
+    out = project_fixed_width(spark.read.text(str(tmp_path / "wide.txt")), wide)
+    assert len(out.columns) == 120
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # "*(1) " marks an operator compiled into whole-stage codegen stage 1.
+    projects = [
+        ln.lstrip(" :+-")[:12] for ln in plan.splitlines() if "Project [" in ln
+    ]
+    assert projects == ["*(1) Project"] * 2, projects
+
+
 def test_lines_without_cr_are_unchanged(spark):
     # Each line reaches the cells byte for byte: a cell is the plain slice
     # of the line, trimmed, whatever characters it holds.

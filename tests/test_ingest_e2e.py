@@ -162,6 +162,26 @@ def test_fidelity_json_write_roundtrip(spark, tmp_path):
     assert "filed_date DATE" in fid[0]  # fidelity text keeps the DATE type
 
 
+def test_both_storage_modes_register_one_schema(spark, fixture_zip, loaded, tmp_path):
+    """A fidelity_json load registers the tables a Parquet load does: its
+    DATE columns read back as dates, not as the text the JSON files hold."""
+    catalog, names, _ = loaded
+    fidelity = SparkCatalog(
+        spark, str(tmp_path), db_name="ncd_fidelity", fidelity_json=True
+    )
+    assert NcdZipLoader(spark, fidelity, fixture_zip).load() == names
+    for name in names:
+        parquet = spark.table(f"{catalog.db_name}.{name.lower()}").schema
+        assert spark.table(f"ncd_fidelity.{name.lower()}").schema == parquet, name
+    for db in (catalog.db_name, fidelity.db_name):
+        types = spark.sql(f"SELECT DISTINCT typeof(filed_date) FROM {db}.gs_case")
+        assert [r[0] for r in types.collect()] == ["date"], db
+        recent = spark.sql(
+            f"SELECT count(*) FROM {db}.gs_case WHERE filed_date >= DATE '2000-01-01'"
+        )
+        assert recent.first()[0] == 1, db
+
+
 def test_lookup_decode_join_broadcasts(loaded):
     """The reference's designed use of codebook tables: decode joins
     against fact tables (reference README.md:46-50).  The KB-scale lookup
@@ -202,13 +222,7 @@ def test_fidelity_ddl_matches_reference_text(loaded):
             T.StructField("redacted_lead_charge_wt", T.BooleanType()),
         ]
     )
-    ddl = catalog.generate_fidelity_ddl(
-        "gs_case",
-        schema,
-        partitioned=True,
-        data_bucket="my-data-bucket",
-        s3_prefix="lions",
-    )
+    ddl = catalog.generate_fidelity_ddl("gs_case", schema, partitioned=True)
     expected = (
         "\nCREATE EXTERNAL TABLE IF NOT EXISTS gs_case (\n"
         "    case_id STRING,\n"
@@ -223,7 +237,7 @@ def test_fidelity_ddl_matches_reference_text(loaded):
         "PARTITIONED BY (filename_district STRING)\n"
         "ROW FORMAT SERDE 'org.apache.hive.hcatalog.data.JsonSerDe'\n"
         "STORED AS TEXTFILE\n"
-        f"LOCATION 's3://my-data-bucket/lions/{catalog.db_name}/gs_case';\n"
+        f"LOCATION 's3://data-bucket/ncd/{catalog.db_name}/gs_case';\n"
     )
     assert ddl == expected
     assert ddl in catalog.executed_sql  # A26 golden-DDL affordance

@@ -30,7 +30,7 @@ from national_caseload_data_ingest_spark.sources import globals as g
 from tests.conftest import LOOKUP_TEXT
 
 warehouse, log = sys.argv[1:]
-spark = get_spark("localfs", master="local[2]", shuffle_partitions=2)
+spark = get_spark("localfs")
 catalog = SparkCatalog(spark, warehouse, db_name="localfs")
 open(log, "w").close()  # count from here: the session start is not a write
 df = spark.createDataFrame(
@@ -67,7 +67,7 @@ import json, os, sys
 from national_caseload_data_ingest_spark.session import get_spark
 
 src, ckpt, log = sys.argv[1:]
-spark = get_spark("localfs-stream", master="local[2]", shuffle_partitions=2)
+spark = get_spark("localfs-stream")
 open(log, "w").close()  # count from here: the session start is not a write
 counts = spark.readStream.text(src).groupBy("value").count()
 query = (
@@ -97,7 +97,12 @@ def _run_logging_forks(tmp_path, script, *args):
             f'#!/bin/sh\necho "{tool} $*" >> "{log}"\nexec {real} "$@"\n'
         )
         (bindir / tool).chmod(0o755)
-    env = dict(os.environ, PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}")
+    env = dict(
+        os.environ,
+        PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}",
+        SPARK_GRAFT_CPUS="2",
+    )
+    env.pop("SPARK_MASTER", None)
     proc = subprocess.run(
         [sys.executable, "-c", script, *map(str, args), str(log)],
         cwd=ROOT,

@@ -133,6 +133,88 @@ def test_paper_surface_api_is_used_outside_tests():
     assert not unused, unused
 
 
+# (module, def, parameter) triples whose default no code outside tests/
+# needs to override, kept on purpose.
+DEFAULTS_KEPT = {
+    # The reference's ``Athena.execute_query(sql, db=None)``
+    # (``ncd/athena.py:57-79``): a caller switching from it keeps its calls.
+    ("query", "QueryExecutor.execute_query", "db_name"),
+}
+
+
+def _callee(call: ast.Call) -> str | None:
+    func = call.func
+    if isinstance(func, ast.Name):
+        return func.id
+    return func.attr if isinstance(func, ast.Attribute) else None
+
+
+def test_paper_surface_defaults_are_passed_outside_tests():
+    """Each parameter with a default, on each def and method of the
+    paper-surface modules, is bound by some call outside ``tests/``, by
+    position or by keyword.  A default that only tests override is a
+    second way to set what production sets one way (``get_spark``'s
+    ``master`` beside ``SPARK_MASTER``).  ``DEFAULTS_KEPT`` lists the
+    exemptions and why.
+
+    Calls are matched by callee name, and a class's ``__init__`` by the
+    class name.  A call to a different callee of the same name binds the
+    parameter too, so a parameter whose name a same-named callee also
+    takes (or that it reaches by position) can pass unseen.
+    """
+    calls = {}
+    for path, tree in _parsed(REPO):
+        if REPO / "tests" not in path.parents:
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call):
+                    calls.setdefault(_callee(node), []).append(node)
+
+    def bound(callee, index, name):
+        return any(
+            (index is not None and len(call.args) > index)
+            or any(isinstance(a, ast.Starred) for a in call.args)
+            or any(k.arg in (name, None) for k in call.keywords)
+            for call in calls.get(callee, [])
+        )
+
+    unbound = []
+    for module_name in PAPER_SURFACE:
+        module = importlib.import_module(f"{PACKAGE.name}.{module_name}")
+        tree = ast.parse(Path(module.__file__).read_text(encoding="utf-8"))
+        # (qualified name, callee name, def, leading args a call does not pass)
+        defs = []
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.append((node.name, node.name, node, 0))
+            elif isinstance(node, ast.ClassDef):
+                defs += [
+                    (f"{node.name}.{item.name}",
+                     node.name if item.name == "__init__" else item.name, item, 1)
+                    for item in node.body
+                    if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and (item.name == "__init__" or not item.name.startswith("__"))
+                ]
+        for qualname, callee, fn, skipped in defs:
+            args = fn.args
+            positional = args.posonlyargs + args.args
+            first = len(positional) - len(args.defaults)
+            params = [
+                (i - skipped, arg.arg) for i, arg in enumerate(positional) if i >= first
+            ]
+            params += [
+                (None, arg.arg)
+                for arg, default in zip(args.kwonlyargs, args.kw_defaults)
+                if default is not None
+            ]
+            unbound += [
+                (module_name, qualname, name)
+                for index, name in params
+                if not bound(callee, index, name)
+                and (module_name, qualname, name) not in DEFAULTS_KEPT
+            ]
+    assert not unbound, unbound
+
+
 def _is_constant_name(name: str) -> bool:
     bare = name.lstrip("_")
     return bool(bare) and bare[0].isalpha() and bare == bare.upper()

@@ -31,10 +31,7 @@ from pyspark import SparkContext
 from national_caseload_data_ingest_spark import session
 
 session.CDS_DIR = sys.argv[1]
-spark = session.get_spark(
-    "cds", master="local[1]", shuffle_partitions=1,
-    extra_conf={"spark.driver.memory": "1g"},
-)
+spark = session.get_spark("cds", extra_conf={"spark.driver.memory": "1g"})
 jvm = spark._jvm
 pid = jvm.java.lang.ProcessHandle.current().pid()
 args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
@@ -45,6 +42,7 @@ out = {
     "args": [str(a) for a in args],
     "mapped": mapped,
     "marker": None if marker is None else marker.getPath(),
+    "master": spark.sparkContext.master,
     "sum": spark.range(10).selectExpr("sum(id)").collect()[0][0],
 }
 # A recording JVM writes its archive as it exits: wait for that.
@@ -69,11 +67,14 @@ def _drop_dac_override():
 
 def _launch(cds_dir, env=None, preexec_fn=None):
     """Start a session in a fresh interpreter with its archives in
-    ``cds_dir``, run a query, stop its JVM, and return what it saw."""
+    ``cds_dir``, run a query, stop its JVM, and return what it saw.  It
+    runs on one core; a ``None`` in ``env`` unsets that variable."""
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "1", **(env or {})}
+    env.pop("SPARK_MASTER", None)
     proc = subprocess.run(
         [sys.executable, "-c", LAUNCH, str(cds_dir), MARKER],
         cwd=ROOT,
-        env=dict(os.environ, **(env or {})),
+        env={k: v for k, v in env.items() if v is not None},
         preexec_fn=preexec_fn,
         capture_output=True,
         text=True,
@@ -105,6 +106,7 @@ def test_first_launch_records_the_archive(recorded):
     assert recording.endswith(".part.jsa")
     assert "-Xlog:cds*=off" in first["cds"]
     assert not _flag(first, "-XX:SharedArchiveFile")
+    assert first["master"] == "local[1]"
     assert session._cds_finished(recording)
     assert all(str(cds_dir) not in m for m in first["mapped"])
 
@@ -155,13 +157,20 @@ def test_unfinished_archive_is_not_mapped(recorded, tmp_path, kind):
 
 
 def test_unwritable_dir_launches_without_cds(tmp_path):
+    """Also launched with ``SPARK_GRAFT_CPUS`` unset: the session then
+    runs on every CPU this process may use."""
     cds_dir = tmp_path / "ro"
     cds_dir.mkdir()
     cds_dir.chmod(0o555)
     root = os.geteuid() == 0
-    out = _launch(cds_dir, preexec_fn=_drop_dac_override if root else None)
+    out = _launch(
+        cds_dir,
+        env={"SPARK_GRAFT_CPUS": None},
+        preexec_fn=_drop_dac_override if root else None,
+    )
     assert out["cds"] == []
     assert os.listdir(cds_dir) == []
+    assert out["master"] == f"local[{len(os.sched_getaffinity(0))}]"
 
 
 # The archive key and its files, decided without a JVM.
